@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -562,11 +563,12 @@ def main() -> None:
     # min-of-N noop protocol via time_spark); the probes are extra
     # bookkeeping between cells, ~0.1 s each.
     spark_times: dict[str, float] = {}
-    floor_at_measure: dict[str, float] = {}
+    probe_at: dict[str, float] = {}  # unrounded; rounded only for output
     for name in HEADLINE:
-        floor_at_measure[name] = round(probe_floor(spark), 3)
+        probe_at[name] = probe_floor(spark)
         spark_times.update(time_spark(spark, queries, sf_dir, [name]))
-    floor_at_measure["_after_last"] = round(probe_floor(spark), 3)
+    probe_at["_after_last"] = probe_floor(spark)
+    floor_at_measure = {n: round(t, 3) for n, t in probe_at.items()}
     # A cell is load-suspect when its neighbouring probe ran well above
     # the session's TYPICAL probe: 3x the median, with a 0.05 s absolute
     # slack. Median, not min — the JVM keeps JIT-warming through the
@@ -576,13 +578,15 @@ def main() -> None:
     # decay while a genuine 10-30x host burst (the r11 failure mode)
     # still trips 3x easily. A burst long enough to move the median
     # would contaminate most cells — the in-run DuckDB control catches
-    # that case.
-    probes = sorted(floor_at_measure.values())
-    floor_base = probes[len(probes) // 2]
+    # that case. The base is the median of the per-cell probes only (the
+    # _after_last sentinel is no cell), taken before any rounding: on a
+    # fast host 3-decimal rounding collapses the probes and the 3x
+    # relative threshold stops contributing.
+    floor_base = statistics.median(probe_at[n] for n in HEADLINE)
     load_suspect = sorted(
         n
         for n in HEADLINE
-        if floor_at_measure[n] > max(3.0 * floor_base, floor_base + 0.05)
+        if probe_at[n] > max(3.0 * floor_base, floor_base + 0.05)
     )
     duck_times = time_duckdb(oracles, sf_dir)
     spark_batched = time_spark_batched(spark, queries, sf_dir)

@@ -1,41 +1,49 @@
-"""Lakehouse table-maintenance surfaces (VERDICT r04 "next #8").
-
-The two engine capabilities the registry still lacked a query for:
-
-- ``merge_upsert_partitioned`` — MERGE INTO semantics (update matched,
-  insert unmatched) on a partitioned parquet table, executed the way a
-  copy-on-write table format executes it at 100 TB: touch only the
-  partitions the source batch lands in, rewrite those via dynamic
-  partition overwrite, leave every other partition's files untouched.
-  The sandbox has no Delta/Iceberg, so the "table" is the same
-  partitioned-parquet + dynamic-overwrite contract the repo's
-  ``sink_dynamic_partition_overwrite`` already pins; what's new here is
-  the full MERGE dataflow on top of it.
-- ``join_reorder_cbo`` — cost-based join reordering fed by ANALYZE
-  statistics: tables saved to the session catalog, ``ANALYZE TABLE ...
-  COMPUTE STATISTICS FOR ALL COLUMNS``, ``spark.sql.cbo.enabled`` +
-  ``spark.sql.cbo.joinReorder.enabled`` on, and a 3-table join written
-  deliberately big-table-first. With stats present Catalyst reorders to
-  join the filtered dimension pair first (plan-pinned in
-  tests/test_plans.py); the result itself is H-tier hash-checked.
+"""Lakehouse table formats, built from parquet primitives.
 
 Upstream ``mozilla-services/cloudtrail-streamer`` (a ~300-LoC Go
-S3→Kinesis forwarder, SURVEY §2.A) has neither surface; these extend
-§2.B per the BASELINE.json north star. Registered AFTER the r5 window
-freeze, so both ride the r6 rotation (`registry._R6_STAGED`).
+S3→Kinesis forwarder, SURVEY §2.A) has none of these surfaces; they
+extend §2.B per the BASELINE.json north star. Every query works on
+``orders`` in integer cents (``_orders_cents``).
+
+The eleven snapshot ops run on one core, ``snapshot_table.SnapshotTable``:
+``sink_snapshot_time_travel``, ``_vacuum``, ``_changes``, ``_restore``,
+``_concurrent_commit``, ``_mor_deletes``, ``_wap_branch``,
+``_rename_widen`` and ``_positional_deletes``, plus
+``stream_snapshot_changes`` and ``stream_snapshot_ingest``. The core
+hides the manifest format (one file list per version, optionally
+persisted as ``manifests/v=N``), the copy-on-write algorithm (find the
+files a predicate touches, rewrite only those), the single
+compare-and-swap / transaction-id commit point, the data-file inventory
+behind the "no data file written" certificates, and the manifest-diff
+change feed. Each op keeps only what makes it distinct.
+
+Four ops keep their own mechanics: ``merge_upsert_partitioned`` (MERGE
+INTO via dynamic partition overwrite on a Hive-style table),
+``join_reorder_cbo`` (ANALYZE-fed join reordering),
+``sink_snapshot_partition_evolution`` and ``scan_metadata_only_agg``
+(manifests built from parquet footers, ``_footer_bounds``).
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloudtrail_streamer_spark.catalog import scratch_dir, table
-from cloudtrail_streamer_spark.streaming.harness import await_or_raise
 from cloudtrail_streamer_spark.functions import cents
+from cloudtrail_streamer_spark.operators.snapshot_table import (
+    MANIFEST_SCHEMA,
+    SnapshotTable,
+    file_list,
+    local_path,
+    minus,
+    spool,
+)
 from cloudtrail_streamer_spark.registry import query
+from cloudtrail_streamer_spark.streaming.harness import await_or_raise
 
 
 def _require(cond, msg) -> None:
@@ -45,6 +53,48 @@ def _require(cond, msg) -> None:
     so every correctness-bearing guard raises explicitly instead."""
     if not cond:
         raise ValueError(msg)
+
+
+def _orders_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``orders`` as the lakehouse tables store it: money in integer cents
+    (SURVEY §5.3), the order year as an int."""
+    return table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderstatus",
+        cents("o_totalprice").alias("price_c"),
+        F.year("o_orderdate").cast("int").alias("o_year"),
+    )
+
+
+def _rows(status: str, year: int) -> Column:
+    return (F.col("o_orderstatus") == status) & (F.col("o_year") == year)
+
+
+def _bump(pred: Column, divisor: int):
+    """COW rewrite body: raise ``pred`` rows' price by ``price_c div
+    divisor`` (positive-integer floor division, identical in both
+    engines); every other row is copied unchanged."""
+    bumped = F.col("price_c") + F.expr(f"price_c div {divisor}")
+    return lambda df: df.withColumn("price_c", F.when(pred, bumped).otherwise(F.col("price_c")))
+
+
+def _version_aggs(
+    snaps: dict[int, DataFrame], flag_name: str = "n_pending", flag: Column | None = None
+) -> DataFrame:
+    """Per-version aggregate ``(version, n_rows, sum_price, <flag_name>)``
+    of each snapshot, one row per version, in version order. The flag
+    counts 'P'-status rows unless another predicate is given."""
+    flag = F.col("o_orderstatus") == "P" if flag is None else flag
+    aggs = [
+        snap.agg(
+            F.lit(v).cast("int").alias("version"),
+            F.count(F.lit(1)).alias("n_rows"),
+            (F.sum("price_c").cast("double") / 100.0).alias("sum_price"),
+            F.sum(F.when(flag, 1).otherwise(0)).cast("long").alias(flag_name),
+        )
+        for v, snap in snaps.items()
+    ]
+    return functools.reduce(DataFrame.unionByName, aggs).orderBy("version")
 
 
 # ---------------------------------------------------------------------------
@@ -112,12 +162,10 @@ def merge_upsert_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Money stays in integer cents end to end (SURVEY §5.3); the +10%% is
     ``price_c div 10`` — positive-integer floor division, identical in
     both engines."""
-    o = table(spark, sf_dir, "orders").withColumn(
-        "o_year", F.year("o_orderdate").cast("int")
-    ).withColumn("price_c", cents("o_totalprice"))
+    o = _orders_cents(spark, sf_dir)
     tgt_path = os.path.join(scratch_dir("merge_upsert_partitioned", sf_dir), "orders_tbl")
-    cols = ["o_orderkey", "o_orderstatus", "price_c", "o_year"]
-    o.select(*cols).write.mode("overwrite").partitionBy("o_year").parquet(tgt_path)
+    cols = o.columns
+    o.write.mode("overwrite").partitionBy("o_year").parquet(tgt_path)
 
     updates = (
         o.where((F.col("o_orderstatus") == "P") & (F.col("o_year") == 1995))
@@ -284,20 +332,6 @@ ORDER BY version
 """
 
 
-def _tt_file_list(spark: SparkSession, path: str) -> list[str]:
-    """Distinct data-file URIs under a parquet dir, listed Spark-side
-    (works on any FS a cluster would use). Metadata-scale collect: one
-    string per data FILE, the same cardinality an Iceberg manifest
-    holds."""
-    return [
-        r["f"]
-        for r in spark.read.parquet(path)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    ]
-
-
 @query("sink_snapshot_time_travel", oracle=_TT_ORACLE, survey_id="B-5-ext")
 def sink_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot-versioned table with time travel, the way Iceberg/Delta
@@ -305,8 +339,9 @@ def sink_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parquet primitives:
 
     - **v1**: orders (integer-cents) written as hash-bucketed-by-year
-      files; manifest v1 = the file list (captured via
-      ``input_file_name()``, i.e. listed by Spark, not the driver OS).
+      files; manifest v1 = the file list (listed from Spark's file
+      index, not the driver OS), committed as the one-file manifest
+      ``manifests/v=1``.
     - **v2 (copy-on-write update)**: the price bump touches only
       'P'-status 1995 rows, so only the FILES containing 1995 rows are
       read (``spark.read.parquet(*affected)``) and rewritten into new
@@ -322,63 +357,14 @@ def sink_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     in its catalog; the per-version file-list collect here is one
     string per data file (tests/test_plans.py pins file reuse and
     old-snapshot immutability)."""
-    root = scratch_dir("sink_snapshot_time_travel", sf_dir)
-    data_v1 = os.path.join(root, "data_v1")
-    data_v2 = os.path.join(root, "data_v2delta")
-    man_dir = os.path.join(root, "manifests")
-
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        cents("o_totalprice").alias("price_c"),
-        F.year("o_orderdate").cast("int").alias("o_year"),
-    )
-    o.repartition(4, "o_year").write.mode("overwrite").parquet(data_v1)
-    v1_files = _tt_file_list(spark, data_v1)
-    spark.createDataFrame([(f,) for f in v1_files], "f string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(man_dir, "v=1"))
-
+    tbl = SnapshotTable(spark, "sink_snapshot_time_travel", sf_dir, durable=True)
+    o = _orders_cents(spark, sf_dir)
+    tbl.commit([], tbl.write(o.repartition(4, "o_year"), "data_v1"))
     # COW: locate the files holding any matched row, rewrite ONLY those
-    matched = (F.col("o_orderstatus") == "P") & (F.col("o_year") == 1995)
-    affected = [
-        r["f"]
-        for r in spark.read.parquet(data_v1)
-        .where(matched)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    ]
-    bumped = F.col("price_c") + F.expr("price_c div 10")
-    spark.read.parquet(*affected).withColumn(
-        "price_c", F.when(matched, bumped).otherwise(F.col("price_c"))
-    ).write.mode("overwrite").parquet(data_v2)
-    v2_files = [f for f in v1_files if f not in set(affected)] + _tt_file_list(
-        spark, data_v2
-    )
-    spark.createDataFrame([(f,) for f in v2_files], "f string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(man_dir, "v=2"))
-
+    matched = _rows("P", 1995)
+    tbl.commit(*tbl.rewrite(matched, _bump(matched, 10), "data_v2delta"))
     # time travel: AS OF v = read exactly the files manifest v names
-    outs = []
-    for v in (1, 2):
-        files = [
-            r["f"]
-            for r in spark.read.parquet(os.path.join(man_dir, f"v={v}")).collect()
-        ]
-        snap = spark.read.parquet(*files)
-        outs.append(
-            snap.agg(
-                F.lit(v).cast("int").alias("version"),
-                F.count(F.lit(1)).alias("n_rows"),
-                (F.sum("price_c").cast("double") / 100.0).alias("sum_price"),
-                F.sum(F.when(F.col("o_orderstatus") == "P", 1).otherwise(0))
-                .cast("long")
-                .alias("n_pending"),
-            ).select("version", "n_rows", "sum_price", "n_pending")
-        )
-    return outs[0].unionByName(outs[1]).orderBy("version")
+    return _version_aggs({v: tbl.as_of(v) for v in (1, 2)})
 
 
 # ---------------------------------------------------------------------------
@@ -406,10 +392,6 @@ FROM v2
 """
 
 
-def _uri_to_path(uri: str) -> str:
-    return uri[len("file:") :] if uri.startswith("file:") else uri
-
-
 @query("sink_snapshot_vacuum", oracle=_VACUUM_ORACLE, survey_id="B-5-ext")
 def sink_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VACUUM on the manifest-versioned snapshot table
@@ -434,55 +416,28 @@ def sink_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
       — still hash-matches the oracle, proving deletion touched only
       dead files.
     """
-    import shutil
-
-    root = scratch_dir("sink_snapshot_vacuum", sf_dir)
-    for sub in ("data_v1", "data_v2delta"):
-        shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
-    data_v1 = os.path.join(root, "data_v1")
-    data_v2 = os.path.join(root, "data_v2delta")
-
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        cents("o_totalprice").alias("price_c"),
-        F.year("o_orderdate").cast("int").alias("o_year"),
-    )
-    o.repartition(8, "o_year").write.mode("overwrite").parquet(data_v1)
-    v1_files = _tt_file_list(spark, data_v1)
-
-    matched = (F.col("o_orderstatus") == "P") & (F.col("o_year") == 1995)
-    affected = [
-        r["f"]
-        for r in spark.read.parquet(data_v1)
-        .where(matched)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    ]
-    bumped = F.col("price_c") + F.expr("price_c div 10")
-    spark.read.parquet(*affected).withColumn(
-        "price_c", F.when(matched, bumped).otherwise(F.col("price_c"))
-    ).write.mode("overwrite").parquet(data_v2)
-    v2_files = [f for f in v1_files if f not in set(affected)] + _tt_file_list(
-        spark, data_v2
-    )
+    tbl = SnapshotTable(spark, "sink_snapshot_vacuum", sf_dir)
+    o = _orders_cents(spark, sf_dir)
+    tbl.commit([], tbl.write(o.repartition(8, "o_year"), "data_v1"))
+    matched = _rows("P", 1995)
+    tbl.commit(*tbl.rewrite(matched, _bump(matched, 10), "data_v2delta"))
+    v1_files, v2_files = tbl.manifest(1), tbl.manifest(2)
 
     # VACUUM: retained manifests = {v2}; everything else is dead.
-    dead = [f for f in v1_files if f not in set(v2_files)]
+    dead = minus(v1_files, v2_files)
     _require(
         dead and len(dead) < len(v1_files),
         f"degenerate vacuum: {len(dead)}/{len(v1_files)} files dead",
     )
     for f in dead:
-        os.remove(_uri_to_path(f))
+        os.remove(local_path(f))
 
     # certificate: v1 must be unreadable now, v2 exactly intact. Only a
     # missing-path failure counts as the pass — an unrelated error
     # (executor OOM, transient FS fault) must NOT be certified as
     # "expired snapshot unreadable" (ADVICE r05).
     try:
-        spark.read.parquet(*v1_files).count()
+        tbl.read(v1_files).count()
         raise AssertionError("expired snapshot v1 still readable after vacuum")
     except Exception as e:  # noqa: BLE001 - classified below, not swallowed
         if isinstance(e, AssertionError):
@@ -493,27 +448,14 @@ def sink_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             for marker in ("PATH_NOT_FOUND", "Path does not exist", "FileNotFound")
         ):
             raise
-    on_disk = set()
-    for d in (data_v1, data_v2):
-        for fn in os.listdir(d):
-            if fn.endswith(".parquet"):
-                on_disk.add(fn)
-    live_names = {os.path.basename(_uri_to_path(f)) for f in v2_files}
+    on_disk = set(tbl.data_files())
+    live = {local_path(f) for f in v2_files}
     _require(
-        on_disk == live_names,
-        f"post-vacuum files != manifest v2: extra={sorted(on_disk - live_names)} "
-        f"missing={sorted(live_names - on_disk)}",
+        on_disk == live,
+        f"post-vacuum files != manifest v2: extra={sorted(on_disk - live)} "
+        f"missing={sorted(live - on_disk)}",
     )
-
-    snap = spark.read.parquet(*v2_files)
-    return snap.agg(
-        F.lit(2).cast("int").alias("version"),
-        F.count(F.lit(1)).alias("n_rows"),
-        (F.sum("price_c").cast("double") / 100.0).alias("sum_price"),
-        F.sum(F.when(F.col("o_orderstatus") == "P", 1).otherwise(0))
-        .cast("long")
-        .alias("n_pending"),
-    ).select("version", "n_rows", "sum_price", "n_pending")
+    return _version_aggs({2: tbl.as_of(2)})
 
 
 # ---------------------------------------------------------------------------
@@ -567,103 +509,31 @@ def sink_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff purely as an added file; the dynamic offset can never collide
     with a live key at any scale). The 1↔2 row fan-out for updates is
     an array-of-structs + explode, all JVM-side."""
-    import shutil
-
-    root = scratch_dir("sink_snapshot_changes", sf_dir)
-    for sub in ("data_v1", "data_v2delta", "data_v2ins"):
-        shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
-    data_v1 = os.path.join(root, "data_v1")
-    data_v2 = os.path.join(root, "data_v2delta")
-    data_ins = os.path.join(root, "data_v2ins")
-
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        cents("o_totalprice").alias("price_c"),
-        F.year("o_orderdate").cast("int").alias("o_year"),
-    )
-    o.repartition(4, "o_year").write.mode("overwrite").parquet(data_v1)
-    v1_files = _tt_file_list(spark, data_v1)
+    tbl = SnapshotTable(spark, "sink_snapshot_changes", sf_dir)
+    o = _orders_cents(spark, sf_dir)
+    tbl.commit([], tbl.write(o.repartition(4, "o_year"), "data_v1"))
 
     # one COW commit: update P/1995, delete O/1995, append re-keyed 1996-P
-    upd = (F.col("o_orderstatus") == "P") & (F.col("o_year") == 1995)
-    del_ = (F.col("o_orderstatus") == "O") & (F.col("o_year") == 1995)
-    affected = [
-        r["f"]
-        for r in spark.read.parquet(data_v1)
-        .where(upd | del_)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    ]
+    upd, del_ = _rows("P", 1995), _rows("O", 1995)
+    affected, rewritten = tbl.rewrite(
+        upd | del_, lambda df: _bump(upd, 10)(df.where(~del_)), "data_v2delta"
+    )
     _require(
-        affected and len(affected) < len(v1_files),
+        affected and len(affected) < len(tbl.manifest(1)),
         "diff must be partial",
     )
-    bumped = F.col("price_c") + F.expr("price_c div 10")
-    spark.read.parquet(*affected).where(~del_).withColumn(
-        "price_c", F.when(upd, bumped).otherwise(F.col("price_c"))
-    ).write.mode("overwrite").parquet(data_v2)
     # Insert keys are re-keyed past the ACTUAL max orderkey (collected
     # once, one columnar MAX — metadata-cheap), not a fixed +10M: TPC-H
     # orderkeys exceed 10M around sf2, and a collision would make the
     # full-outer CDF silently misclassify inserts as updates (ADVICE r05).
     # The oracle derives the identical offset via a scalar subquery.
     key_offset = o.agg(F.max("o_orderkey")).first()[0] + 1
-    o.where((F.col("o_orderstatus") == "P") & (F.col("o_year") == 1996)).withColumn(
-        "o_orderkey", F.col("o_orderkey") + F.lit(key_offset)
-    ).write.mode("overwrite").parquet(data_ins)
-
+    rekeyed = F.col("o_orderkey") + F.lit(key_offset)
+    appended = tbl.write(o.where(_rows("P", 1996)).withColumn("o_orderkey", rekeyed), "data_v2ins")
+    tbl.commit(affected, rewritten + appended)
     # manifest diff: removed = affected, added = rewrite + append files.
     # The CDF scans ONLY these — untouched files cancel out by reference.
-    pre = spark.read.parquet(*affected).select(
-        "o_orderkey", F.col("price_c").alias("pre_c")
-    )
-    post = spark.read.parquet(data_v2, data_ins).select(
-        "o_orderkey", F.col("price_c").alias("post_c")
-    )
-    j = pre.join(post, "o_orderkey", "full_outer")
-    ch = F.when(
-        F.col("pre_c").isNotNull() & F.col("post_c").isNotNull(),
-        F.when(
-            F.col("pre_c") != F.col("post_c"),
-            F.array(
-                F.struct(
-                    F.lit("update_preimage").alias("change_type"),
-                    F.col("pre_c").alias("price_c"),
-                ),
-                F.struct(
-                    F.lit("update_postimage").alias("change_type"),
-                    F.col("post_c").alias("price_c"),
-                ),
-            ),
-        ).otherwise(F.array()),
-    ).otherwise(
-        F.when(
-            F.col("pre_c").isNotNull(),
-            F.array(
-                F.struct(
-                    F.lit("delete").alias("change_type"),
-                    F.col("pre_c").alias("price_c"),
-                )
-            ),
-        ).otherwise(
-            F.array(
-                F.struct(
-                    F.lit("insert").alias("change_type"),
-                    F.col("post_c").alias("price_c"),
-                )
-            )
-        )
-    )
-    return (
-        j.select("o_orderkey", F.explode(ch).alias("c"))
-        .select(
-            "o_orderkey",
-            F.col("c.change_type").alias("change_type"),
-            F.col("c.price_c").alias("price_c"),
-        )
-    )
+    return tbl.change_feed(tbl.manifest(1), tbl.manifest(2))
 
 
 # ---------------------------------------------------------------------------
@@ -713,74 +583,24 @@ def sink_snapshot_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame aggregates v2 AND v3 from their manifests: v3 must
     hash-match the pre-update state while v2 still shows the update —
     both snapshots alive, order restored."""
-    import shutil
+    tbl = SnapshotTable(spark, "sink_snapshot_restore", sf_dir)
+    o = _orders_cents(spark, sf_dir)
+    tbl.commit([], tbl.write(o.repartition(4, "o_year"), "data_v1"))
+    matched = _rows("P", 1995)
+    tbl.commit(*tbl.rewrite(matched, _bump(matched, 10), "data_v2delta"))
 
-    root = scratch_dir("sink_snapshot_restore", sf_dir)
-    for sub in ("data_v1", "data_v2delta"):
-        shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
-    data_v1 = os.path.join(root, "data_v1")
-    data_v2 = os.path.join(root, "data_v2delta")
-
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        cents("o_totalprice").alias("price_c"),
-        F.year("o_orderdate").cast("int").alias("o_year"),
-    )
-    o.repartition(4, "o_year").write.mode("overwrite").parquet(data_v1)
-    v1_files = _tt_file_list(spark, data_v1)
-
-    matched = (F.col("o_orderstatus") == "P") & (F.col("o_year") == 1995)
-    affected = [
-        r["f"]
-        for r in spark.read.parquet(data_v1)
-        .where(matched)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    ]
-    bumped = F.col("price_c") + F.expr("price_c div 10")
-    spark.read.parquet(*affected).withColumn(
-        "price_c", F.when(matched, bumped).otherwise(F.col("price_c"))
-    ).write.mode("overwrite").parquet(data_v2)
-    v2_files = [f for f in v1_files if f not in set(affected)] + _tt_file_list(
-        spark, data_v2
-    )
-
-    def _data_files() -> set[str]:
-        found = set()
-        for d in (data_v1, data_v2):
-            for fn in os.listdir(d):
-                if fn.endswith(".parquet"):
-                    found.add(fn)
-        return found
-
-    before = _data_files()
+    before = tbl.data_files()
     # RESTORE TO VERSION 1: v3 = v1's manifest, verbatim. Metadata only.
-    v3_files = list(v1_files)
+    tbl.commit(tbl.manifest(2), tbl.manifest(1))
     _require(
-        _data_files() == before,
+        tbl.data_files() == before,
         "restore must write no data files",
     )
     _require(
-        sorted(v3_files) == sorted(v1_files),
+        sorted(tbl.manifest(3)) == sorted(tbl.manifest(1)),
         "v3 manifest must equal v1's",
     )
-
-    outs = []
-    for v, files in ((2, v2_files), (3, v3_files)):
-        snap = spark.read.parquet(*files)
-        outs.append(
-            snap.agg(
-                F.lit(v).cast("int").alias("version"),
-                F.count(F.lit(1)).alias("n_rows"),
-                (F.sum("price_c").cast("double") / 100.0).alias("sum_price"),
-                F.sum(F.when(F.col("o_orderstatus") == "P", 1).otherwise(0))
-                .cast("long")
-                .alias("n_pending"),
-            ).select("version", "n_rows", "sum_price", "n_pending")
-        )
-    return outs[0].unionByName(outs[1]).orderBy("version")
+    return _version_aggs({v: tbl.as_of(v) for v in (2, 3)})
 
 
 # ---------------------------------------------------------------------------
@@ -837,94 +657,38 @@ def sink_snapshot_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFra
     The returned single row aggregates the FINAL head (v3): both
     updates applied exactly once, hash-checked against the both-bumps
     oracle."""
-    import shutil
+    tbl = SnapshotTable(spark, "sink_snapshot_concurrent_commit", sf_dir)
+    # physically partition by year — the two writers' touch sets are
+    # then disjoint BY LAYOUT, not by hash luck: hash-bucketing put 1995
+    # and 1997 in one bucket mod 8.
+    tbl.commit([], tbl.write(_orders_cents(spark, sf_dir), "data_v1", by_year=True))
 
-    root = scratch_dir("sink_snapshot_concurrent_commit", sf_dir)
-    for sub in ("data_v1", "data_a", "data_b"):
-        shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
-    data_v1 = os.path.join(root, "data_v1")
-    data_a = os.path.join(root, "data_a")
-    data_b = os.path.join(root, "data_b")
-
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        cents("o_totalprice").alias("price_c"),
-        F.year("o_orderdate").cast("int").alias("o_year"),
-    )
-    # physically partition by year (duplicated column: explicit file-list
-    # reads drop the directory key, so o_year stays a data column) — the
-    # two writers' touch sets are then disjoint BY LAYOUT, not by hash
-    # luck: hash-bucketing put 1995 and 1997 in one bucket mod 8.
-    o.withColumn("y", F.col("o_year")).write.partitionBy("y").mode(
-        "overwrite"
-    ).parquet(data_v1)
-    v1_files = _tt_file_list(spark, data_v1)
-    head = {"version": 1, "files": v1_files}
-
-    def _prepare(pred, bump_expr, out_dir):
-        """One writer's prepare phase against base v1: COW-rewrite only
-        the files holding matched rows; return (replaced, new) files."""
-        replaced = [
-            r["f"]
-            for r in spark.read.parquet(data_v1)
-            .where(pred)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
-        ]
-        spark.read.parquet(*replaced).withColumn(
-            "price_c", F.when(pred, bump_expr).otherwise(F.col("price_c"))
-        ).write.mode("overwrite").parquet(out_dir)
-        return replaced, _tt_file_list(spark, out_dir)
-
-    pred_a = (F.col("o_orderstatus") == "P") & (F.col("o_year") == 1995)
-    pred_b = (F.col("o_orderstatus") == "F") & (F.col("o_year") == 1997)
-    a_replaced, a_new = _prepare(
-        pred_a, F.col("price_c") + F.expr("price_c div 10"), data_a
-    )
-    b_replaced, b_new = _prepare(
-        pred_b, F.col("price_c") + F.expr("price_c div 20"), data_b
-    )
-
-    def _cas(base_version, files):
-        if head["version"] != base_version:
-            return False
-        head.update(version=base_version + 1, files=files)
-        return True
+    # each writer's prepare phase against base v1: COW-rewrite only the
+    # files holding its matched rows; (replaced, new) files, uncommitted
+    pred_a, pred_b = _rows("P", 1995), _rows("F", 1997)
+    a = tbl.rewrite(pred_a, _bump(pred_a, 10), "data_a")
+    b = tbl.rewrite(pred_b, _bump(pred_b, 20), "data_b")
 
     # A commits first: CAS v1 -> v2 succeeds.
-    _require(
-        _cas(1, [f for f in v1_files if f not in set(a_replaced)] + a_new),
-        'invariant violated: _cas(1, [f for f in v1_files if f not in set(a_replaced)] + a_new)',
-    )
+    _require(tbl.commit(*a, base=1), "first writer's CAS v1 -> v2 must succeed")
     # B's CAS against its stale base MUST fail — that's the protocol.
-    _require(
-        not _cas(1, [f for f in v1_files if f not in set(b_replaced)] + b_new),
-        "stale-base CAS must be rejected",
-    )
+    _require(not tbl.commit(*b, base=1), "stale-base CAS must be rejected")
     # Conflict check: B's replaced set vs A's committed diff.
     _require(
-        not (set(b_replaced) & (set(a_replaced) | set(a_new))),
+        not (set(b[0]) & (set(a[0]) | set(a[1]))),
         "touch sets overlap: rebase is unsound, writer must re-execute",
     )
-    # Disjoint => rebase B's manifest onto v2 and CAS v2 -> v3.
-    _require(
-        _cas(2, [f for f in head["files"] if f not in set(b_replaced)] + b_new),
-        'invariant violated: _cas(2, [f for f in head["files"] if f not in set(b_replaced)] + b_new)',
-    )
-    _require(
-        head["version"] == 3,
-        'invariant violated: head["version"] == 3',
-    )
+    # Disjoint => rebase B's change onto v2 and CAS v2 -> v3.
+    _require(tbl.commit(*b, base=2), "rebased CAS v2 -> v3 must succeed")
+    _require(tbl.head == 3, f"head must be v3, is v{tbl.head}")
 
-    fin = spark.read.parquet(*head["files"])
+    fin = tbl.as_of(3)
     return fin.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         (F.sum("price_c").cast("double") / 100.0).alias("sum_price"),
         F.sum(F.when(pred_a, 1).otherwise(0)).cast("long").alias("n_bump_a"),
         F.sum(F.when(pred_b, 1).otherwise(0)).cast("long").alias("n_bump_b"),
-    ).select("n_rows", "sum_price", "n_bump_a", "n_bump_b")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -982,80 +746,34 @@ def sink_snapshot_mor_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the same table. In-op asserts pin the mechanics: the delete
     commit writes zero data files, and compaction rewrites only the
     delete-bearing files."""
-    import shutil
-
-    root = scratch_dir("sink_snapshot_mor_deletes", sf_dir)
-    for sub in ("data_v1", "deletes_v2", "data_v3"):
-        shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
-    data_v1 = os.path.join(root, "data_v1")
-    del_v2 = os.path.join(root, "deletes_v2")
-    data_v3 = os.path.join(root, "data_v3")
-
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        cents("o_totalprice").alias("price_c"),
-        F.year("o_orderdate").cast("int").alias("o_year"),
-    )
-    o.withColumn("y", F.col("o_year")).write.partitionBy("y").mode(
-        "overwrite"
-    ).parquet(data_v1)
-    v1_files = _tt_file_list(spark, data_v1)
-
-    def _data_files() -> set[str]:
-        found = set()
-        for r, _d, fs in os.walk(data_v1):
-            for fn in fs:
-                if fn.endswith(".parquet"):
-                    found.add(os.path.join(r, fn))
-        return found
+    tbl = SnapshotTable(spark, "sink_snapshot_mor_deletes", sf_dir)
+    tbl.commit([], tbl.write(_orders_cents(spark, sf_dir), "data_v1", by_year=True))
 
     # v2: MOR delete — keys only, no data rewrite (certified).
-    doomed = (F.col("o_orderstatus") == "O") & (F.col("o_year") == 1995)
-    before = _data_files()
-    spark.read.parquet(data_v1).where(doomed).select("o_orderkey").write.mode(
-        "overwrite"
-    ).parquet(del_v2)
+    doomed = _rows("O", 1995)
+    before = tbl.data_files()
+    del_v2 = tbl.path("deletes_v2")
+    tbl.as_of(1).where(doomed).select("o_orderkey").write.mode("overwrite").parquet(del_v2)
+    tbl.commit([], [])  # v2 keeps v1's data files; the delete file rides beside them
     _require(
-        _data_files() == before,
+        tbl.data_files() == before,
         "MOR delete must not touch data files",
     )
 
-    def _mor_read(files):
+    def _mor_read(df: DataFrame) -> DataFrame:
         dels = spark.read.parquet(del_v2).select("o_orderkey")
-        return spark.read.parquet(*files).join(dels, "o_orderkey", "left_anti")
+        return df.join(dels, "o_orderkey", "left_anti")
 
     # v3: compaction — rewrite ONLY delete-bearing files, drop the side file.
-    bearing = [
-        r["f"]
-        for r in spark.read.parquet(data_v1)
-        .where(doomed)
-        .select(F.input_file_name().alias("f"))
-        .distinct()
-        .collect()
-    ]
+    bearing, compacted = tbl.rewrite(doomed, _mor_read, "data_v3")
     _require(
-        bearing and len(bearing) < len(v1_files),
+        bearing and len(bearing) < len(tbl.manifest(2)),
         "compaction must be partial",
     )
-    _mor_read(bearing).write.mode("overwrite").parquet(data_v3)
-    v3_files = [f for f in v1_files if f not in set(bearing)] + _tt_file_list(
-        spark, data_v3
+    tbl.commit(bearing, compacted)
+    return _version_aggs(
+        {2: _mor_read(tbl.as_of(2)), 3: tbl.as_of(3)}, "n_1995", F.col("o_year") == 1995
     )
-
-    outs = []
-    for v, snap in ((2, _mor_read(v1_files)), (3, spark.read.parquet(*v3_files))):
-        outs.append(
-            snap.agg(
-                F.lit(v).cast("int").alias("version"),
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                (F.sum("price_c").cast("double") / 100.0).alias("sum_price"),
-                F.sum(F.when(F.col("o_year") == 1995, 1).otherwise(0))
-                .cast("long")
-                .alias("n_1995"),
-            ).select("version", "n_rows", "sum_price", "n_1995")
-        )
-    return outs[0].unionByName(outs[1]).orderBy("version")
 
 
 # ---------------------------------------------------------------------------
@@ -1106,68 +824,14 @@ def stream_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     two commits' touch sets disjoint, so each batch's diff is exactly
     one partition's files. The returned feed (commit_version, key,
     change_type, price) is H-tier hash-checked."""
-    import shutil
-    import tempfile
-
-    root = scratch_dir("stream_snapshot_changes", sf_dir)
-    for sub in ("data_v1", "data_c2", "data_c3", "log", "feed"):
-        shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
-    data_v1 = os.path.join(root, "data_v1")
-    log_dir = os.path.join(root, "log")
-    feed_dir = os.path.join(root, "feed")
-    os.makedirs(log_dir)
-
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        cents("o_totalprice").alias("price_c"),
-        F.year("o_orderdate").cast("int").alias("o_year"),
-    )
-    o.withColumn("y", F.col("o_year")).write.partitionBy("y").mode(
-        "overwrite"
-    ).parquet(data_v1)
-
-    def _commit(version: int, files: list[str]) -> None:
-        """Append one manifest file (= one commit) to the log, named so
-        one file == one commit for maxFilesPerTrigger batching."""
-        tmp = os.path.join(root, f"_man_tmp_{version}")
-        spark.createDataFrame(
-            [(version, f) for f in files], "version int, f string"
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-        os.rename(
-            os.path.join(tmp, part), os.path.join(log_dir, f"commit_{version}.parquet")
-        )
-        shutil.rmtree(tmp)
-
-    manifests = {1: _tt_file_list(spark, data_v1)}
-    _commit(1, manifests[1])
-    for version, (status, year, divisor, out) in (
-        (2, ("P", 1995, 10, os.path.join(root, "data_c2"))),
-        (3, ("F", 1996, 20, os.path.join(root, "data_c3"))),
-    ):
-        prev = manifests[version - 1]
-        pred = (F.col("o_orderstatus") == status) & (F.col("o_year") == year)
-        replaced = [
-            r["f"]
-            for r in spark.read.parquet(*prev)
-            .where(pred)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
-        ]
-        spark.read.parquet(*replaced).withColumn(
-            "price_c",
-            F.when(pred, F.col("price_c") + F.expr(f"price_c div {divisor}")).otherwise(
-                F.col("price_c")
-            ),
-        ).write.mode("overwrite").parquet(out)
-        manifests[version] = [f for f in prev if f not in set(replaced)] + (
-            _tt_file_list(spark, out)
-        )
-        _commit(version, manifests[version])
+    tbl = SnapshotTable(spark, "stream_snapshot_changes", sf_dir, durable=True)
+    tbl.commit([], tbl.write(_orders_cents(spark, sf_dir), "data_v1", by_year=True))
+    for version, (status, year, divisor) in ((2, ("P", 1995, 10)), (3, ("F", 1996, 20))):
+        pred = _rows(status, year)
+        tbl.commit(*tbl.rewrite(pred, _bump(pred, divisor), f"data_c{version}"))
 
     # --- the consumer: tail the commit log, emit per-commit CDF ------
+    feed_dir = tbl.path("feed")
     seen: dict[int, list[str]] = {}
     pending: dict[int, list[str]] = {}
     batch_commit_counts: list[int] = []
@@ -1180,74 +844,21 @@ def stream_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             arrived.setdefault(r["version"], []).append(r["f"])
         batch_commit_counts.append(len(arrived))
         pending.update(arrived)
-        ss = batch_df.sparkSession
         while state["next"] in pending:
             v = state["next"]
-            files = pending.pop(v)
-            seen[v] = files
+            seen[v] = pending.pop(v)
             state["next"] = v + 1
-            if v == 1:
-                continue
-            removed = [f for f in seen[v - 1] if f not in set(files)]
-            added = [f for f in files if f not in set(seen[v - 1])]
-            pre = ss.read.parquet(*removed).select(
-                "o_orderkey", F.col("price_c").alias("pre_c")
-            )
-            post = ss.read.parquet(*added).select(
-                "o_orderkey", F.col("price_c").alias("post_c")
-            )
-            j = pre.join(post, "o_orderkey", "full_outer")
-            ch = F.when(
-                F.col("pre_c").isNotNull() & F.col("post_c").isNotNull(),
-                F.when(
-                    F.col("pre_c") != F.col("post_c"),
-                    F.array(
-                        F.struct(
-                            F.lit("update_preimage").alias("change_type"),
-                            F.col("pre_c").alias("price_c"),
-                        ),
-                        F.struct(
-                            F.lit("update_postimage").alias("change_type"),
-                            F.col("post_c").alias("price_c"),
-                        ),
-                    ),
-                ).otherwise(F.array()),
-            ).otherwise(
-                F.when(
-                    F.col("pre_c").isNotNull(),
-                    F.array(
-                        F.struct(
-                            F.lit("delete").alias("change_type"),
-                            F.col("pre_c").alias("price_c"),
-                        )
-                    ),
-                ).otherwise(
-                    F.array(
-                        F.struct(
-                            F.lit("insert").alias("change_type"),
-                            F.col("post_c").alias("price_c"),
-                        )
-                    )
-                )
-            )
-            (
-                j.select("o_orderkey", F.explode(ch).alias("c"))
-                .select(
-                    F.lit(v).cast("int").alias("commit_version"),
-                    "o_orderkey",
-                    F.col("c.change_type").alias("change_type"),
-                    F.col("c.price_c").alias("price_c"),
-                )
-                .write.mode("append")
-                .parquet(feed_dir)
-            )
+            if v > 1:
+                tbl.change_feed(seen[v - 1], seen[v]).select(
+                    F.lit(v).cast("int").alias("commit_version"), "*"
+                ).write.mode("append").parquet(feed_dir)
 
     q = (
-        spark.readStream.schema("version int, f string")
+        spark.readStream.schema(MANIFEST_SCHEMA)
         .option("maxFilesPerTrigger", 1)
-        .parquet(log_dir)
+        .parquet(tbl.path("manifests"))
         .writeStream.foreachBatch(consume)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="cts_ckpt_cdfstream_"))
+        .option("checkpointLocation", tbl.path("checkpoint"))
         .trigger(availableNow=True)
         .start()
     )
@@ -1346,12 +957,7 @@ def sink_snapshot_partition_evolution(spark: SparkSession, sf_dir: str) -> DataF
     data_s1 = os.path.join(root, "data_spec1")
     data_s2 = os.path.join(root, "data_spec2")
 
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        cents("o_totalprice").alias("price_c"),
-        F.year("o_orderdate").cast("int").alias("o_year"),
-    )
+    o = _orders_cents(spark, sf_dir)
     # spec-1: cluster by year only (4 distinct years ≤ 1998)
     o.where(F.col("o_year") <= 1998).repartitionByRange(4, "o_year").write.mode(
         "overwrite"
@@ -1363,8 +969,8 @@ def sink_snapshot_partition_evolution(spark: SparkSession, sf_dir: str) -> DataF
 
     manifest = []  # one row per data file — Iceberg-manifest scale
     for spec, d in ((1, data_s1), (2, data_s2)):
-        for uri in _tt_file_list(spark, d):
-            p = _uri_to_path(uri)
+        for uri in file_list(spark, d, o.schema):
+            p = local_path(uri)
             y_lo, y_hi = _footer_bounds(p, "o_year")
             st_lo, st_hi = _footer_bounds(p, "o_orderstatus")
             manifest.append(
@@ -1458,9 +1064,10 @@ def sink_snapshot_wap_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     producers stage a commit on an audit branch, a DQ suite runs
     against the BRANCH snapshot (readers of main never see it), and
     publishing is a metadata-only fast-forward of the main ref onto
-    the audited branch head. Refs and tags are just named pointers
-    into the same manifest store the repo's other snapshot ops use —
-    branches move, tags don't.
+    the audited branch head. Main is the table's head version, the
+    ``v1`` tag a fixed version; a branch is a change staged against the
+    version it was cut from, and publishing commits it with a
+    compare-and-swap on that base — main moves, tags don't.
 
     Staged here: a good batch (year-2001 corrections at half price,
     re-keyed) on branch ``audit_good`` — its DQ run (null keys,
@@ -1477,18 +1084,10 @@ def sink_snapshot_wap_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     publish costs nothing, and a failed audit costs ONLY the staged
     files — never a rewrite of main. Result rows (tag_v1 +
     main_published aggregates) are H-tier hash-checked."""
-    root = scratch_dir("sink_snapshot_wap_branch", sf_dir)
-    data_v1 = os.path.join(root, "data_v1")
-    data_good = os.path.join(root, "staged_good")
-    data_bad = os.path.join(root, "staged_bad")
-
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        cents("o_totalprice").alias("price_c"),
-        F.year("o_orderdate").cast("int").alias("o_year"),
-    )
-    o.repartition(4).write.mode("overwrite").parquet(data_v1)
-    n_base = spark.read.parquet(data_v1).count()
+    tbl = SnapshotTable(spark, "sink_snapshot_wap_branch", sf_dir)
+    o = _orders_cents(spark, sf_dir)
+    tbl.commit([], tbl.write(o.repartition(4), "data_v1"))
+    n_base = tbl.as_of(1).count()
 
     # stage two candidate commits as branch-only file sets. Staged keys
     # are re-keyed past the ACTUAL max orderkey (one columnar MAX), not a
@@ -1497,28 +1096,27 @@ def sink_snapshot_wap_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verdicts this query certifies (ADVICE r05). The result aggregates
     # never expose key values, so the oracle is unaffected.
     key_offset = o.agg(F.max("o_orderkey")).first()[0] + 1
-    o.where(F.col("o_year") == 2001).select(
-        (F.col("o_orderkey") + F.lit(key_offset)).alias("o_orderkey"),
-        F.expr("price_c div 2").alias("price_c"),
-        F.col("o_year"),
-    ).write.mode("overwrite").parquet(data_good)
-    o.where(F.col("o_year") == 2000).select(
-        (F.col("o_orderkey") + F.lit(2 * key_offset)).alias("o_orderkey"),
-        (-F.col("price_c")).alias("price_c"),
-        F.col("o_year"),
-    ).write.mode("overwrite").parquet(data_bad)
-
-    v1_files = _tt_file_list(spark, data_v1)
-    refs = {"main": list(v1_files)}  # branches: movable pointers
-    tags = {"v1": list(v1_files)}  # tags: immutable pointers
-    refs["audit_good"] = v1_files + _tt_file_list(spark, data_good)
-    refs["audit_bad"] = v1_files + _tt_file_list(spark, data_bad)
+    key = F.col("o_orderkey")
+    branches = {  # branch -> staged files, cut from v1
+        "audit_good": tbl.write(
+            o.where(F.col("o_year") == 2001)
+            .withColumn("o_orderkey", key + F.lit(key_offset))
+            .withColumn("price_c", F.expr("price_c div 2")),
+            "staged_good",
+        ),
+        "audit_bad": tbl.write(
+            o.where(F.col("o_year") == 2000)
+            .withColumn("o_orderkey", key + F.lit(2 * key_offset))
+            .withColumn("price_c", -F.col("price_c")),
+            "staged_bad",
+        ),
+    }
 
     def _audit(branch: str) -> bool:
         """DQ gate over the branch snapshot: every check a violation
         count, green = all zeros (the dq_constraint_suite pattern)."""
         r = (
-            spark.read.parquet(*refs[branch])
+            tbl.read(tbl.manifest(1) + branches[branch])
             .agg(
                 F.sum(F.col("o_orderkey").isNull().cast("long")).alias("nulls"),
                 (F.count(F.lit(1)) - F.countDistinct("o_orderkey")).alias("dups"),
@@ -1530,55 +1128,44 @@ def sink_snapshot_wap_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _publish(branch: str) -> bool:
         """Fast-forward main onto an audited branch head: refuse on a
-        red audit; on green, move the pointer — no data I/O."""
-        if not _audit(branch):
-            return False
-        refs["main"] = list(refs[branch])
-        return True
+        red audit; on green, commit the branch's files against its base
+        v1 — no data I/O."""
+        return _audit(branch) and tbl.commit([], branches[branch], base=1)
 
     # isolation: main never sees staged rows before publish
     _require(
-        spark.read.parquet(*refs["main"]).count() == n_base,
-        'invariant violated: spark.read.parquet(*refs["main"]).count() == n_base',
+        tbl.as_of(tbl.head).count() == n_base,
+        "main must not see staged rows before publish",
     )
 
-    data_files_before = {
-        f for d in (data_v1, data_good, data_bad) for f in _tt_file_list(spark, d)
-    }
+    data_files_before = tbl.data_files()
     _require(
         _publish("audit_bad") is False,
         "red audit must refuse publish",
     )
     _require(
-        set(refs["main"]) == set(v1_files),
+        set(tbl.manifest()) == set(tbl.manifest(1)),
         "refused publish moved main",
     )
     _require(
         _publish("audit_good") is True,
         "green audit must publish",
     )
-    data_files_after = {
-        f for d in (data_v1, data_good, data_bad) for f in _tt_file_list(spark, d)
-    }
     # fast-forward certificate: publishing wrote ZERO data files
     _require(
-        data_files_after == data_files_before,
-        'invariant violated: data_files_after == data_files_before',
+        tbl.data_files() == data_files_before,
+        "publish must write no data files",
     )
 
-    def _agg(ref_id: str, files: list[str]) -> DataFrame:
-        return (
-            spark.read.parquet(*files)
-            .agg(
-                F.lit(ref_id).alias("ref"),
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum("price_c").cast("long").alias("sum_price_c"),
-            )
-            .select("ref", "n_rows", "sum_price_c")
+    def _agg(ref_id: str, snap: DataFrame) -> DataFrame:
+        return snap.agg(
+            F.lit(ref_id).alias("ref"),
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.sum("price_c").cast("long").alias("sum_price_c"),
         )
 
     # the tag still reads v1 even though main has moved past it
-    return _agg("tag_v1", tags["v1"]).unionByName(_agg("main_published", refs["main"]))
+    return _agg("tag_v1", tbl.as_of(1)).unionByName(_agg("main_published", tbl.as_of(tbl.head)))
 
 
 # ---------------------------------------------------------------------------
@@ -1627,21 +1214,15 @@ def sink_snapshot_rename_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
     with `scan_schema_evolution` (add-column) and
     `sink_snapshot_partition_evolution` (spec change). Final
     per-status aggregate is H-tier hash-checked."""
-    root = scratch_dir("sink_snapshot_rename_widen", sf_dir)
-    data_v1 = os.path.join(root, "data_v1")
-    data_v3 = os.path.join(root, "data_v3")
-
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        cents("o_totalprice").alias("price_c"),
-        F.year("o_orderdate").cast("int").alias("o_year"),
-    )
+    tbl = SnapshotTable(spark, "sink_snapshot_rename_widen", sf_dir)
+    o = _orders_cents(spark, sf_dir)
     # v1: old physical schema — field 2 named price_c, INT32
-    o.where(F.col("o_year") < 2000).select(
-        "o_orderkey", "o_orderstatus", F.col("price_c").cast("int").alias("price_c")
-    ).repartition(4).write.mode("overwrite").parquet(data_v1)
-    v1_files = _tt_file_list(spark, data_v1)
+    v1_files = tbl.write(
+        o.where(F.col("o_year") < 2000)
+        .select("o_orderkey", "o_orderstatus", F.col("price_c").cast("int").alias("price_c"))
+        .repartition(4),
+        "data_v1",
+    )
 
     # table schema history: field_id -> (logical_name, logical_type);
     # per-fileset physical bindings live in the manifest, Iceberg-style
@@ -1650,41 +1231,40 @@ def sink_snapshot_rename_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest = [{"files": v1_files, "phys": schema_v1}]
 
     # v2 is METADATA-ONLY: the commit writes nothing but this binding
-    v1_stat = {f: os.stat(_uri_to_path(f)).st_mtime_ns for f in v1_files}
+    v1_stat = tbl.data_files()
     current_schema = schema_v2
 
     # v3: appended data arrives in the NEW physical schema; ×100 values
     # overflow INT32, proving the widened type is actually required
-    o.where(F.col("o_year") >= 2000).select(
-        "o_orderkey",
-        "o_orderstatus",
-        (F.col("price_c") * 100).cast("bigint").alias("price_cents"),
-    ).repartition(2).write.mode("overwrite").parquet(data_v3)
-    manifest.append({"files": _tt_file_list(spark, data_v3), "phys": current_schema})
+    v3_files = tbl.write(
+        o.where(F.col("o_year") >= 2000)
+        .select(
+            "o_orderkey",
+            "o_orderstatus",
+            (F.col("price_c") * 100).cast("bigint").alias("price_cents"),
+        )
+        .repartition(2),
+        "data_v3",
+    )
+    manifest.append({"files": v3_files, "phys": current_schema})
 
     # certify across the whole lifecycle (evolution commit + append):
     # the pre-evolution files were never rewritten
     _require(
-        {
-        f: os.stat(_uri_to_path(f)).st_mtime_ns for f in v1_files
-    } == v1_stat,
+        v1_stat.items() <= tbl.data_files().items(),
         "rename/widen must not touch pre-evolution data files",
     )
 
     # reader: one projection branch per distinct physical binding
     logical_name, logical_type = current_schema[2]
-    branches = []
-    for entry in manifest:
-        phys_name, _ = entry["phys"][2]
-        branches.append(
-            spark.read.parquet(*entry["files"]).select(
-                "o_orderstatus",
-                F.col(phys_name).cast(logical_type).alias(logical_name),
-            )
+    branches = [
+        tbl.read(entry["files"]).select(
+            "o_orderstatus",
+            F.col(entry["phys"][2][0]).cast(logical_type).alias(logical_name),
         )
-    evolved = branches[0]
-    for b in branches[1:]:
-        evolved = evolved.unionByName(b)
+        for entry in manifest
+    ]
+    evolved = functools.reduce(DataFrame.unionByName, branches)
     out = evolved.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum(logical_name).cast("long").alias("sum_price_cents"),
@@ -1693,7 +1273,7 @@ def sink_snapshot_rename_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # data really exceeds INT32 range — the widen was load-bearing
     _require(
         evolved.schema[logical_name].dataType.simpleString() == "bigint",
-        'invariant violated: evolved.schema[logical_name].dataType.simpleString() == "bigint"',
+        f"evolved {logical_name} must be bigint",
     )
     _require(
         branches[1].agg(F.max(logical_name)).first()[0] > 2**31 - 1,
@@ -1741,22 +1321,10 @@ def stream_snapshot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Final snapshot aggregate is H-tier hash-checked against `orders`;
     at 100 TB each commit costs O(|batch|) data + one manifest row per
     file, and the refusal check is a dict probe on the driver."""
-    import shutil
-    import tempfile
-
-    root = scratch_dir("stream_snapshot_ingest", sf_dir)
-    for sub in ("spool", "data", "feedlog"):
-        shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
-    spool = os.path.join(root, "spool")
-    data_root = os.path.join(root, "data")
-    os.makedirs(spool)
-
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        cents("o_totalprice").alias("price_c"),
-        F.year("o_orderdate").cast("int").alias("o_year"),
-    )
+    tbl = SnapshotTable(spark, "stream_snapshot_ingest", sf_dir)
+    spool_dir = tbl.path("spool")
+    os.makedirs(spool_dir)
+    o = _orders_cents(spark, sf_dir)
     # three arrival chunks -> three micro-batches (one file each)
     for i, pred in enumerate(
         (
@@ -1765,30 +1333,17 @@ def stream_snapshot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_year") > 1999,
         )
     ):
-        tmp = os.path.join(root, f"_spool_tmp_{i}")
-        o.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-        os.rename(os.path.join(tmp, part), os.path.join(spool, f"chunk_{i}.parquet"))
-        shutil.rmtree(tmp)
+        spool(o.where(pred), os.path.join(spool_dir, f"chunk_{i}.parquet"))
 
-    commits: list[dict] = []  # the manifest log: (version, txn, files)
-    committed_txns: set[int] = set()
     refused: list[int] = []
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id in committed_txns:
+        if batch_id in tbl.txns:
             refused.append(batch_id)  # idempotent-writes refusal
             return
-        d = os.path.join(data_root, f"b{batch_id:05d}")
-        batch_df.write.mode("overwrite").parquet(d)  # crash-safe re-run
-        files = _tt_file_list(batch_df.sparkSession, d)
-        # manifest append IS the commit point
-        commits.append(
-            {"version": len(commits) + 1, "txn": batch_id, "files": files}
-        )
-        committed_txns.add(batch_id)
-
-    ckpt = tempfile.mkdtemp(prefix="cts_ckpt_ingest_")
+        # crash-safe re-run: per-batch overwrite; the commit is the
+        # table's manifest append, keyed by the stream's txn id
+        tbl.commit([], tbl.write(batch_df, f"data/b{batch_id:05d}"), txn=batch_id)
 
     def run(checkpoint: str) -> None:
         q = (
@@ -1796,7 +1351,7 @@ def stream_snapshot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "o_orderkey bigint, o_orderstatus string, price_c bigint, o_year int"
             )
             .option("maxFilesPerTrigger", 1)
-            .parquet(spool)
+            .parquet(spool_dir)
             .writeStream.foreachBatch(ingest)
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
@@ -1804,19 +1359,19 @@ def stream_snapshot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         await_or_raise(q, "lakehouse_txn_ingest", 600.0)
 
-    run(ckpt)
+    run(tbl.path("checkpoint"))
     _require(
-        len(commits) == 3 and not refused,
+        tbl.head == 3 and not refused,
         "initial drain must commit 3",
     )
-    run(ckpt)  # restart, checkpoint intact: offsets replay nothing
+    run(tbl.path("checkpoint"))  # restart, checkpoint intact: offsets replay nothing
     _require(
-        len(commits) == 3 and not refused,
+        tbl.head == 3 and not refused,
         "intact restart must be a no-op",
     )
-    run(tempfile.mkdtemp(prefix="cts_ckpt_ingest2_"))  # checkpoint LOST
+    run(tbl.path("checkpoint_lost"))  # checkpoint LOST
     _require(
-        len(commits) == 3,
+        tbl.head == 3,
         "replayed txns must never re-commit",
     )
     _require(
@@ -1824,13 +1379,11 @@ def stream_snapshot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"all replayed txns refused: {refused}",
     )
     _require(
-        [c["version"] for c in commits] == [1, 2, 3],
-        'invariant violated: [c["version"] for c in commits] == [1, 2, 3]',
+        [tbl.txns.get(t) for t in (0, 1, 2)] == [1, 2, 3],
+        f"txns 0..2 must commit as versions 1..3: {tbl.txns}",
     )
-
-    snapshot = [f for c in commits for f in c["files"]]
     return (
-        spark.read.parquet(*snapshot)
+        tbl.as_of(tbl.head)
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -1951,45 +1504,22 @@ def sink_snapshot_positional_deletes(spark: SparkSession, sf_dir: str) -> DataFr
     n_deleted) of the MOR view, hash-matched against the orders-derived
     truth — plus an in-op assert that the positional view equals the
     value-level filter row-for-row."""
-    import shutil
-
-    root = scratch_dir("sink_snapshot_positional_deletes", sf_dir)
-    for sub in ("data_v1", "posdel_v2"):
-        shutil.rmtree(os.path.join(root, sub), ignore_errors=True)
-    data_v1 = os.path.join(root, "data_v1")
-    del_v2 = os.path.join(root, "posdel_v2")
-
-    o = table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        cents("o_totalprice").alias("price_c"),
-        F.year("o_orderdate").cast("int").alias("o_year"),
-    )
-    o.withColumn("y", F.col("o_year")).write.partitionBy("y").mode(
-        "overwrite"
-    ).parquet(data_v1)
-
-    def _data_files() -> set[str]:
-        found = set()
-        for r, _d, fs in os.walk(data_v1):
-            for fn in fs:
-                if fn.endswith(".parquet"):
-                    found.add(os.path.join(r, fn))
-        return found
-
-    with_meta = spark.read.parquet(data_v1).select(
+    tbl = SnapshotTable(spark, "sink_snapshot_positional_deletes", sf_dir)
+    tbl.commit([], tbl.write(_orders_cents(spark, sf_dir), "data_v1", by_year=True))
+    with_meta = tbl.as_of(1).select(
         "*",
         F.col("_metadata.file_path").alias("file_path"),
         F.col("_metadata.row_index").alias("row_index"),
     )
-    doomed = (F.col("o_orderstatus") == "P") & (F.col("o_year") == 1996)
+    doomed = _rows("P", 1996)
 
-    before = _data_files()
+    before = tbl.data_files()
+    del_v2 = tbl.path("posdel_v2")
     with_meta.where(doomed).select("file_path", "row_index").write.mode(
         "overwrite"
     ).parquet(del_v2)
     _require(
-        _data_files() == before,
+        tbl.data_files() == before,
         "positional delete must not touch data files",
     )
 
@@ -2002,7 +1532,7 @@ def sink_snapshot_positional_deletes(spark: SparkSession, sf_dir: str) -> DataFr
         f"positions must cover every doomed row ({mismatch} left)",
     )
 
-    n_base = spark.read.parquet(data_v1).count()
+    n_base = tbl.as_of(1).count()
     return mor.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         (F.sum("price_c").cast("double") / 100.0).alias("sum_price"),

@@ -63,15 +63,17 @@ def _dim_fits_broadcast(
     return est_build_bytes <= 512 * 1024 * 1024
 
 
-# Memo keyed by (sf_dir, region, nation.parquet mtime+size): the mtime/
-# size component invalidates the entry if a fixture under the same path
-# is ever rewritten (VERDICT r11 "What's wrong" #3 — the r11 cache was
-# keyed by path alone, which memoized across registry clearCache
-# boundaries forever and would have become a stale-plan trap for any
-# future mutable-fixture query). Bounded: one entry per distinct
-# (sf_dir, region, file-version) actually planned against.
+# Memo keyed by (sf_dir, region, nation.parquet and region.parquet
+# mtime+size): the mtime/size components invalidate the entry if either
+# fixture under the same path is ever rewritten (VERDICT r11 "What's
+# wrong" #3 — the r11 cache was keyed by path alone, which memoized
+# across registry clearCache boundaries forever and would have become a
+# stale-plan trap for any future mutable-fixture query). Bounded: one
+# entry per distinct (sf_dir, region, file-versions) actually planned
+# against.
 _NATION_KEYS_CACHE: dict[
-    tuple[str, str, "tuple[int, int] | None"], "tuple[int, ...] | None"
+    tuple[str, str, "tuple[int, int] | None", "tuple[int, int] | None"],
+    "tuple[int, ...] | None",
 ] = {}
 
 
@@ -109,6 +111,7 @@ def _region_nation_keys(sf_dir: str, region_name: str) -> "tuple[int, ...] | Non
         sf_dir,
         region_name,
         _file_version(os.path.join(sf_dir, "nation.parquet")),
+        _file_version(os.path.join(sf_dir, "region.parquet")),
     )
     if key in _NATION_KEYS_CACHE:
         return _NATION_KEYS_CACHE[key]

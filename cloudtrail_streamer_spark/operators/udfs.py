@@ -47,7 +47,12 @@ def _kernel_buckets(sf_dir: str, tbl: str, target_rows: int = 100_000) -> int:
     tasks rebuild identical buckets (guide §2.5)."""
     from cloudtrail_streamer_spark.stats import row_count
 
-    n = row_count(sf_dir, tbl)
+    return _buckets_for_rows(row_count(sf_dir, tbl), target_rows)
+
+
+def _buckets_for_rows(n: int, target_rows: int = 100_000) -> int:
+    """Bucket count for ``n`` rows: ceil(n / target_rows), floored at 16
+    (16 when the row count is unknown)."""
     return max(16, -(-n // target_rows)) if n > 0 else 16
 
 # Synthetic CloudTrail-style ARN built deterministically from orders rows.

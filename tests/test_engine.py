@@ -463,16 +463,60 @@ def test_lsh_recall_certificate(spark):
     assert row["recall"] >= 0.9, f"banded hyperplane LSH recall too low: {row}"
 
 
-def test_window_priority_names_exist():
-    """Every name in the driver-window priority list must be a registered
-    query (planned-but-renamed ops would silently waste driver slots)."""
+def test_certification_window_is_changed_then_oldest():
+    """The driver certifies the first 50 registry entries. Every query in
+    the changed-implementation list must be registered and inside that
+    window; the rest of the window must be the least recently certified
+    queries per the committed CORRECTNESS_r*.json records."""
     import cloudtrail_streamer_spark.registry as R
 
-    R._load_all()
-    missing = [n for n in R._WINDOW_PRIORITY if n not in R._REGISTRY]
-    assert not missing, f"window names not in registry: {missing}"
-    assert len(R._WINDOW_PRIORITY) == 50
-    assert len(set(R._WINDOW_PRIORITY)) == 50, "duplicate window slots"
+    names = list(R.all_queries())
+    window = names[:50]
+    unknown = [n for n in R._CHANGED if n not in R._REGISTRY]
+    assert not unknown, f"changed names not registered: {unknown}"
+    assert len(set(R._CHANGED)) == len(R._CHANGED), "duplicate changed entries"
+    assert not set(R._CHANGED) - set(window), "changed queries outside the window"
+    last = R._last_certified()
+    assert last, "no CORRECTNESS_r*.json records found next to the package"
+    rest = [n for n in window if n not in R._CHANGED]
+    outside = [n for n in names[50:] if n not in R._CHANGED]
+    newest_in = max(last.get(n, 0) for n in rest)
+    oldest_out = min(last.get(n, 0) for n in outside)
+    assert newest_in <= oldest_out, (
+        f"window holds a round-{newest_in} certificate while a "
+        f"round-{oldest_out} one waits outside"
+    )
+
+
+def test_nation_key_memo_tracks_region_file(tmp_path):
+    """The region-to-nationkeys memo also derives from region.parquet, so
+    rewriting only that file must change the answer, not serve the
+    cached keys."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cloudtrail_streamer_spark.operators.tpch import _region_nation_keys
+
+    for name in ("nation.parquet", "region.parquet"):
+        shutil.copy(os.path.join(SF, name), tmp_path / name)
+    region = tmp_path / "region.parquet"
+    before = _region_nation_keys(str(tmp_path), "ASIA")
+    assert before, "the ASIA region must own nations"
+
+    # rewrite region alone: ASIA now carries AFRICA's key (and vice versa)
+    reg = pq.read_table(region)
+    names = reg["r_name"].to_pylist()
+    i, j = names.index("ASIA"), names.index("AFRICA")
+    names[i], names[j] = names[j], names[i]
+    pq.write_table(reg.set_column(1, "r_name", pa.array(names)), region)
+    st = os.stat(region)
+    os.utime(region, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+
+    after = _region_nation_keys(str(tmp_path), "ASIA")
+    assert after and after != before, "stale nation keys served after region rewrite"
 
 
 def test_compression_quality_monotonic(spark):
@@ -661,41 +705,6 @@ def test_touch_attribution_conserves_purchases(spark):
     n_purch = ev.where(F.col("event_type") == "purchase").count()
     assert {r["channel"] for r in rows} <= {"view", "click", "direct"}
     assert sum(r["n_purchases"] for r in rows) == n_purch
-
-
-def test_staged_covers_unchecked_queries():
-    """The staged next-round rotation must (a) name only registered
-    queries, (b) together with the current window cover EVERY query
-    lacking a driver row across all CORRECTNESS_r* captures, with no
-    overlap — so the next rotation is mechanical and cannot waste
-    driver slots. Since r10 the staged list holds STALE-cert queries
-    (every registered query has at least one driver row after r9), so
-    staged entries may already be checked — but only with an OLD cert:
-    a staged name whose latest cert is from the current or previous
-    round is a wasted r11 slot."""
-    import json
-    import os
-
-    import cloudtrail_streamer_spark.registry as R
-
-    R._load_all()
-    staged, window = set(R._R12_STAGED), set(R._WINDOW_PRIORITY)
-    missing = staged - set(R._REGISTRY)
-    assert not missing, f"staged names not registered: {sorted(missing)}"
-    assert not (staged & window), "staged/window overlap wastes slots"
-    latest: dict[str, int] = {}
-    for f in sorted(os.listdir("/root/repo")):
-        if f.startswith("CORRECTNESS_r") and f.endswith(".json"):
-            rnd = int(f.split("_r")[1].split(".")[0])
-            for name in json.load(open(os.path.join("/root/repo", f))):
-                latest[name] = max(latest.get(name, 0), rnd)
-    unchecked = set(R._REGISTRY) - set(latest)
-    assert unchecked <= window | staged, (
-        f"every unchecked query needs a slot; "
-        f"missing={sorted(unchecked - (window | staged))}"
-    )
-    fresh = {n for n in staged if latest.get(n, 0) >= max(latest.values()) - 1}
-    assert not fresh, f"staged but freshly certified: {sorted(fresh)}"
 
 
 def test_python_datasource_split_pruning():

@@ -1013,7 +1013,7 @@ def test_udaf_kernels_grouped_by_scale_adaptive_bucket(spark):
     pmod(xxhash64(user_id), n) bucket, not raw user_id — one Python
     invocation per ~100k-row bucket instead of per ~13-row user (12 s →
     0.45 s for the cogrouped asof at sf0.1, identical output)."""
-    from cloudtrail_streamer_spark.operators.udfs import _kernel_buckets
+    from cloudtrail_streamer_spark.operators.udfs import _buckets_for_rows, _kernel_buckets
 
     plan = _plan(spark, "udaf_cogrouped_asof")
     assert "FlatMapCoGroupsInPandas" in plan
@@ -1029,13 +1029,11 @@ def test_udaf_kernels_grouped_by_scale_adaptive_bucket(spark):
     # keep every bucket's expected slice at <= target_rows, so the
     # per-kernel pandas frame (and hence worker memory) stays flat at
     # 100 TB instead of growing with the table. Verified across four
-    # decades of synthetic counts via the same derivation the footer
-    # feeds (the measured-RSS evidence at sf0.1/sf1/sf10 lives in
-    # OPTIMIZATION_r12.md §"kernel memory audit").
-    target = 100_000
+    # decades of synthetic counts through the row-count -> bucket step
+    # _kernel_buckets itself uses (the measured-RSS evidence at
+    # sf0.1/sf1/sf10 lives in OPTIMIZATION_r12.md §"kernel memory audit").
     for n in (10**5, 10**6, 10**7, 10**8):
-        buckets = max(16, -(-n // target))
-        assert n / buckets <= target
+        assert n / _buckets_for_rows(n) <= 100_000
 
 
 def test_median_quantile_single_percentile_buffer(spark):

@@ -39,7 +39,7 @@ def main() -> int:
     first_n = 0
     if argv and argv[0] == "--first":
         # Simulate the external driver's exact protocol: the FIRST N
-        # registry entries (the _WINDOW_PRIORITY slots), run in registry
+        # registry entries (the certification window), run in registry
         # order in ONE process — the strictest local replica of the
         # per-round capture, including any cross-query session-state
         # interactions (conf windows, scratch reuse) in driver order.
