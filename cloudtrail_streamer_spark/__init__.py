@@ -18,6 +18,7 @@ Design rules (SURVEY.md §1.2 / §4):
   tiebreaks.
 """
 
+from cloudtrail_streamer_spark import zipguard
 from cloudtrail_streamer_spark.session import get_session, configure
 from cloudtrail_streamer_spark.catalog import table, TABLES
 from cloudtrail_streamer_spark.registry import (
@@ -27,6 +28,10 @@ from cloudtrail_streamer_spark.registry import (
     all_oracles,
     get_spec,
 )
+
+# Python workers import this package to unpickle engine closures; from
+# then on their per-task importlib.invalidate_caches() skips unchanged zips.
+zipguard.install()
 
 __all__ = [
     "get_session",

@@ -13,6 +13,7 @@ applied. Only runtime-settable confs are touched here.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -71,15 +72,22 @@ BUILD_CONFS: dict[str, str] = {
 }
 
 
+# key -> error for every conf configure() could not set (latest error).
+CONF_ERRORS: dict[str, str] = {}
+
+
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable determinism confs to an existing session."""
+    """Apply runtime-settable determinism confs to an existing session.
+
+    A conf this build refuses at runtime does not fail the query path
+    (the session default must then already be right), but it is loud:
+    recorded in ``CONF_ERRORS`` and warned about."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # Conf not settable at runtime on this build — session defaults
-            # must already be correct; don't fail the query path.
-            pass
+        except Exception as e:
+            CONF_ERRORS[k] = str(e)
+            warnings.warn(f"could not set {k}={v}: {e}", RuntimeWarning, stacklevel=2)
     return spark
 
 

@@ -142,6 +142,13 @@ def deliver_partitions(
     spools to files keyed by (batch, partition) so local-mode output is
     collision-free and deterministic; a real ``boto3.client("kinesis")``
     needs no shared filesystem at all.
+
+    Inside ``foreachBatch``, pass the micro-batch as is and build the
+    ``pk``/``data`` projection once on the streaming DataFrame: then
+    each call costs exactly one Spark job and no per-batch plan
+    construction. The tasks run ``_send`` in a Python worker, which
+    imports this package and so, after its first two tasks, skips the
+    per-task zip re-read (``zipguard``).
     """
 
     def _send(rows) -> None:
@@ -176,15 +183,15 @@ def deliver_events_to_spool(spark: SparkSession, sf_dir: str) -> str:
     spool = tempfile.mkdtemp(prefix="cts_kinesis_spool_")
 
     payload = F.to_json(F.struct("event_id", "ts", "user_id", "event_type", "value", "props"))
+    # keyed once on the stream, not once per micro-batch (see
+    # cloudtrail._run_pipeline)
+    keyed = stream.select(F.col("user_id").cast("string").alias("pk"), payload.alias("data"))
 
     def deliver(batch_df: DataFrame, batch_id: int) -> None:
-        keyed = batch_df.select(
-            F.col("user_id").cast("string").alias("pk"), payload.alias("data")
-        )
-        deliver_partitions(keyed, spool, "cloudtrail-stream", batch_id)
+        deliver_partitions(batch_df, spool, "cloudtrail-stream", batch_id)
 
     q = (
-        stream.writeStream.foreachBatch(deliver)
+        keyed.writeStream.foreachBatch(deliver)
         .option("checkpointLocation", tempfile.mkdtemp(prefix="cts_ckpt_sink_"))
         .trigger(availableNow=True)
         .start()

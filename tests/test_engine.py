@@ -1024,3 +1024,65 @@ def test_containment_catches_truncation_excerpts(spark):
         assert r["containment"] >= r["jaccard"]
     seeded = {(r["id_a"], r["id_b"]) for r in rows if r["id_b"] == r["id_a"] + 1000000}
     assert len(seeded) >= 20, f"only {len(seeded)} seeded excerpt pairs flagged"
+
+
+def test_zip_archive_reread_only_when_changed(spark, tmp_path, monkeypatch):
+    """importlib.invalidate_caches() must not re-read an unchanged zip on
+    sys.path (PySpark's worker calls it before every task), but must
+    still pick up a rewritten one."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("m1.py", "X = 1\n")
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("m1").X == 1
+        reads = []
+        read = zipimport._read_directory
+        monkeypatch.setattr(
+            zipimport, "_read_directory", lambda a: (reads.append(a), read(a))[1]
+        )
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert reads.count(archive) == 0, "unchanged archive was re-read"
+
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("m1.py", "X = 1\n")
+            z.writestr("m2.py", "Y = 2\n")
+        importlib.invalidate_caches()
+        assert importlib.import_module("m2").Y == 2
+    finally:
+        for name in ("m1", "m2"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(archive, None)
+        zipimport._zip_directory_cache.pop(archive, None)
+
+    def probe(_):
+        import zipimport
+
+        import cloudtrail_streamer_spark  # noqa: F401
+
+        yield zipimport.zipimporter.invalidate_caches.__module__
+
+    got = spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect()
+    assert got == ["cloudtrail_streamer_spark.zipguard"]
+
+
+def test_configure_records_conf_errors(spark, monkeypatch):
+    """A conf configure() cannot set at runtime is recorded and warned
+    about, not swallowed."""
+    import warnings
+
+    from cloudtrail_streamer_spark import session
+
+    monkeypatch.setitem(session.RUNTIME_CONFS, "spark.sql.warehouse.dir", "/nonexistent")
+    monkeypatch.setattr(session, "CONF_ERRORS", {})
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        session.configure(spark)
+    assert list(session.CONF_ERRORS) == ["spark.sql.warehouse.dir"]
+    assert any("spark.sql.warehouse.dir" in str(w.message) for w in caught)

@@ -25,6 +25,16 @@ def _events_count(spark):
     return table(spark, SF, "events").count()
 
 
+def _events_by_type(spark):
+    return {
+        r["event_type"]: r["n"]
+        for r in table(spark, SF, "events")
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+
+
 def test_stream_files_equals_batch(spark):
     out = all_queries()["source_stream_files"](spark, SF)
     batch = (
@@ -187,14 +197,27 @@ def test_cloudtrail_pipeline_end_to_end(spark):
     chunked retrying delivery — per-type counts equal the source."""
     out = all_queries()["cloudtrail_pipeline_e2e"](spark, SF)
     got = {r["event_type"]: r["n"] for r in out.collect()}
-    want = {
-        r["event_type"]: r["n"]
-        for r in table(spark, SF, "events")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want
+    assert got == _events_by_type(spark)
+
+
+def test_replay_plan_built_once_per_stream(spark, monkeypatch):
+    """The dispatch/unwrap plan is built once on the stream, not once per
+    micro-batch inside foreachBatch, and still delivers every record."""
+    from cloudtrail_streamer_spark.streaming import cloudtrail
+
+    calls = []
+    real = cloudtrail.dispatch_unwrap
+
+    def counting(raw):
+        calls.append(raw.isStreaming)
+        return real(raw)
+
+    monkeypatch.setattr(cloudtrail, "dispatch_unwrap", counting)
+    logs = cloudtrail.write_cloudtrail_files(spark, SF, files=3, sns_wrap_odd=True)
+    out = cloudtrail._run_pipeline(spark, logs)
+    got = {r["event_type"]: r["n"] for r in out.collect()}
+    assert calls == [True], f"dispatch_unwrap calls (isStreaming): {calls}"
+    assert got == _events_by_type(spark)
 
 
 def test_kinesis_source_roundtrip_and_sharding(spark):
@@ -228,14 +251,7 @@ def test_sns_dispatch_delivers_all(spark):
     route both shapes and deliver every record exactly once."""
     out = all_queries()["cloudtrail_sns_dispatch"](spark, SF)
     got = {r["event_type"]: r["n"] for r in out.collect()}
-    want = {
-        r["event_type"]: r["n"]
-        for r in table(spark, SF, "events")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == want
+    assert got == _events_by_type(spark)
 
 
 def test_listener_captures_batch_metrics(spark):

@@ -7,6 +7,10 @@ fixture/certificate work) and min-of-N noop-sink execution time
 partial results. Usage:
 
     python tools/time_sweep.py out.jsonl sf_dir [sf_dir ...]
+
+Run it from the checkout root (Spark's Python workers import the engine
+from the working directory). ``SWEEP_FAMILIES=streaming`` sweeps only
+the streaming modules; ``SWEEP_ONLY=a,b`` limits it to named queries.
 """
 
 from __future__ import annotations
@@ -16,7 +20,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, so a second checkout times its own code
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
