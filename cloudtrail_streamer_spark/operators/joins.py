@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from cloudtrail_streamer_spark.catalog import table
 from cloudtrail_streamer_spark.registry import query
+from cloudtrail_streamer_spark.session import conf_scope
 
 _INNER_ORACLE = """
 SELECT o_orderkey, o_orderdate, o_totalprice, c_custkey, c_name, c_mktsegment
@@ -563,10 +564,7 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     from cloudtrail_streamer_spark.functions import cents
 
-    prior = {c: spark.conf.get(c, None) for c in _RUNTIME_BLOOM_CONFS}
-    try:
-        for c, v in _RUNTIME_BLOOM_CONFS.items():
-            spark.conf.set(c, v)
+    with conf_scope(spark, _RUNTIME_BLOOM_CONFS):
         high = o.where(F.col("o_orderpriority") == "2-HIGH").select("o_orderkey")
         df = (
             li.join(high, li.l_orderkey == high.o_orderkey)
@@ -580,12 +578,6 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         # are live: the memoized plan carries the injected bloom filter
         # and is what a later collect() executes.
         df._jdf.queryExecution().executedPlan()
-    finally:
-        for c, v in prior.items():
-            if v is None:
-                spark.conf.unset(c)
-            else:
-                spark.conf.set(c, v)
     return df
 
 

@@ -43,6 +43,7 @@ from cloudtrail_streamer_spark.operators.snapshot_table import (
     spool,
 )
 from cloudtrail_streamer_spark.registry import query
+from cloudtrail_streamer_spark.session import conf_scope
 from cloudtrail_streamer_spark.streaming.harness import await_or_raise
 
 
@@ -230,7 +231,7 @@ GROUP BY n_name
 ORDER BY n_name
 """
 
-_CBO_CONFS = ("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled")
+_CBO_CONFS = {"spark.sql.cbo.enabled": "true", "spark.sql.cbo.joinReorder.enabled": "true"}
 
 
 def _cbo_tag(sf_dir: str) -> str:
@@ -271,10 +272,7 @@ def join_reorder_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).saveAsTable(name)
         spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS")
 
-    prior = {c: spark.conf.get(c, None) for c in _CBO_CONFS}
-    try:
-        for c in _CBO_CONFS:
-            spark.conf.set(c, "true")
+    with conf_scope(spark, _CBO_CONFS):
         df = spark.sql(
             f"""
             SELECT n_name,
@@ -291,14 +289,8 @@ def join_reorder_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Materialize the physical plan while CBO is on: QueryExecution
         # memoizes optimized/spark plans, so the reordered plan survives
-        # the conf restore below and is what a later collect() executes.
+        # the scope's conf restore and is what a later collect() executes.
         df._jdf.queryExecution().executedPlan()
-    finally:
-        for c, v in prior.items():
-            if v is None:
-                spark.conf.unset(c)
-            else:
-                spark.conf.set(c, v)
     return df
 
 

@@ -33,17 +33,23 @@ from pyspark.sql import functions as F
 from cloudtrail_streamer_spark.catalog import table
 from cloudtrail_streamer_spark.functions import cents
 from cloudtrail_streamer_spark.registry import query
+from cloudtrail_streamer_spark.session import conf_scope
 
 
-def _ps():
+def _ps(spark: SparkSession):
     """Import pyspark.pandas lazily (it pulls in plotting deps) and
-    return (module, option_context pinning the scale-safe index type)."""
+    return a conf scope pinning the scale-safe index type.
+    pandas-on-Spark keeps its options as JSON session confs; its own
+    ``option_context`` restores a previously unset option by SETTING it
+    to the default, which leaks the conf into later queries."""
     import warnings
 
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
-        import pyspark.pandas as ps
-    return ps, ps.option_context("compute.default_index_type", "distributed")
+        import pyspark.pandas  # noqa: F401
+    return conf_scope(
+        spark, {"pandas_on_Spark.compute.default_index_type": '"distributed"'}
+    )
 
 
 _PS_GROUPBY_ORACLE = """
@@ -68,8 +74,7 @@ def ps_groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select(
         "o_orderpriority", cents("o_totalprice").alias("price_c")
     )
-    ps, ctx = _ps()
-    with ctx:
+    with _ps(spark):
         pdf = o.pandas_api()
         out = (
             pdf.groupby("o_orderpriority")
@@ -112,8 +117,7 @@ def ps_merge_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey", "c_nationkey", cents("c_acctbal").alias("acctbal_c")
     )
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    ps, ctx = _ps()
-    with ctx:
+    with _ps(spark):
         m = c.pandas_api().merge(
             n.pandas_api(), left_on="c_nationkey", right_on="n_nationkey"
         )
@@ -154,8 +158,7 @@ def ps_pivot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select(
         "o_orderpriority", "o_orderstatus", "o_orderkey"
     )
-    ps, ctx = _ps()
-    with ctx:
+    with _ps(spark):
         pt = (
             o.pandas_api()
             .pivot_table(
@@ -201,8 +204,7 @@ def ps_sort_head(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", cents("o_totalprice").alias("price_c")
     )
-    ps, ctx = _ps()
-    with ctx:
+    with _ps(spark):
         top = (
             o.pandas_api()
             .sort_values(["price_c", "o_orderkey"], ascending=[False, True])

@@ -917,8 +917,8 @@ def _topk_arrow_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     per block via join, applyInPandas per block), whose blk-join fanned
     every candidate embedding out ONCE PER PROBE through the shuffle
     and the Arrow boundary — 10x the necessary traffic. Measured A/B
-    at sf1 (min-of-3 warm, local[32], BENCH_DETAIL
-    ``llm_headline.sim_kernel_plan_choice``): join-fanout 1.10 s,
+    at sf1 (min-of-3 warm, local[32], last A/B in BASELINE.md "Closed
+    plan A/Bs"): join-fanout 1.10 s,
     cogroup (probes shipped separately, candidates still shuffled)
     0.45 s, this kernel 0.25 s — and flat from sf0.1r (0.26 s), i.e.
     the remaining cost is the Python boundary constant, not per-row.

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from cloudtrail_streamer_spark.catalog import table
 from cloudtrail_streamer_spark.operators.udfs import _ARN_SPARK, _UDF_ORACLE
 from cloudtrail_streamer_spark.registry import query
+from cloudtrail_streamer_spark.session import conf_scope
 
 
 @query("udf_sql_declarative", oracle=_UDF_ORACLE, survey_id="B-51-ext")
@@ -135,13 +136,10 @@ def sql_scripting_param(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns the empty frame with the same schema when the table is
     empty, exercising control flow, not just sequencing."""
     # Conf-window discipline (ADVICE r05): enable scripting only for the
-    # duration of the sql() call and restore the prior value, mirroring
-    # _RUNTIME_BLOOM_CONFS handling in joins.py — a leaked session conf
-    # changes parser behavior for every later query in the process.
-    prior = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
+    # duration of the sql() call — a leaked session conf changes parser
+    # behavior for every later query in the process.
     table(spark, sf_dir, "orders").createOrReplaceTempView("orders_script")
-    try:
+    with conf_scope(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
         """
         BEGIN
@@ -168,11 +166,6 @@ def sql_scripting_param(spark: SparkSession, sf_dir: str) -> DataFrame:
         END
         """
         )
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prior)
 
 
 _PIPE_ORACLE = """

@@ -1104,8 +1104,8 @@ def text_crossdoc_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
       3-agg collect_list   8.63 s
       this plan            3.26 s   (~1.2x DuckDB absolute, same run)
 
-    Three ideas compound (each measured in the committed A/B,
-    BENCH_DETAIL ``llm_headline.crossdoc_plan_choice``):
+    Three ideas compound (each measured in the last committed A/B,
+    BASELINE.md "Closed plan A/Bs"):
 
     1. TOKEN RECODE BEFORE WINDOW HASHING: tokens are hashed ONCE
        (``transform(arr, t -> xxhash64(t))`` — n string hashes per doc),
@@ -1176,7 +1176,7 @@ def text_crossdoc_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     #              map-side to |docs| rows; the final join is
     #              metadata-scale. Measured at sf1 (min-of-3 warm,
     #              local[32]): 3.26 s (r8 window plan) -> see
-    #              BENCH_DETAIL llm_headline.crossdoc_plan_choice.
+    #              BASELINE.md "Closed plan A/Bs".
     # null-text docs are already gone (filtered at da, above), exactly
     # as in the oracle's unnest
     nw = da.select(

@@ -308,29 +308,18 @@ def tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (overlapped with the lineitem scan) and the fact table never
     shuffles on orderkey; above it the hint is withheld and the plan
     degrades to the shuffle join, the only shape that survives when
-    even the filtered year is billions of rows. Setting
-    ``SPARK_GRAFT_Q5_ORDERS_HINT=0`` disables the routing (bench.py's
-    A/B uses it to isolate exactly this hint's contribution — an
-    explicit F.broadcast ignores autoBroadcastJoinThreshold, so a
-    threshold=-1 leg alone cannot).
+    even the filtered year is billions of rows. The last sf10 A/B of
+    this hint, the nation shrink below and a bucketed orderkey layout
+    is in BASELINE.md "Closed plan A/Bs".
 
-    r11 adds the transitive nation shrink (see the ``_q5_plan`` body
-    comment and ``_region_nation_keys``): customer and supplier are
+    r11 adds the transitive nation shrink (see the body comment and
+    ``_region_nation_keys``): customer and supplier are
     pre-filtered to the ASIA nationkeys the region predicate implies,
     scan-pushed as IN-lists and stats-gate-broadcast when the filtered
     slice fits — measured A/B in OPTIMIZATION_r11.md."""
     c = table(spark, sf_dir, "customer")
     o = table(spark, sf_dir, "orders")
     l = table(spark, sf_dir, "lineitem")
-    return _q5_plan(spark, sf_dir, l, o, c)
-
-
-def _q5_plan(spark: SparkSession, sf_dir: str, l, o, c) -> DataFrame:
-    """Q5 body with injectable lineitem/orders/customer relations so
-    bench.py can A/B alternative physical layouts (e.g. bucketed,
-    co-located on orderkey) through the identical logical plan."""
-    import os as _os
-
     s = table(spark, sf_dir, "supplier")
     n = table(spark, sf_dir, "nation")
     r = table(spark, sf_dir, "region")
@@ -339,9 +328,7 @@ def _q5_plan(spark: SparkSession, sf_dir: str, l, o, c) -> DataFrame:
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
     )
-    if _os.environ.get("SPARK_GRAFT_Q5_ORDERS_HINT", "1") != "0" and _dim_fits_broadcast(
-        sf_dir, "orders", "o_orderdate", "1996-01-01", "1997-01-01"
-    ):
+    if _dim_fits_broadcast(sf_dir, "orders", "o_orderdate", "1996-01-01", "1997-01-01"):
         o_filt = F.broadcast(o_filt)
     # r11 transitive nation shrink (guide §3.2, the Q2/Q8 eu_supp/
     # cust_nations pattern applied to Q5): r_name='ASIA' constrains
@@ -354,13 +341,8 @@ def _q5_plan(spark: SparkSession, sf_dir: str, l, o, c) -> DataFrame:
     # probe. With the filtered slice under the 512 MB stats gate the
     # customer join becomes a broadcast probe (no fact-side exchange
     # at all); above the gate — 100 TB — the hint is withheld and the
-    # shuffle join moves a 5×-smaller dim. SPARK_GRAFT_Q5_NATION_SHRINK=0
-    # disables the rewrite (bench/tests A/B the unshrunk plan with it).
-    asia = (
-        _region_nation_keys(sf_dir, "ASIA")
-        if _os.environ.get("SPARK_GRAFT_Q5_NATION_SHRINK", "1") != "0"
-        else None
-    )
+    # shuffle join moves a 5×-smaller dim.
+    asia = _region_nation_keys(sf_dir, "ASIA")
     if asia:
         c = c.where(F.col("c_nationkey").isin(*asia))
         if _keyed_dim_fits_broadcast(sf_dir, "customer", "c_nationkey", len(asia)):

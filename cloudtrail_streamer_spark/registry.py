@@ -106,6 +106,18 @@ _CHANGED: list[str] = [
     "source_kinesis_stub",
     "source_kinesis_custom_stream",
     "source_custom_datasource",
+    # q5's plan seam folded back in; conf windows moved onto conf_scope
+    # (the ps_* ops: pandas-on-Spark's option_context leaked its conf)
+    "tpch_q5_local_supplier",
+    "join_runtime_bloom",
+    "join_reorder_cbo",
+    "sql_scripting_param",
+    "source_state_store_reader",
+    "stream_upsert_keyed",
+    "ps_groupby_agg",
+    "ps_merge_join",
+    "ps_pivot_table",
+    "ps_sort_head",
 ]
 
 

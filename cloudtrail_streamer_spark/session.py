@@ -12,6 +12,7 @@ applied. Only runtime-settable confs are touched here.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import warnings
 
@@ -89,6 +90,27 @@ def configure(spark: SparkSession) -> SparkSession:
             CONF_ERRORS[k] = str(e)
             warnings.warn(f"could not set {k}={v}: {e}", RuntimeWarning, stacklevel=2)
     return spark
+
+
+@contextlib.contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` for the duration of the block, then put back each
+    prior value, or unset the key if it had none — so no query leaks a
+    session conf into the next one. A plan that must keep the scoped
+    behaviour is forced through the optimizer inside the block
+    (QueryExecution memoizes it)."""
+    # conf values are strings, so None unambiguously means "not set"
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_session(app_name: str = "cloudtrail-streamer-spark") -> SparkSession:

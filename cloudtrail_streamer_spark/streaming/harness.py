@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cloudtrail_streamer_spark.catalog import table
+from cloudtrail_streamer_spark.session import conf_scope
 
 EVENTS_SCHEMA = (
     "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, "
@@ -225,12 +226,8 @@ def suggest_stream_partitions(source_dir: str, spark: SparkSession) -> int:
     cutting the per-batch commit constant 8x (measured:
     stream_stream_join sf0.01 gate 105 s -> see OPTIMIZATION_r11.md);
     a production 1 GB-per-delivery feed derives 32+, and a real cluster
-    keeps its configured ceiling. ``SPARK_GRAFT_STREAM_SHUFFLE``
-    overrides the derivation outright."""
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
+    keeps its configured ceiling."""
     session_val = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    if env:
-        return max(1, min(int(env), session_val))
     try:
         sizes = [
             os.path.getsize(os.path.join(source_dir, f))
@@ -243,10 +240,6 @@ def suggest_stream_partitions(source_dir: str, spark: SparkSession) -> int:
     return max(4, min(-(-biggest // (32 * 1024 * 1024)), session_val))
 
 
-import contextlib
-
-
-@contextlib.contextmanager
 def stream_shuffle_scope(spark: SparkSession, source_dir: str):
     """Scoped shuffle-partition override for streaming queries started
     OUTSIDE :func:`run_stream_to_memory` (foreachBatch sinks, state-
@@ -254,16 +247,10 @@ def stream_shuffle_scope(spark: SparkSession, source_dir: str):
     the duration of the block and restores the session value after —
     the partition count is locked into the query at start, so the
     restore cannot affect a running stream."""
-    conf = "spark.sql.shuffle.partitions"
-    prior = spark.conf.get(conf, None)
-    spark.conf.set(conf, str(suggest_stream_partitions(source_dir, spark)))
-    try:
-        yield
-    finally:
-        if prior is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prior)
+    return conf_scope(
+        spark,
+        {"spark.sql.shuffle.partitions": str(suggest_stream_partitions(source_dir, spark))},
+    )
 
 
 def run_stream_to_memory(

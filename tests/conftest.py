@@ -146,11 +146,18 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
 
 
 def run_pair(spark, con, name: str, sf_dir: str = SF_DIR):
-    """Run one registry query + its oracle; assert exact match."""
+    """Run one registry query + its oracle; assert exact match, and that
+    the query left the session conf exactly as it found it."""
     from cloudtrail_streamer_spark.registry import all_oracles, all_queries
 
     q = all_queries()[name]
+    before = spark.conf.getAll
     sdf = q(spark, sf_dir).toPandas()
+    after = spark.conf.getAll
+    leaked = sorted(k for k in before.keys() | after.keys() if before.get(k) != after.get(k))
+    assert not leaked, f"{name}: session conf changed: " + ", ".join(
+        f"{k}: {before.get(k)!r} -> {after.get(k)!r}" for k in leaked
+    )
     # op-local persisted subtrees are per-execution scratch; across a
     # ~300-query session they otherwise accumulate GBs of storage
     # (ADVICE r07 cache-hygiene theme — drive_entry.py does the same)

@@ -1086,3 +1086,75 @@ def test_configure_records_conf_errors(spark, monkeypatch):
         session.configure(spark)
     assert list(session.CONF_ERRORS) == ["spark.sql.warehouse.dir"]
     assert any("spark.sql.warehouse.dir" in str(w.message) for w in caught)
+
+
+def test_bench_contract_without_spark():
+    """bench.py's contract, checked without a SparkSession: perfbench
+    imports ``bench.HEADLINE`` (same 14 names, same order), every query
+    the decade table names is registered, ``import bench`` starts no
+    session, and for a fully populated detail the compact stdout line
+    keeps its key set and stays inside the 1900-byte tail window."""
+    import json
+    import subprocess
+    import sys
+
+    import bench
+
+    assert bench.HEADLINE == [
+        "scan_pruned",
+        "agg_group_q1",
+        "join_inner_hash",
+        "join_broadcast",
+        "join_asof",
+        "win_rank",
+        "top_n_per_group",
+        "agg_rollup",
+        "text_tfidf",
+        "dedup_exact",
+        "sim_search_topk",
+        "stream_tumbling",
+        "tpch_q3_shipping_priority",
+        "tpch_q5_local_supplier",
+    ]
+    named = {n for rows in bench.DECADES.values() for _, _, qs, _ in rows for n in qs}
+    assert named >= set(bench.LLM_SF10)
+    assert named - set(all_queries()) == set()
+
+    probe = (
+        "import bench\n"
+        "from pyspark import SparkContext\n"
+        "assert SparkContext._active_spark_context is None\n"
+    )
+    subprocess.run([sys.executable, "-c", probe], cwd=bench.ROOT, check=True)
+
+    secs = {n: 123.456 for n in bench.HEADLINE}
+    detail = {
+        "value": 1234.567,
+        "queries": secs,
+        "sf": 0.1,
+        "duckdb": secs,
+        "spark_job_floor_sec": 0.123,
+        "load_suspect": list(bench.HEADLINE),
+        "batched_wall_clock_sec": 12.345,
+        "duckdb_batched_wall_clock_sec": 12.345,
+        "marginal_ratio_sf1": {n: 123.45 for n in bench.SF1_QUERIES},
+        "sf10": {"marginal_ratio_sf10": {n: 123.45 for n in bench.SF10_QUERIES}},
+    }
+    line = bench.compact_line(detail, bench.ROOT + "/BENCH_DETAIL.json")
+    assert len(line) < 1900, len(line)
+    assert set(json.loads(line)) == {
+        "metric",
+        "value",
+        "unit",
+        "queries",
+        "sf",
+        "duckdb_total_sec",
+        "spark_job_floor_sec",
+        "load_suspect",
+        "batched_wall_clock_sec",
+        "duckdb_batched_wall_clock_sec",
+        "batched_ratio",
+        "marginal_sf1",
+        "marginal_sf10",
+        "detail",
+    }

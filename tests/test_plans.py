@@ -892,35 +892,29 @@ def test_q5_hints_survive_disabled_size_broadcasts(spark, monkeypatch):
     Since the r11 nation shrink that is all five joins at this sf —
     nation + region (explicit), the time-filtered orders dim, and the
     ASIA-shrunk customer/supplier slices (all three stats-routed from
-    parquet footer metadata). With the shrink disabled
-    (SPARK_GRAFT_Q5_NATION_SHRINK=0) the r10 shape is preserved: three
-    hint broadcasts, customer/supplier degrade to shuffle joins — the
-    100 TB fallback for the sf-scaled tables. If a refactor drops any
-    routing, a count changes."""
-    confs = (
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold",
-    )
-    prior = {c: spark.conf.get(c, None) for c in confs}
-    for c in confs:
-        spark.conf.set(c, "-1")
-    try:
+    parquet footer metadata). With the stats gate refusing the shrunk
+    slices — the path production takes when they exceed 512 MB — three
+    hint broadcasts remain and customer/supplier degrade to shuffle
+    joins, the 100 TB fallback for the sf-scaled tables. If a refactor
+    drops any routing, a count changes."""
+    from cloudtrail_streamer_spark.operators import tpch
+    from cloudtrail_streamer_spark.session import conf_scope
+
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+    }
+    with conf_scope(spark, confs):
         tree = _nodes(spark, "tpch_q5_local_supplier")
-        monkeypatch.setenv("SPARK_GRAFT_Q5_NATION_SHRINK", "0")
-        tree_noshrink = _nodes(spark, "tpch_q5_local_supplier")
-    finally:
-        for c, v in prior.items():
-            if v is None:
-                spark.conf.unset(c)
-            else:
-                spark.conf.set(c, v)
+        monkeypatch.setattr(tpch, "_keyed_dim_fits_broadcast", lambda *a: False)
+        tree_gated = _nodes(spark, "tpch_q5_local_supplier")
     assert tree.count("BroadcastHashJoin") == 5, tree
-    assert tree_noshrink.count("BroadcastHashJoin") == 3, tree_noshrink
-    # unshrunk customer/supplier legs fall back to shuffle joins — the
+    assert tree_gated.count("BroadcastHashJoin") == 3, tree_gated
+    # gated customer/supplier legs fall back to shuffle joins — the
     # 100 TB shape when even the filtered slices exceed the stats gate
     assert (
-        "SortMergeJoin" in tree_noshrink or "ShuffledHashJoin" in tree_noshrink
-    ), tree_noshrink
+        "SortMergeJoin" in tree_gated or "ShuffledHashJoin" in tree_gated
+    ), tree_gated
 
 
 def test_q5_nation_shrink_pushes_in_filters(spark):

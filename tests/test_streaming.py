@@ -824,18 +824,14 @@ def test_provider_class_load_error_is_retried(spark, monkeypatch):
     )
 
 
-def test_suggest_stream_partitions_scales_with_input(spark, tmp_path, monkeypatch):
+def test_suggest_stream_partitions_scales_with_input(spark, tmp_path):
     """r11 scale-adaptive state partitioning: the derivation must follow
     per-batch input volume — floor 4 for tiny replay files, ~1 per 32 MB
-    for big ones, never above the session's configured value — and the
-    env override must win outright (still session-capped)."""
-    import os
-
+    for big ones, never above the session's configured value."""
     from cloudtrail_streamer_spark.streaming.harness import (
         suggest_stream_partitions,
     )
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE", raising=False)
     session_val = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     tiny = tmp_path / "tiny"
@@ -848,9 +844,6 @@ def test_suggest_stream_partitions_scales_with_input(spark, tmp_path, monkeypatc
     with open(big / "events_0001.json", "wb") as f:
         f.truncate(200 * 1024 * 1024)  # sparse 200 MB -> ceil(200/32) = 7
     assert suggest_stream_partitions(str(big), spark) == min(7, session_val)
-
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "2")
-    assert suggest_stream_partitions(str(big), spark) == min(2, session_val)
 
 
 def test_stream_shuffle_scope_restores_session_conf(spark, tmp_path):

@@ -2,16 +2,19 @@
 
 The judge and the driver map survey ids to query names through this table,
 so it must never drift from `all_specs()` (VERDICT r02 "what's wrong #2").
-Run: ``python tools/gen_coverage.py`` (writes /root/repo/COVERAGE.md);
+Run: ``python tools/gen_coverage.py`` (writes COVERAGE.md in its checkout);
 ``tests/test_engine.py::test_coverage_md_matches_registry`` fails if the
 checked-in file differs from the generated one.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, so a second checkout renders its own registry
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from cloudtrail_streamer_spark.registry import all_specs
 
@@ -41,7 +44,7 @@ def render() -> str:
 
 
 if __name__ == "__main__":
-    out = "/root/repo/COVERAGE.md"
+    out = os.path.join(ROOT, "COVERAGE.md")
     with open(out, "w") as f:
         f.write(render())
     print(f"wrote {out}")

@@ -227,54 +227,3 @@ if __name__ == "__main__":
     print(ensure_rechunked())
     if "--sf10" in sys.argv:
         print(ensure_sf10())
-
-
-def ensure_bucketed_sf10(spark, sf10_dir: str):
-    """Bucketed/sorted-on-orderkey copies of sf10 lineitem+orders for the
-    q5 layout A/B (VERDICT r07 #7): 32 buckets on the join key on both
-    sides deletes the fact-side exchange (and the SMJ sort) from the
-    l-o join — the lakehouse table-layout lever a 100 TB deployment
-    would actually pull. Data is written ONCE per checkout (saveAsTable
-    into .benchdata/sf10_bucketed); later sessions re-register the
-    external bucketed tables by DDL (the in-memory catalog forgets them,
-    the files don't move). Returns the (lineitem, orders) table names or
-    None when anything is missing."""
-    import pyarrow.parquet as pq
-
-    out = os.path.join(os.path.dirname(sf10_dir.rstrip("/")), "sf10_bucketed")
-    names = {"lineitem": "bench_q5_lineitem_b", "orders": "bench_q5_orders_b"}
-    keys = {"lineitem": "l_orderkey", "orders": "o_orderkey"}
-    try:
-        os.makedirs(out, exist_ok=True)
-        for t, tbl in names.items():
-            loc = os.path.join(out, t)
-            done = os.path.join(out, f"_DONE_{t}")
-            if spark.catalog.tableExists(tbl):
-                continue
-            if os.path.isfile(done):
-                # re-register: DDL from the parquet schema (simpleString
-                # types round-trip for the flat TPC-H columns)
-                src = spark.read.parquet(loc)
-                cols = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}" for f in src.schema
-                )
-                spark.sql(
-                    f"CREATE TABLE {tbl} ({cols}) USING parquet "
-                    f"CLUSTERED BY ({keys[t]}) SORTED BY ({keys[t]}) "
-                    f"INTO 32 BUCKETS LOCATION '{loc}'"
-                )
-                continue
-            df = spark.read.parquet(os.path.join(sf10_dir, f"{t}.parquet"))
-            (
-                df.repartition(32, keys[t])
-                .write.bucketBy(32, keys[t])
-                .sortBy(keys[t])
-                .option("path", loc)
-                .mode("overwrite")
-                .saveAsTable(tbl)
-            )
-            with open(done, "w") as f:
-                f.write("ok\n")
-        return names["lineitem"], names["orders"]
-    except Exception:
-        return None

@@ -21,10 +21,12 @@ from __future__ import annotations
 import collections
 import contextlib
 import io
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, so a second checkout drives its own code
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 

@@ -78,6 +78,8 @@ def build_skew_join(spark, sf_dir: str):
 
 
 def run(spark, sf_dir: str, skew_on: bool) -> tuple[float, str]:
+    from cloudtrail_streamer_spark.session import conf_scope
+
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
@@ -94,10 +96,7 @@ def run(spark, sf_dir: str, skew_on: bool) -> tuple[float, str]:
         # keep AQE from coalescing everything into one partition first
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "256KB",
     }
-    prior = {c: spark.conf.get(c, None) for c in confs}
-    for c, v in confs.items():
-        spark.conf.set(c, v)
-    try:
+    with conf_scope(spark, confs):
         df = build_skew_join(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()  # warm: plan + codegen
         best = float("inf")
@@ -111,12 +110,6 @@ def run(spark, sf_dir: str, skew_on: bool) -> tuple[float, str]:
         # grouped rows, so the driver cost is nil
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        for c, v in prior.items():
-            if v is None:
-                spark.conf.unset(c)
-            else:
-                spark.conf.set(c, v)
     return best, plan
 
 
