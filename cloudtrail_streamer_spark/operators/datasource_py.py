@@ -31,6 +31,7 @@ results are identical, just unpruned.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,6 +50,7 @@ from pyspark.sql.datasource import (
 from cloudtrail_streamer_spark.streaming.harness import await_or_raise
 from cloudtrail_streamer_spark.catalog import table
 from cloudtrail_streamer_spark.registry import query
+from cloudtrail_streamer_spark.streaming.sinks import put_records_chunked
 
 REGIONS = ["us-east-1", "us-west-2", "eu-west-1", "ap-south-1"]
 EVENT_NAMES = [
@@ -315,15 +317,33 @@ class _ChunkCommit(WriterCommitMessage):
         self.chunks = chunks  # [(n_records, n_bytes), ...]
 
 
+def _manifest(messages) -> dict:
+    """Fold every task's receipts into one manifest's totals."""
+    chunks = [c for m in messages if m is not None for c in m.chunks]
+    return {
+        "n_chunks": len(chunks),
+        "n_records": sum(c[0] for c in chunks),
+        "max_chunk_records": max((c[0] for c in chunks), default=0),
+        "max_chunk_bytes": max((c[1] for c in chunks), default=0),
+    }
+
+
+def _write_json(path: str, obj: dict) -> None:
+    with open(path, "w") as fh:
+        json.dump(obj, fh)
+
+
 class _KinesisStubWriter(DataSourceWriter):
     """Executor-side chunked delivery with the upstream forwarder's
-    limits (A-8: ≤500 records and ≤5 MB per PutRecords call — here a
-    256 KiB test-scale byte cap, same mechanism). ``write`` flushes a
-    gzipped JSON-lines chunk whenever EITHER cap would overflow and
-    returns the per-chunk receipts; the driver-side ``commit`` runs
-    once, only if every task succeeded — the transactional half the
-    upstream Lambda lacks. ``abort`` removes this attempt's files, so a
-    retried job cannot double-deliver."""
+    limits (A-8: ≤500 records and ≤5 MB per PutRecords call). The writer
+    is itself a PutRecords client of ``sinks.put_records_chunked`` — the
+    one chunk loop — whose ``BYTE_CAP`` client parameter is a 256 KiB
+    test-scale cap (same mechanism). Each ``put_records`` call writes
+    one gzipped JSON-lines chunk and records its ``(n_records,
+    n_bytes)`` receipt; ``write`` returns the task's receipts. The
+    driver-side ``commit`` runs once, only if every task succeeded — the
+    transactional half the upstream Lambda lacks. ``abort`` removes this
+    attempt's files, so a retried job cannot double-deliver."""
 
     RECORD_CAP = 500
     BYTE_CAP = 256 * 1024
@@ -333,57 +353,27 @@ class _KinesisStubWriter(DataSourceWriter):
         self.run_id = options.get("run_id", "r0")
 
     def write(self, iterator):
+        self.chunks: list[tuple[int, int]] = []
+        lines = ((json.dumps(row.asDict(), default=str) + "\n").encode() for row in iterator)
+        put_records_chunked(self, self.run_id, ({"Data": d, "PartitionKey": ""} for d in lines))
+        return _ChunkCommit(self.chunks)
+
+    def put_records(self, StreamName: str, Records: list[dict]) -> dict:  # noqa: N803
         import gzip
-        import json
-        import os
         import uuid
 
-        chunks: list[tuple[int, int]] = []
-        buf: list[bytes] = []
-        nbytes = 0
-
-        def flush():
-            nonlocal buf, nbytes
-            if not buf:
-                return
-            name = os.path.join(
-                self.path, f"chunk_{self.run_id}_{uuid.uuid4().hex}.json.gz"
-            )
-            with gzip.open(name, "wb") as fh:
-                fh.writelines(buf)
-            chunks.append((len(buf), nbytes))
-            buf, nbytes = [], 0
-
-        for row in iterator:
-            rec = (json.dumps(row.asDict(), default=str) + "\n").encode()
-            if buf and (
-                len(buf) >= self.RECORD_CAP or nbytes + len(rec) > self.BYTE_CAP
-            ):
-                flush()
-            buf.append(rec)
-            nbytes += len(rec)
-        flush()
-        return _ChunkCommit(chunks)
+        name = os.path.join(self.path, f"chunk_{self.run_id}_{uuid.uuid4().hex}.json.gz")
+        with gzip.open(name, "wb") as fh:
+            fh.writelines(r["Data"] for r in Records)
+        self.chunks.append((len(Records), sum(len(r["Data"]) for r in Records)))
+        return {"FailedRecordCount": 0}
 
     def commit(self, messages):
-        import json
-        import os
-
-        chunks = [c for m in messages if m is not None for c in m.chunks]
-        with open(os.path.join(self.path, f"_MANIFEST_{self.run_id}.json"), "w") as fh:
-            json.dump(
-                {
-                    "n_chunks": len(chunks),
-                    "n_records": sum(c[0] for c in chunks),
-                    "max_chunk_records": max((c[0] for c in chunks), default=0),
-                    "max_chunk_bytes": max((c[1] for c in chunks), default=0),
-                },
-                fh,
-            )
+        man = os.path.join(self.path, f"_MANIFEST_{self.run_id}.json")
+        _write_json(man, _manifest(messages))
 
     def abort(self, messages):
         import glob
-        import os
 
         for f in glob.glob(os.path.join(self.path, f"chunk_{self.run_id}_*.json.gz")):
             os.remove(f)
@@ -414,7 +404,6 @@ def sink_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame
     carries are exact: delivered records == source rows, every chunk
     within both caps, chunk count consistent with the caps."""
     import glob
-    import json as _json
 
     from cloudtrail_streamer_spark.catalog import scratch_dir
     from cloudtrail_streamer_spark.session import configure
@@ -434,10 +423,8 @@ def sink_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame
         "run_id", str(os.getpid())
     ).mode("append").save()
 
-    with open(
-        os.path.join(out, f"_MANIFEST_{os.getpid()}.json")
-    ) as fh:
-        man = _json.load(fh)
+    with open(os.path.join(out, f"_MANIFEST_{os.getpid()}.json")) as fh:
+        man = json.load(fh)
     redelivered = spark.read.json(
         os.path.join(out, "*.json.gz"), schema="event_id LONG, event_type STRING, value DOUBLE"
     )
@@ -467,7 +454,8 @@ def sink_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame
 
 class _KinesisStubStreamWriter(_KinesisStubWriter, DataSourceStreamWriter):
     """The streaming half of the sink: ``write`` (inherited) chunks each
-    micro-batch partition under the same caps; ``commit(messages,
+    micro-batch partition through the same client and caps; the one
+    manifest fold (``_manifest``) serves both commits. ``commit(messages,
     batchId)`` writes ONE epoch manifest per batch and — the
     exactly-once upgrade — refuses to re-commit an epoch whose manifest
     already exists, so a batch replayed after a crash between sink
@@ -477,24 +465,10 @@ class _KinesisStubStreamWriter(_KinesisStubWriter, DataSourceStreamWriter):
     code)."""
 
     def commit(self, messages, batchId: int):  # noqa: N803 (Spark API name)
-        import json
-        import os
-
         man = os.path.join(self.path, f"_EPOCH_{batchId}.json")
         if os.path.exists(man):
             return  # replayed epoch: already delivered, drop duplicates
-        chunks = [c for m in messages if m is not None for c in m.chunks]
-        with open(man, "w") as fh:
-            json.dump(
-                {
-                    "batch_id": batchId,
-                    "n_chunks": len(chunks),
-                    "n_records": sum(c[0] for c in chunks),
-                    "max_chunk_records": max((c[0] for c in chunks), default=0),
-                    "max_chunk_bytes": max((c[1] for c in chunks), default=0),
-                },
-                fh,
-            )
+        _write_json(man, {"batch_id": batchId, **_manifest(messages)})
 
     def abort(self, messages, batchId: int):  # noqa: N803
         _KinesisStubWriter.abort(self, messages)
@@ -513,7 +487,6 @@ def sink_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated domain, caps held per chunk, one manifest per epoch.
     Rows-only driver tier (epoch/chunk boundaries are physical)."""
     import glob
-    import json as _json
 
     from cloudtrail_streamer_spark.catalog import scratch_dir
     from cloudtrail_streamer_spark.session import configure
@@ -547,7 +520,7 @@ def sink_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.stop()
         cycles += 1
         mans = [
-            _json.load(open(f))
+            json.load(open(f))
             for f in glob.glob(os.path.join(out, "_EPOCH_*.json"))
         ]
         if sum(m["n_records"] for m in mans) >= n_total:

@@ -118,6 +118,20 @@ _CHANGED: list[str] = [
     "ps_merge_join",
     "ps_pivot_table",
     "ps_sort_head",
+    # one Kinesis delivery core (chunk loop, executor send, shard reader,
+    # readback), and run_stream_to_memory on conf_scope
+    "sink_fanout_dual",
+    "sink_kinesis_custom_stream",
+    "sink_python_datasource_writer",
+    "sink_python_stream_writer",
+    "source_stream_files",
+    "stream_watermark_late",
+    "stream_dedup_stateful",
+    "stream_agg_update",
+    "stream_custom_state",
+    "stream_stream_join",
+    "stream_stream_join_cert",
+    "stream_transform_with_state",
 ]
 
 

@@ -14,8 +14,9 @@ Maps the reference operators 1:1 (upstream ``main.go`` approx):
 - A-7 envelope parse    → ``from_json`` with explicit envelope schema +
                           ``explode`` (records kept as raw JSON strings,
                           exactly the reference's ``json.RawMessage``)
-- A-8..A-10 sink        → sinks.deliver_partitions via foreachBatch
-                          (executor-side, nothing collected)
+- A-8..A-10 sink        → sinks.deliver_stream: foreachBatch over
+                          deliver_partitions (executor-side, nothing
+                          collected)
 
 The one semantic upgrade over the reference: records stay opaque AND a
 parsed analytics view is available from the same plan (SURVEY.md §1.2
@@ -35,8 +36,12 @@ from pyspark.sql import functions as F
 
 from cloudtrail_streamer_spark.catalog import table
 from cloudtrail_streamer_spark.registry import query
-from cloudtrail_streamer_spark.streaming.harness import await_or_raise, flatten_partitioned
-from cloudtrail_streamer_spark.streaming.sinks import deliver_partitions
+from cloudtrail_streamer_spark.streaming.harness import flatten_partitioned
+from cloudtrail_streamer_spark.streaming.sinks import (
+    DELIVERED_COUNTS_ORACLE,
+    delivered_counts,
+    deliver_stream,
+)
 
 ENVELOPE_SCHEMA = "STRUCT<Records: ARRAY<STRING>>"
 # SNS notification envelope (A-3): the S3/CloudTrail body rides inside
@@ -139,14 +144,15 @@ def dispatch_unwrap(raw: DataFrame) -> DataFrame:
 
 def _run_pipeline(spark: SparkSession, logs_dir: str) -> DataFrame:
     """Shared A-4..A-10 tail: stream the log files, dispatch/unwrap,
-    deliver through the executor-side chunked retrying Kinesis writer,
-    read the spool back and count per event_type.
+    deliver through the executor-side chunked retrying Kinesis writer
+    (``sinks.deliver_stream``), read the spool back and count per
+    event_type.
 
     The dispatch/unwrap/key plan is built once, on the streaming
-    DataFrame, so each micro-batch arrives already keyed and ``deliver``
-    only runs the one delivery job: no batch pays the ~60-75 ms of Py4J
-    DataFrame construction and re-analysis that building the plan
-    inside ``foreachBatch`` costs (4-CPU host)."""
+    DataFrame, so each micro-batch arrives already keyed and only runs
+    the one delivery job: no batch pays the ~60-75 ms of Py4J DataFrame
+    construction and re-analysis that building the plan inside
+    ``foreachBatch`` costs (4-CPU host)."""
     stream = (
         spark.readStream.format("text")
         .option("maxFilesPerTrigger", 1)
@@ -156,41 +162,11 @@ def _run_pipeline(spark: SparkSession, logs_dir: str) -> DataFrame:
         F.col("parsed.user_id").cast("string").alias("pk"),
         F.col("record").alias("data"),
     )
-    spool = tempfile.mkdtemp(prefix="cts_ct_spool_")
-
-    def deliver(batch_df: DataFrame, batch_id: int) -> None:
-        deliver_partitions(batch_df, spool, "cloudtrail-stream", batch_id)
-
-    q = (
-        keyed.writeStream.foreachBatch(deliver)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="cts_ckpt_ct_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_raise(q, "cloudtrail_pipeline_e2e", 600.0)
-
-    delivered = spark.read.json(spool)
-    return (
-        delivered.select(F.get_json_object("data", "$.event_type").alias("event_type"))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    spool = deliver_stream(keyed, "ct", "cloudtrail_pipeline_e2e")
+    return delivered_counts(spark.read.json(spool))
 
 
-# Delivered-count certificate (VERDICT r09 #5, the sink_python_stream_writer
-# pattern): the pipeline is lossless and exactly-once end-to-end, so the
-# per-type DELIVERED counts read back from the spool must equal the source
-# events table's per-type counts — which a SQL oracle owns exactly. A drop,
-# duplicate delivery, unwrap bug, or SNS mis-dispatch shows up as a hash
-# mismatch in the driver record, upgrading both E2E rows R -> H.
-_DELIVERED_ORACLE = """
-SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
-FROM events
-GROUP BY event_type
-"""
-
-
-@query("cloudtrail_pipeline_e2e", oracle=_DELIVERED_ORACLE, survey_id="A-2..A-10")
+@query("cloudtrail_pipeline_e2e", oracle=DELIVERED_COUNTS_ORACLE, survey_id="A-2..A-10")
 def cloudtrail_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole reference, one query (Path 1, S3-direct): CloudTrail-
     shaped .json.gz files streamed in, Records unwrapped, delivered
@@ -198,20 +174,21 @@ def cloudtrail_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     awsRegion-analog user_id), spool read back and counted per
     event_type. Tier H since r10: the delivered counts hash-compare
     against the source counts the oracle computes (see
-    _DELIVERED_ORACLE above; also asserted in tests/test_streaming.py)."""
+    sinks.DELIVERED_COUNTS_ORACLE; also asserted in
+    tests/test_streaming.py)."""
     logs_dir = write_cloudtrail_files(spark, sf_dir)
     return _run_pipeline(spark, logs_dir)
 
 
-@query("cloudtrail_sns_dispatch", oracle=_DELIVERED_ORACLE, survey_id="A-2/A-3")
+@query("cloudtrail_sns_dispatch", oracle=DELIVERED_COUNTS_ORACLE, survey_id="A-2/A-3")
 def cloudtrail_sns_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Path 2 + dispatch: a MIXED feed where odd files arrive as SNS
     notification envelopes and even files S3-direct. Per-record sniff
     routes each body (A-2), SNS bodies are unwrapped from Message (A-3),
     then the identical A-4..A-10 pipeline runs. Tier H since r10: the
     per-type delivered counts must equal the source regardless of
-    envelope mix — the same _DELIVERED_ORACLE certificate as Path 1, so
-    a dispatch bug that drops or double-delivers SNS bodies is a driver
-    hash mismatch."""
+    envelope mix — the same DELIVERED_COUNTS_ORACLE certificate as Path
+    1, so a dispatch bug that drops or double-delivers SNS bodies is a
+    driver hash mismatch."""
     logs_dir = write_cloudtrail_files(spark, sf_dir, sns_wrap_odd=True)
     return _run_pipeline(spark, logs_dir)

@@ -253,6 +253,31 @@ def stream_shuffle_scope(spark: SparkSession, source_dir: str):
     )
 
 
+def run_to_completion(writer, name: str, tag: str, timeout_sec: float = 600.0):
+    """Start ``writer`` (a configured ``DataStreamWriter``) as an
+    AvailableNow query on a fresh ``cts_ckpt_{tag}_*`` checkpoint, wait
+    for it through :func:`await_or_raise`, and return the terminated
+    query. The checkpoint is removed however the query ends: every
+    caller starts a fresh stream, so a finished checkpoint is dead
+    weight on disk."""
+    ckpt = tempfile.mkdtemp(prefix=f"cts_ckpt_{tag}_")
+    try:
+        q = (
+            writer.option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_or_raise(q, name, timeout_sec)
+        return q
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+_CHANGELOG_CONF = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+
 def run_stream_to_memory(
     stream_df: DataFrame,
     name: str,
@@ -275,93 +300,49 @@ def run_stream_to_memory(
     ``source_dir``: the replay-file directory feeding the stream, when
     the caller has one — enables the scale-adaptive state-partition
     derivation (:func:`suggest_stream_partitions`). None leaves the
-    session's shuffle-partition setting untouched. Either way the prior
-    session value is restored after the query terminates; results are
-    partition-count independent (all declared outputs are aggregates,
-    watermarks or batch counts)."""
+    session's shuffle-partition setting untouched. Every conf is set
+    through ``conf_scope``, so the prior session values come back after
+    the query terminates; results are partition-count independent (all
+    declared outputs are aggregates, watermarks or batch counts).
+
+    State backend: RocksDB keeps streaming state on local disk instead
+    of executor heap — at 100 TB a session-window or stream-stream-join
+    state can exceed memory, and RocksDB (plus its changelog in the
+    checkpoint) is the production answer. If the JVM cannot load the
+    provider (older builds), the inner scope's exit restores the prior
+    provider and the query runs once more on it, so the harness never
+    fails on the backend choice itself. Changelog checkpointing (r10,
+    the root-cause follow-up to VERDICT r09 "What's wrong" #1): with
+    full-snapshot checkpointing every commit synchronously creates a
+    RocksDB snapshot — the path the r9 commit storm interrupted
+    (CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT under host load); with the
+    changelog the commit appends only the batch's changelog and snapshot
+    materialization moves to the background maintenance thread. The
+    memory-sink rows live on the driver, so the returned DataFrame does
+    not depend on either setting after the query terminates."""
     spark = stream_df.sparkSession
-    # Scale-grade state backend: RocksDB keeps streaming state on local
-    # disk instead of executor heap — at 100 TB a session-window or
-    # stream-stream-join state can exceed memory, and RocksDB (plus its
-    # changelog in the checkpoint) is the production answer. Captured
-    # per-query at start; guarded fallback to the default provider if
-    # the JVM can't load it (older builds), so the harness never fails
-    # on the backend choice itself.
-    _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-    _ROCKSDB = (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    # conf values are always strings, so None unambiguously means "key
-    # was not set" (PySpark's RuntimeConfig.get only accepts str/None
-    # defaults — an object() sentinel would fail its type check)
-    def _restore(key: str, prior: str | None) -> None:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
-
-    prior_provider = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set(_PROVIDER_CONF, _ROCKSDB)
-    # Changelog checkpointing (r10, the root-cause follow-up to VERDICT
-    # r09 "What's wrong" #1): with the default full-snapshot
-    # checkpointing, every commit synchronously creates a RocksDB
-    # snapshot (createSnapshot -> deleteRecursively of the previous
-    # one) — the exact path the r9 commit storm interrupted
-    # (CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT under host load). With
-    # changelog checkpointing the commit appends only the batch's
-    # changelog; snapshot materialization moves to the background
-    # maintenance thread, shrinking the commit-time failure window and
-    # matching the production posture for large state at 100 TB.
-    # Both confs are restored on exit (ADVICE r10 #2) — the memory-sink
-    # rows live on the driver, so the returned DataFrame does not depend
-    # on either setting after the query terminates.
-    _CHANGELOG_CONF = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
-    prior_changelog = spark.conf.get(_CHANGELOG_CONF, None)
-    spark.conf.set(_CHANGELOG_CONF, "true")
-    _SHUFFLE_CONF = "spark.sql.shuffle.partitions"
-    prior_shuffle = spark.conf.get(_SHUFFLE_CONF, None)
+    confs = {_CHANGELOG_CONF: "true"}
     if source_dir is not None:
-        spark.conf.set(
-            _SHUFFLE_CONF, str(suggest_stream_partitions(source_dir, spark))
-        )
-    ckpt = tempfile.mkdtemp(prefix=f"cts_ckpt_{name}_")
-
-    def _start(cp: str):
-        return (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
+        confs["spark.sql.shuffle.partitions"] = str(
+            suggest_stream_partitions(source_dir, spark)
         )
 
-    try:
+    def _run():
+        writer = stream_df.writeStream.format("memory").queryName(name)
+        return run_to_completion(
+            writer.outputMode(output_mode), name, name, timeout_sec
+        )
+
+    with conf_scope(spark, confs):
         try:
-            q = _start(ckpt)
-            await_or_raise(q, name, timeout_sec)
+            with conf_scope(spark, {_PROVIDER_CONF: _ROCKSDB}):
+                q = _run()
         except Exception as e:  # provider unloadable -> default backend retry
             if not _is_provider_load_error(e):
                 raise
-            _restore(_PROVIDER_CONF, prior_provider)
-            shutil.rmtree(ckpt, ignore_errors=True)
-            ckpt = tempfile.mkdtemp(prefix=f"cts_ckpt_{name}_")
-            q = _start(ckpt)
-            await_or_raise(q, name, timeout_sec)
-        progress = _summarize_progress(q) if return_progress else None
-        # the memory sink holds its rows on the driver; once the query has
-        # terminated the checkpoint is dead weight (ADVICE r03 disk-hygiene
-        # theme — harness runs leak one checkpoint dir per invocation)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        out = spark.table(name)
-        return (out, progress) if return_progress else out
-    finally:
-        _restore(_CHANGELOG_CONF, prior_changelog)
-        _restore(_PROVIDER_CONF, prior_provider)
-        if source_dir is not None:
-            _restore(_SHUFFLE_CONF, prior_shuffle)
+            q = _run()
+    out = spark.table(name)
+    return (out, _summarize_progress(q)) if return_progress else out
 
 
 def _summarize_progress(q) -> dict:

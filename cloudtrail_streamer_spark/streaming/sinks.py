@@ -1,16 +1,36 @@
 """Sink operators (SURVEY.md §2.B B-5 partner, B-6) — A-8..A-10 analogs.
 
+Every stub-Kinesis query delivers through ONE core, all in this module:
+
+- ``put_records_chunked`` — the only code that cuts records into
+  PutRecords calls: ≤ the client's record cap and byte cap per call,
+  partial-failure retry (failed entries are re-enqueued until
+  delivered — at-least-once, upstream ``main.go:~80-100`` approx), and
+  a record too big for an empty call raises instead of being dropped.
+- ``send_rows`` — the executor send: one ``KinesisStubClient`` per
+  task, ``(pk, data)`` rows mapped to ``{"Data", "PartitionKey"}``
+  (per-record partition key, ``main.go:~65-75`` approx), then the loop.
+  ``deliver_partitions`` (foreachBatch) and the ``kinesis_spool``
+  streaming writer (spool_source.py) both call it.
+- ``deliver_stream`` — a keyed stream run through
+  ``foreachBatch(deliver_partitions)`` to completion; returns the spool.
+- ``delivered_counts`` plus ``DELIVERED_COUNTS_ORACLE`` — the per-type
+  readback every delivery certificate compares with the source.
+
+Where each cap lives: the loop reads ``RECORD_CAP`` and ``BYTE_CAP``
+from the client, falling back to the A-8 limits below (500 records,
+5 MB per call — AWS limits, BASELINE.md §1), which are also the
+``KinesisStubClient`` defaults; ``MAX_RECORD_BYTES`` (1 MB per record)
+is checked here. The V2 ``kinesis_stub`` writer
+(operators/datasource_py.py) is such a client with a 256 KiB byte cap.
+The spool format lives in ``KinesisStubClient.put_records``: one
+``call_{prefix}{n:06d}.jsonl`` file per call, one ``{"pk", "data"}``
+JSON line per delivered record.
+
 ``KinesisStubClient`` is boto3-shaped (``put_records(StreamName=...,
 Records=[{"Data": bytes, "PartitionKey": str}, ...])`` returning
 ``{"FailedRecordCount": int, "Records": [...]}``), so swapping in a real
-``boto3.client("kinesis")`` is config-only (SURVEY.md §7 step 5). The
-writer reproduces the reference's batching contract exactly:
-
-- ≤500 records and ≤5 MB per PutRecords call (upstream ``main.go:~60-80``
-  approx; AWS limit — BASELINE.md §1),
-- partial-failure retry: entries flagged failed are re-enqueued until
-  delivered (at-least-once, ``main.go:~80-100`` approx),
-- per-record partition key (``main.go:~65-75`` approx).
+``boto3.client("kinesis")`` is config-only (SURVEY.md §7 step 5).
 
 In Structured Streaming the writer runs inside ``foreachBatch``; the
 checkpoint gives batch-level replay, preserving the reference's
@@ -24,16 +44,19 @@ import json
 import os
 import tempfile
 
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cloudtrail_streamer_spark.streaming.harness import await_or_raise
 from cloudtrail_streamer_spark.catalog import table
 from cloudtrail_streamer_spark.registry import query
+from cloudtrail_streamer_spark.streaming import harness
+from cloudtrail_streamer_spark.streaming.harness import await_or_raise
 
 MAX_BATCH_RECORDS = 500
 MAX_BATCH_BYTES = 5 * 1024 * 1024
 MAX_RECORD_BYTES = 1024 * 1024
+STREAM_NAME = "cloudtrail-stream"
 
 
 class KinesisStubClient:
@@ -45,6 +68,9 @@ class KinesisStubClient:
     one client per (micro-batch, partition), so spool names must not
     collide across concurrent partition tasks."""
 
+    RECORD_CAP = MAX_BATCH_RECORDS
+    BYTE_CAP = MAX_BATCH_BYTES
+
     def __init__(self, spool_dir: str, fail_every: int = 7, prefix: str = ""):
         self.spool_dir = spool_dir
         self.fail_every = fail_every
@@ -54,10 +80,10 @@ class KinesisStubClient:
         os.makedirs(spool_dir, exist_ok=True)
 
     def put_records(self, StreamName: str, Records: list[dict]) -> dict:
-        if len(Records) > MAX_BATCH_RECORDS:
-            raise ValueError("PutRecords batch exceeds 500 records")
-        if sum(len(r["Data"]) for r in Records) > MAX_BATCH_BYTES:
-            raise ValueError("PutRecords batch exceeds 5 MB")
+        if len(Records) > self.RECORD_CAP:
+            raise ValueError(f"PutRecords batch exceeds {self.RECORD_CAP} records")
+        if sum(len(r["Data"]) for r in Records) > self.BYTE_CAP:
+            raise ValueError(f"PutRecords batch exceeds {self.BYTE_CAP} bytes")
         self._call += 1
         spool = open(
             os.path.join(self.spool_dir, f"call_{self.prefix}{self._call:06d}.jsonl"), "w"
@@ -83,65 +109,68 @@ class KinesisStubClient:
 
 
 def put_records_chunked(client, stream_name: str, records) -> int:
-    """The reference's batch loop (A-8/A-9): chunk to 500/5 MB, send,
+    """The reference's batch loop (A-8/A-9): chunk to the client's
+    ``RECORD_CAP``/``BYTE_CAP`` (default 500 records / 5 MB), send,
     re-enqueue failed entries until none remain. Returns delivered count.
 
     ``records`` may be any iterable (a list, or a partition iterator on
-    an executor) — it is consumed lazily, one 500-record/5 MB batch at a
-    time, so memory stays bounded by one batch plus the retry queue."""
-    delivered = 0
-    pending: list[dict] = []  # failed entries awaiting retry
+    an executor) — it is consumed lazily, one call's worth at a time, so
+    memory stays bounded by one call plus the retry queue. A record
+    larger than the byte cap (or 1 MB) could never be sent, so it raises
+    ``ValueError`` rather than being dropped."""
+    record_cap = getattr(client, "RECORD_CAP", MAX_BATCH_RECORDS)
+    byte_cap = getattr(client, "BYTE_CAP", MAX_BATCH_BYTES)
+    record_limit = min(MAX_RECORD_BYTES, byte_cap)
     it = iter(records)
-    exhausted = False
-    while not exhausted or pending:
+    pending: list[dict] = []  # failed entries, or the record the last call had no room for
+    delivered = 0
+    while True:
         batch: list[dict] = []
         nbytes = 0
-        while pending and len(batch) < MAX_BATCH_RECORDS:
-            sz = len(pending[0]["Data"]) + len(pending[0]["PartitionKey"])
-            if nbytes + sz > MAX_BATCH_BYTES:
-                break
-            rec = pending.pop(0)
-            batch.append(rec)
-            nbytes += sz
-        while not exhausted and len(batch) < MAX_BATCH_RECORDS:
-            try:
-                rec = next(it)
-            except StopIteration:
-                exhausted = True
+        while len(batch) < record_cap:
+            rec = pending.pop(0) if pending else next(it, None)
+            if rec is None:
                 break
             sz = len(rec["Data"]) + len(rec["PartitionKey"])
-            if sz > MAX_RECORD_BYTES:
-                raise ValueError("record exceeds 1 MB Kinesis limit")
-            if nbytes + sz > MAX_BATCH_BYTES:
-                pending.append(rec)  # did not fit; goes in the next batch
+            if sz > record_limit:
+                raise ValueError(f"record of {sz} bytes exceeds the {record_limit}-byte limit")
+            if nbytes + sz > byte_cap:
+                pending.insert(0, rec)  # did not fit; first in the next call
                 break
             batch.append(rec)
             nbytes += sz
         if not batch:
-            break
+            return delivered
         resp = client.put_records(StreamName=stream_name, Records=batch)
         if resp["FailedRecordCount"]:
-            for rec, status in zip(batch, resp["Records"]):
-                if "ErrorCode" in status:
-                    pending.append(rec)
+            pending += [r for r, st in zip(batch, resp["Records"]) if "ErrorCode" in st]
         delivered += len(batch) - resp["FailedRecordCount"]
-    return delivered
 
 
-def deliver_partitions(
-    keyed: DataFrame, spool_dir: str, stream_name: str, batch_id: int, fail_every: int = 7
-) -> None:
+def send_rows(rows, spool_dir: str, stream_name: str, prefix: str) -> int:
+    """The executor send: one stub client spooling as ``call_{prefix}*``,
+    each ``(pk, data)`` row mapped to a PutRecords entry (a null key goes
+    out as "0"), delivered through :func:`put_records_chunked`. Returns
+    the delivered count."""
+    client = KinesisStubClient(spool_dir, prefix=prefix)
+    return put_records_chunked(
+        client,
+        stream_name,
+        ({"Data": r["data"].encode("utf-8"), "PartitionKey": r["pk"] or "0"} for r in rows),
+    )
+
+
+def deliver_partitions(keyed: DataFrame, spool_dir: str, stream_name: str, batch_id: int) -> None:
     """Executor-side Kinesis delivery (A-8..A-10 at cluster scale).
 
     ``keyed`` must have columns ``pk`` (string) and ``data`` (string).
-    Every partition opens its own client and runs the chunked retrying
-    writer over its partition iterator, so delivery parallelism equals
-    the partition count and NOTHING is collected to the driver — the
-    shape that survives 100 TB (upstream ``main.go:~60-100`` approx runs
-    one Lambda per S3 object; here one task per partition). The stub
-    spools to files keyed by (batch, partition) so local-mode output is
-    collision-free and deterministic; a real ``boto3.client("kinesis")``
-    needs no shared filesystem at all.
+    Every partition runs :func:`send_rows` over its partition iterator,
+    so delivery parallelism equals the partition count and NOTHING is
+    collected to the driver — the shape that survives 100 TB (upstream
+    ``main.go:~60-100`` approx runs one Lambda per S3 object; here one
+    task per partition). The stub spools to files keyed by (batch,
+    partition) so local-mode output is collision-free and deterministic;
+    a real ``boto3.client("kinesis")`` needs no shared filesystem at all.
 
     Inside ``foreachBatch``, pass the micro-batch as is and build the
     ``pk``/``data`` projection once on the streaming DataFrame: then
@@ -152,62 +181,71 @@ def deliver_partitions(
     """
 
     def _send(rows) -> None:
-        from pyspark import TaskContext
-
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        client = KinesisStubClient(
-            spool_dir, fail_every=fail_every, prefix=f"b{batch_id:05d}_p{pid:05d}_"
-        )
-        put_records_chunked(
-            client,
-            stream_name,
-            (
-                {"Data": r["data"].encode("utf-8"), "PartitionKey": r["pk"] or "0"}
-                for r in rows
-            ),
-        )
+        send_rows(rows, spool_dir, stream_name, f"b{batch_id:05d}_p{pid:05d}_")
 
     keyed.foreachPartition(_send)
 
 
-def deliver_events_to_spool(spark: SparkSession, sf_dir: str) -> str:
-    """Run the full B-6 delivery path — events replayed as a file stream,
-    JSON-serialized (partition key = user_id, A-10 analog), delivered
-    through the executor-side chunked retrying writer — and return the
-    spool dir the stub 'stream' now holds."""
-    from cloudtrail_streamer_spark.streaming import harness
-
-    replay = harness.write_replay_files(spark, sf_dir)
-    stream = harness.read_replay_stream(spark, replay)
-    spool = tempfile.mkdtemp(prefix="cts_kinesis_spool_")
-
-    payload = F.to_json(F.struct("event_id", "ts", "user_id", "event_type", "value", "props"))
-    # keyed once on the stream, not once per micro-batch (see
-    # cloudtrail._run_pipeline)
-    keyed = stream.select(F.col("user_id").cast("string").alias("pk"), payload.alias("data"))
+def deliver_stream(keyed: DataFrame, tag: str, name: str) -> str:
+    """Run a keyed (``pk``, ``data``) stream through
+    ``foreachBatch(deliver_partitions)`` to completion and return the
+    spool dir (``cts_{tag}_spool_*``) the stub 'stream' now holds. Build
+    ``keyed`` on the streaming DataFrame, so each micro-batch arrives
+    already keyed and costs only the delivery job. The checkpoint is
+    removed once the query terminates; the spool is kept, because the
+    caller's readback reads it lazily."""
+    spool = tempfile.mkdtemp(prefix=f"cts_{tag}_spool_")
 
     def deliver(batch_df: DataFrame, batch_id: int) -> None:
-        deliver_partitions(batch_df, spool, "cloudtrail-stream", batch_id)
+        deliver_partitions(batch_df, spool, STREAM_NAME, batch_id)
 
-    q = (
-        keyed.writeStream.foreachBatch(deliver)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="cts_ckpt_sink_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_raise(q, "sink_foreachbatch_kinesis", 600.0)
+    harness.run_to_completion(keyed.writeStream.foreachBatch(deliver), name, tag)
     return spool
 
 
-_DELIVERED_COUNTS_ORACLE = """
+def keyed_events(events: DataFrame) -> DataFrame:
+    """Events as Kinesis records: partition key ``user_id`` (A-10
+    analog), the whole event JSON-serialized as ``data``."""
+    payload = F.to_json(F.struct("event_id", "ts", "user_id", "event_type", "value", "props"))
+    return events.select(F.col("user_id").cast("string").alias("pk"), payload.alias("data"))
+
+
+def delivered_counts(delivered: DataFrame) -> DataFrame:
+    """Per-event_type counts of delivered records, read from each
+    record's ``data`` payload; batch or streaming. Every delivery
+    certificate compares these with :data:`DELIVERED_COUNTS_ORACLE`."""
+    return (
+        delivered.select(F.get_json_object("data", "$.event_type").alias("event_type"))
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def deliver_events_to_spool(spark: SparkSession, sf_dir: str) -> str:
+    """Run the full B-6 delivery path — events replayed as a file stream,
+    keyed and JSON-serialized (:func:`keyed_events`), delivered through
+    the executor-side chunked retrying writer — and return the spool dir
+    the stub 'stream' now holds."""
+    replay = harness.write_replay_files(spark, sf_dir)
+    stream = harness.read_replay_stream(spark, replay)
+    return deliver_stream(keyed_events(stream), "kinesis", "sink_foreachbatch_kinesis")
+
+
+# The delivered-count certificate (VERDICT r09 #5): delivery is lossless
+# and exactly-once end to end, so the per-type counts read back from a
+# spool must equal the source events table's per-type counts, which a SQL
+# oracle owns exactly. A drop, a duplicate delivery, an unwrap bug or an
+# SNS mis-dispatch shows up as a hash mismatch in the driver record.
+DELIVERED_COUNTS_ORACLE = """
 SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
 FROM events
 GROUP BY event_type
 """
 
 
-@query("sink_foreachbatch_kinesis", oracle=_DELIVERED_COUNTS_ORACLE, survey_id="B-6")
+@query("sink_foreachbatch_kinesis", oracle=DELIVERED_COUNTS_ORACLE, survey_id="B-6")
 def sink_foreachbatch_kinesis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch Kinesis delivery of the events stream (stubbed sink):
     deliver through the chunked retrying writer, then read the spool back
@@ -217,13 +255,7 @@ def sink_foreachbatch_kinesis(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type counts hash-compare against the source counts the oracle
     owns, so a dropped chunk, double delivery, or retry bug is a driver
     hash mismatch — the delivered-count certificate pattern."""
-    spool = deliver_events_to_spool(spark, sf_dir)
-    delivered = spark.read.json(spool)
-    return (
-        delivered.select(F.get_json_object("data", "$.event_type").alias("event_type"))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    return delivered_counts(spark.read.json(deliver_events_to_spool(spark, sf_dir)))
 
 
 _IDEMPOTENT_ORACLE = """
@@ -310,33 +342,17 @@ def sink_fanout_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     function, so the checkpoint advances only when both succeeded —
     per-batch all-or-nothing without a distributed transaction. The
     certificate row proves neither fork lost or duplicated records."""
-    import os
-
-    from cloudtrail_streamer_spark.streaming import harness
-
     replay = harness.write_replay_files(spark, sf_dir)
     stream = harness.read_replay_stream(spark, replay)
     base = tempfile.mkdtemp(prefix="cts_fanout_")
     lake = os.path.join(base, "lake")
     spool = os.path.join(base, "spool")
-    payload = F.to_json(
-        F.struct("event_id", "ts", "user_id", "event_type", "value", "props")
-    )
 
     def fanout(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").partitionBy("event_type").parquet(lake)
-        keyed = batch_df.select(
-            F.col("user_id").cast("string").alias("pk"), payload.alias("data")
-        )
-        deliver_partitions(keyed, spool, "cloudtrail-stream", batch_id)
+        deliver_partitions(keyed_events(batch_df), spool, STREAM_NAME, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(fanout)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="cts_ckpt_fan_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_raise(q, "sink_fanout_dual", 600.0)
+    harness.run_to_completion(stream.writeStream.foreachBatch(fanout), "sink_fanout_dual", "fan")
 
     n_parquet = spark.read.parquet(lake).count()
     n_spool = spark.read.json(spool).count()

@@ -20,6 +20,11 @@ from cloudtrail_streamer_spark.catalog import table
 from cloudtrail_streamer_spark.functions import dsum
 from cloudtrail_streamer_spark.registry import query
 from cloudtrail_streamer_spark.streaming import harness
+from cloudtrail_streamer_spark.streaming.sinks import (
+    DELIVERED_COUNTS_ORACLE,
+    delivered_counts,
+    deliver_events_to_spool,
+)
 
 
 def _require(cond, msg) -> None:
@@ -31,15 +36,7 @@ def _require(cond, msg) -> None:
         raise ValueError(msg)
 
 
-
-_STREAM_COUNTS_ORACLE = """
-SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
-FROM events
-GROUP BY event_type
-"""
-
-
-@query("source_stream_files", oracle=_STREAM_COUNTS_ORACLE, survey_id="B-3")
+@query("source_stream_files", oracle=DELIVERED_COUNTS_ORACLE, survey_id="B-3")
 def source_stream_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental file-stream ingest: replay events as a file stream
     (AvailableNow), count per event_type. Tier H since r10 (VERDICT r09
@@ -89,14 +86,7 @@ def read_kinesis_stream(
     )
 
 
-_KINESIS_RT_ORACLE = """
-SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
-FROM events
-GROUP BY event_type
-"""
-
-
-@query("source_kinesis_stub", oracle=_KINESIS_RT_ORACLE, survey_id="B-6-ext")
+@query("source_kinesis_stub", oracle=DELIVERED_COUNTS_ORACLE, survey_id="B-6-ext")
 def source_kinesis_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full produce→consume round trip through the Kinesis stub: events
     are delivered by the executor-side chunked retrying sink (B-6), then
@@ -104,20 +94,10 @@ def source_kinesis_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     record schema + shard routing and aggregates per event_type. H-tier:
     per-type counts must equal the original events table exactly —
     despite chunking, injected partial failures, and resharding."""
-    from cloudtrail_streamer_spark.streaming import harness
-    from cloudtrail_streamer_spark.streaming.sinks import deliver_events_to_spool
-
-    spool = deliver_events_to_spool(spark, sf_dir)
-    consumer = read_kinesis_stream(spark, spool)
-    counts = (
-        consumer.select(
-            F.get_json_object("data", "$.event_type").alias("event_type")
-        )
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
     import uuid
 
+    spool = deliver_events_to_spool(spark, sf_dir)
+    counts = delivered_counts(read_kinesis_stream(spark, spool))
     name = f"src_kinesis_{uuid.uuid4().hex[:8]}"
     return harness.run_stream_to_memory(
         counts, name, output_mode="complete", source_dir=spool

@@ -18,12 +18,11 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 import zlib
 
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from cloudtrail_streamer_spark.streaming.harness import await_or_raise
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -34,34 +33,48 @@ from pyspark.sql.datasource import (
 )
 
 from cloudtrail_streamer_spark.registry import query
+from cloudtrail_streamer_spark.streaming import harness
+from cloudtrail_streamer_spark.streaming.sinks import (
+    DELIVERED_COUNTS_ORACLE,
+    STREAM_NAME,
+    delivered_counts,
+    deliver_events_to_spool,
+    keyed_events,
+    send_rows,
+)
 
 SPOOL_SCHEMA = "pk string, data string, shard_id int"
 
 
 class _ShardPartition(InputPartition):
-    def __init__(self, shard_id: int, n_shards: int, path: str):
+    def __init__(self, shard_id: int, n_shards: int, path: str, files: list):
         self.shard_id = shard_id
         self.n_shards = n_shards
         self.path = path
+        self.files = files
 
 
-class KinesisSpoolReader(DataSourceReader):
+def _spool_files(path: str) -> list:
+    return sorted(f for f in os.listdir(path) if f.endswith(".jsonl"))
+
+
+class _SpoolShards:
+    """What both spool readers share: the options, one partition per
+    shard over a list of spool files, and the shard read."""
+
     def __init__(self, options: dict):
         self.path = options["path"]
         self.n_shards = int(options.get("shards", "4"))
 
-    def partitions(self):
-        return [
-            _ShardPartition(i, self.n_shards, self.path) for i in range(self.n_shards)
-        ]
+    def _shards(self, files: list) -> list:
+        return [_ShardPartition(i, self.n_shards, self.path, files) for i in range(self.n_shards)]
 
     def read(self, partition: _ShardPartition):
-        """Runs ON THE EXECUTOR for one shard: scan the spool, keep only
-        records routed to this shard. A boto3-backed implementation
-        would issue GetRecords for its shard iterator here instead."""
-        for fname in sorted(os.listdir(partition.path)):
-            if not fname.endswith(".jsonl"):
-                continue
+        """Runs ON THE EXECUTOR for one shard: scan the partition's spool
+        files, keep only records routed to this shard. A boto3-backed
+        implementation would issue GetRecords for its shard iterator
+        here instead."""
+        for fname in partition.files:
             with open(os.path.join(partition.path, fname)) as f:
                 for line in f:
                     rec = json.loads(line)
@@ -70,15 +83,12 @@ class KinesisSpoolReader(DataSourceReader):
                         yield (rec["pk"], rec["data"], shard)
 
 
-class _StreamShardPartition(InputPartition):
-    def __init__(self, shard_id: int, n_shards: int, path: str, files: list):
-        self.shard_id = shard_id
-        self.n_shards = n_shards
-        self.path = path
-        self.files = files
+class KinesisSpoolReader(_SpoolShards, DataSourceReader):
+    def partitions(self):
+        return self._shards(_spool_files(self.path))
 
 
-class KinesisSpoolStreamReader(DataSourceStreamReader):
+class KinesisSpoolStreamReader(_SpoolShards, DataSourceStreamReader):
     """Streaming flavor of the connector (the true "Kinesis source"
     north star): offsets are the count of spool files consumed — the
     shard-iterator/sequence-number analog — and each micro-batch is
@@ -87,34 +97,14 @@ class KinesisSpoolStreamReader(DataSourceStreamReader):
     ``commit`` is a no-op because the spool is immutable; a boto3
     implementation would checkpoint shard iterators there."""
 
-    def __init__(self, options: dict):
-        self.path = options["path"]
-        self.n_shards = int(options.get("shards", "4"))
-
-    def _files(self) -> list:
-        return sorted(f for f in os.listdir(self.path) if f.endswith(".jsonl"))
-
     def initialOffset(self) -> dict:
         return {"n_files": 0}
 
     def latestOffset(self) -> dict:
-        return {"n_files": len(self._files())}
+        return {"n_files": len(_spool_files(self.path))}
 
     def partitions(self, start: dict, end: dict):
-        new_files = self._files()[start["n_files"] : end["n_files"]]
-        return [
-            _StreamShardPartition(i, self.n_shards, self.path, new_files)
-            for i in range(self.n_shards)
-        ]
-
-    def read(self, partition: _StreamShardPartition):
-        for fname in partition.files:
-            with open(os.path.join(partition.path, fname)) as f:
-                for line in f:
-                    rec = json.loads(line)
-                    shard = zlib.crc32(rec["pk"].encode("utf-8")) % partition.n_shards
-                    if shard == partition.shard_id:
-                        yield (rec["pk"], rec["data"], shard)
+        return self._shards(_spool_files(self.path)[start["n_files"] : end["n_files"]])
 
     def commit(self, end: dict) -> None:
         pass  # immutable spool; real Kinesis would persist shard iterators
@@ -129,36 +119,20 @@ class KinesisSpoolStreamWriter(DataSourceStreamWriter):
     """Custom streaming SINK: ``writeStream.format("kinesis_spool")``.
 
     ``write`` runs per partition ON THE EXECUTOR and pushes its
-    partition iterator through the same 500-record/5 MB chunked
-    retrying client as the foreachBatch path (spool files namespaced by
-    the globally-unique task attempt id); per-task delivered counts
-    travel back as commit messages, and ``commit`` is where a boto3
+    partition iterator through ``sinks.send_rows`` — the same executor
+    send as the foreachBatch path (spool files namespaced by the
+    globally-unique task attempt id); per-task delivered counts travel
+    back as commit messages, and ``commit`` is where a boto3
     implementation would record batch delivery for idempotence."""
 
     def __init__(self, options: dict):
         self.path = options["path"]
-        self.stream_name = options.get("stream", "cloudtrail-stream")
+        self.stream_name = options.get("stream", STREAM_NAME)
 
     def write(self, iterator) -> "_SpoolCommit":
-        from pyspark import TaskContext
-
-        from cloudtrail_streamer_spark.streaming.sinks import (
-            KinesisStubClient,
-            put_records_chunked,
-        )
-
         ctx = TaskContext.get()
         attempt = ctx.taskAttemptId() if ctx is not None else 0
-        client = KinesisStubClient(self.path, fail_every=7, prefix=f"w{attempt:010d}_")
-        n = put_records_chunked(
-            client,
-            self.stream_name,
-            (
-                {"Data": row.data.encode("utf-8"), "PartitionKey": row.pk or "0"}
-                for row in iterator
-            ),
-        )
-        return _SpoolCommit(n)
+        return _SpoolCommit(send_rows(iterator, self.path, self.stream_name, f"w{attempt:010d}_"))
 
     def commit(self, messages, batchId) -> None:
         pass  # spool is append-only; boto3 impl would record batch here
@@ -186,23 +160,15 @@ class KinesisSpoolDataSource(DataSource):
 
 
 def register(spark: SparkSession) -> None:
-    """Idempotent registration of the custom format."""
-    try:
-        spark.dataSource.register(KinesisSpoolDataSource)
-    except Exception:
-        pass  # already registered in this session
-
-
-_CUSTOM_SOURCE_ORACLE = """
-SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
-FROM events
-GROUP BY event_type
-"""
+    """Register the custom format. Registering again in the same session
+    replaces the entry, so every caller may call this; a real
+    registration failure propagates."""
+    spark.dataSource.register(KinesisSpoolDataSource)
 
 
 @query(
     "source_kinesis_custom_stream",
-    oracle=_CUSTOM_SOURCE_ORACLE,
+    oracle=DELIVERED_COUNTS_ORACLE,
     survey_id="B-3-ext",
 )
 def source_kinesis_custom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,8 +176,7 @@ def source_kinesis_custom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "kinesis_spool")``: a custom STREAMING source with shard-partitioned
     executor-side reads and file-count offsets, aggregated to per-type
     counts (complete mode). H-tier: counts equal the source table."""
-    from cloudtrail_streamer_spark.streaming import harness
-    from cloudtrail_streamer_spark.streaming.sinks import deliver_events_to_spool
+    import uuid
 
     spool = deliver_events_to_spool(spark, sf_dir)
     register(spark)
@@ -221,21 +186,14 @@ def source_kinesis_custom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("shards", "4")
         .load()
     )
-    counts = (
-        consumed.select(F.get_json_object("data", "$.event_type").alias("event_type"))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    import uuid
-
     return harness.run_stream_to_memory(
-        counts, f"kin_ds_{uuid.uuid4().hex[:8]}", output_mode="complete"
+        delivered_counts(consumed), f"kin_ds_{uuid.uuid4().hex[:8]}", output_mode="complete"
     )
 
 
 @query(
     "sink_kinesis_custom_stream",
-    oracle=_CUSTOM_SOURCE_ORACLE,
+    oracle=DELIVERED_COUNTS_ORACLE,
     survey_id="B-6-ext",
 )
 def sink_kinesis_custom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,48 +203,30 @@ def sink_kinesis_custom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     client (no driver collect anywhere). The delivered spool is read
     back through the batch connector and aggregated. H-tier: per-type
     counts equal the source table."""
-    import tempfile
-
-    from cloudtrail_streamer_spark.catalog import table
-    from cloudtrail_streamer_spark.streaming import harness
-
     register(spark)
     replay = harness.write_replay_files(spark, sf_dir)
     out_spool = tempfile.mkdtemp(prefix="cts_dswriter_spool_")
-    events = harness.read_replay_stream(spark, replay)
-    q = (
-        events.select(
-            F.col("user_id").cast("string").alias("pk"),
-            F.to_json(F.struct(*events.columns)).alias("data"),
-        )
+    writer = (
+        keyed_events(harness.read_replay_stream(spark, replay))
         .writeStream.format("kinesis_spool")
         .option("path", out_spool)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="cts_ckpt_dsw_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    await_or_raise(q, "sink_kinesis_custom_stream", 600.0)
+    harness.run_to_completion(writer, "sink_kinesis_custom_stream", "dsw")
     delivered = (
         spark.read.format("kinesis_spool")
         .option("path", out_spool)
         .option("shards", "4")
         .load()
     )
-    return (
-        delivered.select(F.get_json_object("data", "$.event_type").alias("event_type"))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    return delivered_counts(delivered)
 
 
-@query("source_custom_datasource", oracle=_CUSTOM_SOURCE_ORACLE, survey_id="B-3-ext")
+@query("source_custom_datasource", oracle=DELIVERED_COUNTS_ORACLE, survey_id="B-3-ext")
 def source_custom_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end through the custom Python Data Source: events delivered
     by the executor-side sink into the spool, then read back via
     ``format("kinesis_spool")`` with per-shard partition planning and
     aggregated. H-tier: per-type counts equal the source table."""
-    from cloudtrail_streamer_spark.streaming.sinks import deliver_events_to_spool
-
     spool = deliver_events_to_spool(spark, sf_dir)
     register(spark)
     consumed = (
@@ -295,8 +235,4 @@ def source_custom_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("shards", "4")
         .load()
     )
-    return (
-        consumed.select(F.get_json_object("data", "$.event_type").alias("event_type"))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    return delivered_counts(consumed)

@@ -807,6 +807,66 @@ def test_python_datasource_writer_chunking_and_abort(tmp_path):
     )
 
 
+def test_oversized_record_raises_not_dropped(tmp_path):
+    """A record too big for an empty PutRecords call — 300 KiB against a
+    256 KiB byte cap — must raise, not vanish from the delivery: through
+    the V2 writer (whose cap it is) and through the stub client with the
+    same cap."""
+    import pytest
+    from pyspark.sql import Row
+
+    from cloudtrail_streamer_spark.operators.datasource_py import (
+        _KinesisStubWriter,
+    )
+    from cloudtrail_streamer_spark.streaming.sinks import (
+        KinesisStubClient,
+        put_records_chunked,
+    )
+
+    big = "x" * (300 * 1024)
+    w = _KinesisStubWriter({"path": str(tmp_path), "run_id": "big"})
+    rows = [Row(event_id=0, payload="a"), Row(event_id=1, payload=big)]
+    with pytest.raises(ValueError, match="exceeds"):
+        w.write(iter(rows))
+
+    client = KinesisStubClient(str(tmp_path / "spool"), fail_every=0)
+    client.BYTE_CAP = 256 * 1024
+    records = [
+        {"Data": b"a", "PartitionKey": "0"},
+        {"Data": big.encode(), "PartitionKey": "0"},
+    ]
+    with pytest.raises(ValueError, match="exceeds"):
+        put_records_chunked(client, "s", records)
+
+
+def test_spool_source_registers_twice(spark, tmp_path):
+    """Registering the kinesis_spool format again in the same session is
+    not an error, so ``register`` needs no guard that could hide a real
+    failure; the batch connector then routes each spool record to its
+    crc32(pk) shard."""
+    import json
+    import zlib
+
+    from cloudtrail_streamer_spark.streaming.spool_source import register
+
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    with open(spool / "call_000001.jsonl", "w") as fh:
+        for i in range(12):
+            fh.write(json.dumps({"pk": str(i), "data": f"d{i}"}) + "\n")
+    register(spark)
+    register(spark)
+    rows = (
+        spark.read.format("kinesis_spool")
+        .option("path", str(spool))
+        .option("shards", "3")
+        .load()
+        .collect()
+    )
+    assert sorted(r["data"] for r in rows) == sorted(f"d{i}" for i in range(12))
+    assert all(r["shard_id"] == zlib.crc32(r["pk"].encode()) % 3 for r in rows)
+
+
 def test_python_stream_writer_epoch_idempotent(tmp_path):
     """A replayed epoch (same batchId committed twice, as after a crash
     between sink commit and checkpoint write) must be a no-op: one

@@ -220,6 +220,33 @@ def test_replay_plan_built_once_per_stream(spark, monkeypatch):
     assert got == _events_by_type(spark)
 
 
+def test_run_pipeline_removes_its_checkpoint(spark, monkeypatch):
+    """A finished delivery stream deletes its checkpoint (no new
+    cts_ckpt_ct_* dir is left behind) and keeps the spool, which the
+    returned frame reads lazily."""
+    import os
+    import tempfile
+
+    from cloudtrail_streamer_spark.streaming import cloudtrail
+
+    made = []
+    real_mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        path = real_mkdtemp(*args, **kwargs)
+        made.append(path)
+        return path
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+    logs = cloudtrail.write_cloudtrail_files(spark, SF, files=2)
+    out = cloudtrail._run_pipeline(spark, logs)
+    ckpts = [p for p in made if os.path.basename(p).startswith("cts_ckpt_ct_")]
+    assert len(ckpts) == 1, made
+    assert not os.path.exists(ckpts[0]), "the finished checkpoint must be removed"
+    got = {r["event_type"]: r["n"] for r in out.collect()}
+    assert got == _events_by_type(spark)
+
+
 def test_kinesis_source_roundtrip_and_sharding(spark):
     """Produce→consume through the Kinesis stub: counts survive the
     round trip, and shard routing is a pure function of partition key
