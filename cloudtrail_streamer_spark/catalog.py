@@ -5,11 +5,20 @@ upstream ``main.go:~190-225`` approx — SURVEY.md §2.A); here the batch
 analog is a directory of parquet tables. Reads go through
 ``spark.read.parquet`` so Catalyst gets predicate pushdown + column
 pruning on every scan (verified in tests/test_plans.py).
+
+This module also owns every directory the engine writes outside the
+catalog, with two lifetimes: ``scratch_dir`` is per query (one path per
+process, query and scale, reused by every call and removed at exit);
+``temp_dir`` is fresh per call (replay fixtures, spools, stream outputs
+and checkpoints) and removed at exit. One exit hook removes both.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,6 +46,16 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # stopped-and-recreated session could alias a dead session's cache entries
 # (VERDICT r03 #7).
 _TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+
+# Directories this process owns on disk (the scratch_dir pid root and every
+# temp_dir), removed at interpreter exit.
+_AT_EXIT: list[str] = []
+
+
+@atexit.register
+def _remove_at_exit() -> None:
+    for path in _AT_EXIT:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -82,9 +101,10 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def scratch_dir(query_name: str, sf_dir: str = "") -> str:
     """Per-(process, query, scale) scratch directory for write-then-read-
-    back operators (sinks, layout ops). Fixed WITHIN a process, so the
-    bench harness's min-of-N reruns overwrite in place instead of leaking
-    a fresh mkdtemp parquet copy per invocation (ADVICE r03); scoped BY
+    back operators (sinks, layout ops): the same path for every call with
+    the same arguments, removed at interpreter exit. Fixed WITHIN a
+    process, so the bench harness's min-of-N reruns overwrite in place
+    instead of leaking a fresh copy per invocation (ADVICE r03); scoped BY
     process id because two engine processes sharing one deterministic
     path race overwrite-against-read (observed in the r4 cross-scale
     drive: a concurrent driver-sim clobbered sim_index_partition_pruned's
@@ -92,21 +112,26 @@ def scratch_dir(query_name: str, sf_dir: str = "") -> str:
     the same query at two sf_dirs (bench.py --floor's lo/hi interleave)
     must not alias one path — the second build would overwrite files the
     first DataFrame's cached file index still points at (ADVICE r04).
-    The whole per-pid root is removed at interpreter exit. Callers write
-    with mode("overwrite"), which makes reuse safe."""
-    import atexit
-    import shutil
-    import tempfile
-
-    pid_root = os.path.join(tempfile.gettempdir(), "cts_scratch", str(os.getpid()))
+    Callers write with mode("overwrite"), which makes reuse safe."""
+    pid_root = os.path.join(tempfile.gettempdir(), f"cts_scratch_{os.getpid()}")
     if not os.path.isdir(pid_root):
         os.makedirs(pid_root, exist_ok=True)
-        atexit.register(shutil.rmtree, pid_root, ignore_errors=True)
+        _AT_EXIT.append(pid_root)
     sf_tag = os.path.basename(os.path.normpath(sf_dir)) if sf_dir else "nosf"
     sf_tag = "".join(ch if ch.isalnum() or ch in "._-" else "_" for ch in sf_tag)
     root = os.path.join(pid_root, sf_tag, query_name)
     os.makedirs(root, exist_ok=True)
     return root
+
+
+def temp_dir(prefix: str) -> str:
+    """A fresh ``{prefix}*`` directory directly in the temp dir, new on
+    every call and removed at interpreter exit: replay fixtures, spools,
+    stream outputs and checkpoints. It outlives the call that made it,
+    because the DataFrames a query returns read these files lazily."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _AT_EXIT.append(path)
+    return path
 
 
 def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:

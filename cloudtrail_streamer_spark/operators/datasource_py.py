@@ -47,9 +47,10 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from cloudtrail_streamer_spark.streaming.harness import await_or_raise
-from cloudtrail_streamer_spark.catalog import table
+from cloudtrail_streamer_spark.catalog import table, temp_dir
 from cloudtrail_streamer_spark.registry import query
+from cloudtrail_streamer_spark.session import configure
+from cloudtrail_streamer_spark.streaming.harness import run_to_completion
 from cloudtrail_streamer_spark.streaming.sinks import put_records_chunked
 
 REGIONS = ["us-east-1", "us-west-2", "eu-west-1", "ap-south-1"]
@@ -263,20 +264,13 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunking-independent, which is what makes this H-tier: the oracle
     recomputes it from ``range()`` arithmetic with no knowledge of how
     many cycles ran. sf_dir is unused (generated source)."""
-    import shutil
-
-    from cloudtrail_streamer_spark.catalog import scratch_dir
-    from cloudtrail_streamer_spark.session import configure
-
     configure(spark)
     spark.dataSource.register(CloudTrailGenDataSource)
-    root = scratch_dir("stream_python_datasource", sf_dir)
-    ckpt = os.path.join(root, "ckpt")
-    shutil.rmtree(ckpt, ignore_errors=True)  # fresh stream per invocation
+    ckpt = temp_dir("cts_ckpt_sds_")  # fresh stream per invocation
     sink = f"sds_out_{os.getpid()}"
     n_total, max_cycles = 2000, 8
     for _ in range(max_cycles):
-        q = (
+        writer = (
             spark.readStream.format("cloudtrail_gen")
             .option("n_events", n_total)
             .option("chunk", 700)
@@ -289,12 +283,10 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             .writeStream.format("memory")
             .queryName(sink)
             .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        await_or_raise(q, "datasource_py_stream", 120.0)
-        q.stop()
+        run_to_completion(
+            writer, "datasource_py_stream", "sds", checkpoint=ckpt, timeout_sec=120.0
+        )
         got = spark.sql(f"SELECT SUM(n_events) FROM {sink}").collect()[0][0] or 0
         if got >= n_total:
             break
@@ -403,17 +395,9 @@ def sink_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame
     boundaries depend on physical partitioning); the INVARIANTS the row
     carries are exact: delivered records == source rows, every chunk
     within both caps, chunk count consistent with the caps."""
-    import glob
-
-    from cloudtrail_streamer_spark.catalog import scratch_dir
-    from cloudtrail_streamer_spark.session import configure
-
     configure(spark)
     spark.dataSource.register(KinesisStubSink)
-    out = os.path.join(scratch_dir("sink_python_datasource_writer", sf_dir), "delivery")
-    os.makedirs(out, exist_ok=True)
-    for f in glob.glob(os.path.join(out, "*")):
-        os.remove(f)  # fresh delivery per invocation
+    out = temp_dir("cts_pydsw_")  # fresh delivery per invocation
 
     ev = table(spark, sf_dir, "events").select(
         "event_id", "event_type", F.col("value").cast("double").alias("value")
@@ -488,36 +472,25 @@ def sink_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only driver tier (epoch/chunk boundaries are physical)."""
     import glob
 
-    from cloudtrail_streamer_spark.catalog import scratch_dir
-    from cloudtrail_streamer_spark.session import configure
-
     configure(spark)
     spark.dataSource.register(CloudTrailGenDataSource)
     spark.dataSource.register(KinesisStubSink)
-    root = scratch_dir("sink_python_stream_writer", sf_dir)
-    out = os.path.join(root, "delivery")
-    ckpt = os.path.join(root, "ckpt")
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
+    out = temp_dir("cts_pysw_delivery_")  # fresh stream per invocation
+    ckpt = temp_dir("cts_ckpt_pysw_")
 
     n_total, max_cycles, cycles = 2000, 8, 0
     for _ in range(max_cycles):
-        q = (
+        writer = (
             spark.readStream.format("cloudtrail_gen")
             .option("n_events", n_total)
             .option("chunk", 700)
             .load()
             .writeStream.format("kinesis_stub")
             .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        await_or_raise(q, "datasource_py_cycles", 120.0)
-        q.stop()
+        run_to_completion(
+            writer, "datasource_py_cycles", "pysw", checkpoint=ckpt, timeout_sec=120.0
+        )
         cycles += 1
         mans = [
             json.load(open(f))

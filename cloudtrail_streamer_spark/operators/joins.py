@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cloudtrail_streamer_spark.catalog import table
+from cloudtrail_streamer_spark.catalog import scratch_dir, table
 from cloudtrail_streamer_spark.registry import query
 from cloudtrail_streamer_spark.session import conf_scope
 
@@ -332,16 +332,13 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries. The merge hint pins SMJ so size-based broadcast doesn't
     mask the demonstration at test scale.
 
-    Table names and paths are FIXED (mode=overwrite), not uuid-fresh:
-    repeated invocations reuse the same two catalog entries and disk
-    location instead of accumulating them (VERDICT r02 "what's wrong
+    Table names and paths are FIXED (mode=overwrite, under the query's
+    scratch_dir), not uuid-fresh: repeated invocations reuse the same
+    two catalog entries and disk location instead of accumulating them (VERDICT r02 "what's wrong
     #3"); a try/finally DROP would instead break the lazy-DataFrame
     contract (the returned plan reads these tables at collect time).
     No-residue-growth is asserted in tests/test_engine.py."""
-    import os
-    import tempfile
-
-    base = os.path.join(tempfile.gettempdir(), "cts_bucketed")
+    base = scratch_dir("join_bucketed_colocated", sf_dir)
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
     c = table(spark, sf_dir, "customer").select("c_custkey")
     (

@@ -44,7 +44,7 @@ from cloudtrail_streamer_spark.operators.snapshot_table import (
 )
 from cloudtrail_streamer_spark.registry import query
 from cloudtrail_streamer_spark.session import conf_scope
-from cloudtrail_streamer_spark.streaming.harness import await_or_raise
+from cloudtrail_streamer_spark.streaming.harness import run_to_completion
 
 
 def _require(cond, msg) -> None:
@@ -845,16 +845,13 @@ def stream_snapshot_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit(v).cast("int").alias("commit_version"), "*"
                 ).write.mode("append").parquet(feed_dir)
 
-    q = (
+    writer = (
         spark.readStream.schema(MANIFEST_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(tbl.path("manifests"))
         .writeStream.foreachBatch(consume)
-        .option("checkpointLocation", tbl.path("checkpoint"))
-        .trigger(availableNow=True)
-        .start()
     )
-    await_or_raise(q, "lakehouse_stream_cdf", 600.0)
+    run_to_completion(writer, "lakehouse_stream_cdf", "cdf", checkpoint=tbl.path("checkpoint"))
 
     # incremental-consumption certificate: every commit consumed, one
     # per micro-batch, in order.
@@ -1338,18 +1335,15 @@ def stream_snapshot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         tbl.commit([], tbl.write(batch_df, f"data/b{batch_id:05d}"), txn=batch_id)
 
     def run(checkpoint: str) -> None:
-        q = (
+        writer = (
             spark.readStream.schema(
                 "o_orderkey bigint, o_orderstatus string, price_c bigint, o_year int"
             )
             .option("maxFilesPerTrigger", 1)
             .parquet(spool_dir)
             .writeStream.foreachBatch(ingest)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
         )
-        await_or_raise(q, "lakehouse_txn_ingest", 600.0)
+        run_to_completion(writer, "lakehouse_txn_ingest", "ingest", checkpoint=checkpoint)
 
     run(tbl.path("checkpoint"))
     _require(

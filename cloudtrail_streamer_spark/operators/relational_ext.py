@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cloudtrail_streamer_spark.catalog import table
+from cloudtrail_streamer_spark.catalog import scratch_dir, table
 from cloudtrail_streamer_spark.functions import cents
 from cloudtrail_streamer_spark.registry import query
 
@@ -804,8 +804,8 @@ def layout_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     any 100 TB lake (streaming ingest writes a file per trigger per
     partition; a day later the table is a million 2 MB files and every
     scan pays a task per file). Simulated here end to end: events are
-    deliberately fragmented into 64 shards (mode=overwrite into a fixed
-    tmp path — no residue growth, the join_bucketed_colocated
+    deliberately fragmented into 64 shards (mode=overwrite into the
+    query's scratch_dir — no residue growth, the join_bucketed_colocated
     discipline), then compacted by reading the fragmented table back
     and rewriting with AQE-coalesced shuffle-free repartition to the
     byte-targeted file count. The returned row is a certificate: the
@@ -814,10 +814,8 @@ def layout_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts the rewrite produced <= 8 files from 64. On a real lake the
     same job runs per partition-predicate with a manifest swap."""
     import glob
-    import os
-    import tempfile
 
-    base = os.path.join(tempfile.gettempdir(), "cts_compact")
+    base = scratch_dir("layout_compact_small_files", sf_dir)
     ev = table(spark, sf_dir, "events")
     frag_path = f"{base}/frag"
     ev.repartition(64).write.mode("overwrite").parquet(frag_path)

@@ -132,6 +132,15 @@ _CHANGED: list[str] = [
     "stream_stream_join",
     "stream_stream_join_cert",
     "stream_transform_with_state",
+    # one stream runner (run_to_completion) and one temp-dir owner
+    # (catalog.temp_dir / scratch_dir)
+    "sink_idempotent_batchid",
+    "source_corrupt_records",
+    "source_json_gz",
+    "source_incremental_checkpoint",
+    "stream_python_datasource",
+    "join_bucketed_colocated",
+    "layout_compact_small_files",
 ]
 
 

@@ -29,12 +29,11 @@ file id); the driver only renames finished files (O(#files) metadata).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cloudtrail_streamer_spark.catalog import table
+from cloudtrail_streamer_spark.catalog import table, temp_dir
 from cloudtrail_streamer_spark.registry import query
 from cloudtrail_streamer_spark.streaming.harness import flatten_partitioned
 from cloudtrail_streamer_spark.streaming.sinks import (
@@ -97,7 +96,7 @@ def write_cloudtrail_files(
             "value",
             F.when(F.col("bucket").cast("int") % 2 == 1, sns).otherwise(F.col("value")),
         )
-    out = tempfile.mkdtemp(prefix="cts_ctlogs_")
+    out = temp_dir("cts_ctlogs_")
     staged = os.path.join(out, "_staged")
     (
         bodies.repartition("bucket")

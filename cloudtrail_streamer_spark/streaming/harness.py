@@ -14,18 +14,25 @@ harness never materializes the dataset on the driver and scales with the
 cluster. The only driver work is renaming the finished per-bucket files
 to flat, zero-padded names and stamping increasing mtimes (O(#files)
 metadata ops) so the file-stream source discovers them in bucket order.
+
+One start path: :func:`run_to_completion` is the only code in the
+package that starts a streaming query (AvailableNow, awaited through
+:func:`await_or_raise`); :func:`run_stream_to_memory` and every operator
+call it. Checkpoint rule: a query started without a checkpoint gets a
+fresh one that is removed when the query ends; a checkpoint passed in
+belongs to the caller. Fixtures, spools and outputs come from
+``catalog.temp_dir`` and are removed at interpreter exit.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cloudtrail_streamer_spark.catalog import table
+from cloudtrail_streamer_spark.catalog import table, temp_dir
 from cloudtrail_streamer_spark.session import conf_scope
 
 EVENTS_SCHEMA = (
@@ -92,7 +99,7 @@ def write_replay_files(
             ev.select("day").distinct(), "day", "left_semi"
         )
         ev = ev.unionByName(shifted.select(ev.columns))
-    out = tempfile.mkdtemp(prefix="cts_replay_")
+    out = temp_dir("cts_replay_")
     staged = os.path.join(out, "_staged")
     (
         ev.withColumn("bucket", F.format_string("%04d", F.col("day")))
@@ -240,37 +247,55 @@ def suggest_stream_partitions(source_dir: str, spark: SparkSession) -> int:
     return max(4, min(-(-biggest // (32 * 1024 * 1024)), session_val))
 
 
-def stream_shuffle_scope(spark: SparkSession, source_dir: str):
-    """Scoped shuffle-partition override for streaming queries started
-    OUTSIDE :func:`run_stream_to_memory` (foreachBatch sinks, state-
-    reader checkpoints): applies :func:`suggest_stream_partitions` for
-    the duration of the block and restores the session value after —
-    the partition count is locked into the query at start, so the
-    restore cannot affect a running stream."""
-    return conf_scope(
-        spark,
-        {"spark.sql.shuffle.partitions": str(suggest_stream_partitions(source_dir, spark))},
-    )
+def _unload_state_stores(spark: SparkSession) -> None:
+    """Close every state-store provider loaded in this (local) JVM, so no
+    background RocksDB maintenance is still snapshotting a checkpoint
+    when it is deleted. The next stateful batch reloads its stores from
+    its own checkpoint."""
+    pkg = spark._jvm.org.apache.spark.sql.execution.streaming.state
+    getattr(getattr(pkg, "StateStore$"), "MODULE$").unloadAll()
 
 
-def run_to_completion(writer, name: str, tag: str, timeout_sec: float = 600.0):
+def run_to_completion(
+    writer,
+    name: str,
+    tag: str,
+    *,
+    checkpoint: str | None = None,
+    source_dir: str | None = None,
+    timeout_sec: float = 600.0,
+):
     """Start ``writer`` (a configured ``DataStreamWriter``) as an
-    AvailableNow query on a fresh ``cts_ckpt_{tag}_*`` checkpoint, wait
-    for it through :func:`await_or_raise`, and return the terminated
-    query. The checkpoint is removed however the query ends: every
-    caller starts a fresh stream, so a finished checkpoint is dead
-    weight on disk."""
-    ckpt = tempfile.mkdtemp(prefix=f"cts_ckpt_{tag}_")
+    AvailableNow query, wait for it through :func:`await_or_raise`, and
+    return the terminated query.
+
+    ``checkpoint=None`` runs on a fresh ``cts_ckpt_{tag}_*`` checkpoint
+    that is removed however the query ends, after the JVM's state stores
+    are released. A checkpoint passed in belongs to the caller and is
+    kept (restart loops, state readers, lakehouse tables).
+    ``source_dir``: the replay-file directory feeding the stream; the
+    query then runs with :func:`suggest_stream_partitions` shuffle
+    partitions inside a ``conf_scope``, so the session value comes back
+    afterwards. None leaves the session's setting untouched."""
+    spark = writer._spark
+    confs = {}
+    if source_dir is not None:
+        partitions = suggest_stream_partitions(source_dir, spark)
+        confs["spark.sql.shuffle.partitions"] = str(partitions)
+    ckpt = temp_dir(f"cts_ckpt_{tag}_") if checkpoint is None else checkpoint
     try:
-        q = (
-            writer.option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, name, timeout_sec)
+        with conf_scope(spark, confs):
+            q = (
+                writer.option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            await_or_raise(q, name, timeout_sec)
         return q
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        if checkpoint is None:
+            _unload_state_stores(spark)
+            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
@@ -321,19 +346,12 @@ def run_stream_to_memory(
     memory-sink rows live on the driver, so the returned DataFrame does
     not depend on either setting after the query terminates."""
     spark = stream_df.sparkSession
-    confs = {_CHANGELOG_CONF: "true"}
-    if source_dir is not None:
-        confs["spark.sql.shuffle.partitions"] = str(
-            suggest_stream_partitions(source_dir, spark)
-        )
 
     def _run():
-        writer = stream_df.writeStream.format("memory").queryName(name)
-        return run_to_completion(
-            writer.outputMode(output_mode), name, name, timeout_sec
-        )
+        writer = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+        return run_to_completion(writer, name, name, source_dir=source_dir, timeout_sec=timeout_sec)
 
-    with conf_scope(spark, confs):
+    with conf_scope(spark, {_CHANGELOG_CONF: "true"}):
         try:
             with conf_scope(spark, {_PROVIDER_CONF: _ROCKSDB}):
                 q = _run()

@@ -42,16 +42,14 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cloudtrail_streamer_spark.catalog import table
+from cloudtrail_streamer_spark.catalog import table, temp_dir
 from cloudtrail_streamer_spark.registry import query
 from cloudtrail_streamer_spark.streaming import harness
-from cloudtrail_streamer_spark.streaming.harness import await_or_raise
 
 MAX_BATCH_RECORDS = 500
 MAX_BATCH_BYTES = 5 * 1024 * 1024
@@ -194,9 +192,9 @@ def deliver_stream(keyed: DataFrame, tag: str, name: str) -> str:
     spool dir (``cts_{tag}_spool_*``) the stub 'stream' now holds. Build
     ``keyed`` on the streaming DataFrame, so each micro-batch arrives
     already keyed and costs only the delivery job. The checkpoint is
-    removed once the query terminates; the spool is kept, because the
-    caller's readback reads it lazily."""
-    spool = tempfile.mkdtemp(prefix=f"cts_{tag}_spool_")
+    removed once the query terminates; the spool lives until interpreter
+    exit, because the caller's readback reads it lazily."""
+    spool = temp_dir(f"cts_{tag}_spool_")
 
     def deliver(batch_df: DataFrame, batch_id: int) -> None:
         deliver_partitions(batch_df, spool, STREAM_NAME, batch_id)
@@ -279,14 +277,9 @@ def sink_idempotent_batchid(spark: SparkSession, sf_dir: str) -> DataFrame:
     — and certifies delivery didn't grow. H-tier certificate:
     (n_source, n_delivered, retry_delta=0) hash-checked against the
     events table."""
-    import os
-    import uuid
-
-    from cloudtrail_streamer_spark.streaming import harness
-
     replay = harness.write_replay_files(spark, sf_dir)
     stream = harness.read_replay_stream(spark, replay)
-    base = tempfile.mkdtemp(prefix="cts_idem_")
+    base = temp_dir("cts_idem_")
 
     def deliver(batch_df: DataFrame, batch_id: int) -> None:
         marker = os.path.join(base, f"_COMMIT_{batch_id:05d}")
@@ -297,13 +290,8 @@ def sink_idempotent_batchid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         open(marker, "w").close()  # commit point (atomic create)
 
-    q = (
-        stream.writeStream.foreachBatch(deliver)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="cts_ckpt_idem_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_raise(q, "sink_idempotent_batchid", 600.0)
+    writer = stream.writeStream.foreachBatch(deliver)
+    harness.run_to_completion(writer, "sink_idempotent_batchid", "idem")
 
     glob = os.path.join(base, "batch=*")
     before = spark.read.schema(harness.EVENTS_SCHEMA).json(glob).count()
@@ -344,7 +332,7 @@ def sink_fanout_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     certificate row proves neither fork lost or duplicated records."""
     replay = harness.write_replay_files(spark, sf_dir)
     stream = harness.read_replay_stream(spark, replay)
-    base = tempfile.mkdtemp(prefix="cts_fanout_")
+    base = temp_dir("cts_fanout_")
     lake = os.path.join(base, "lake")
     spool = os.path.join(base, "spool")
 

@@ -10,13 +10,10 @@ envelope decode.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cloudtrail_streamer_spark.streaming.harness import await_or_raise
-from cloudtrail_streamer_spark.catalog import table
+from cloudtrail_streamer_spark.catalog import table, temp_dir
 from cloudtrail_streamer_spark.functions import dsum
 from cloudtrail_streamer_spark.registry import query
 from cloudtrail_streamer_spark.streaming import harness
@@ -150,7 +147,7 @@ def source_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     txt = ev.select(
         F.when(F.col("event_id") % 50 == 0, mangled).otherwise(line).alias("value")
     )
-    base = tempfile.mkdtemp(prefix="cts_corrupt_")
+    base = temp_dir("cts_corrupt_")
     feed = os.path.join(base, "feed")
     txt.write.mode("overwrite").option("compression", "gzip").text(feed)
 
@@ -188,7 +185,7 @@ def source_json_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     round trip is lossless (shortest-repr doubles, ISO micros), so the
     counts/sums match the parquet-sourced oracle exactly."""
     ev = table(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="cts_jsongz_") + "/events_json"
+    out = temp_dir("cts_jsongz_") + "/events_json"
     ev.write.mode("overwrite").option("compression", "gzip").json(out)
     back = spark.read.schema(harness.EVENTS_SCHEMA).json(out)
     return back.groupBy("event_type").agg(
@@ -223,28 +220,22 @@ def source_incremental_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame
     from pyspark.sql import functions as _F
 
     replay = harness.write_replay_files(spark, sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="cts_ckpt_incr_")
+    ckpt = temp_dir("cts_ckpt_incr_")
     sink: dict[str, int] = {"run1": 0, "run2": 0, "key": "run1"}
 
     def count_batch(batch_df, batch_id):
         sink[sink["key"]] += batch_df.count()
 
     def run_once():
-        q = (
-            harness.read_replay_stream(spark, replay)
-            .writeStream.foreachBatch(count_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, "source_incremental_checkpoint", 600.0)
+        writer = harness.read_replay_stream(spark, replay).writeStream.foreachBatch(count_batch)
+        harness.run_to_completion(writer, "source_incremental_checkpoint", "incr", checkpoint=ckpt)
 
     run_once()
 
     # a late file arrives: the event_id % 10 == 0 slice, re-delivered
     late = table(spark, sf_dir, "events").where(_F.col("event_id") % 10 == 0)
     late_path = os.path.join(replay, f"late_{uuid.uuid4().hex[:8]}.json")
-    staged = tempfile.mkdtemp(prefix="cts_late_")
+    staged = temp_dir("cts_late_")
     late.coalesce(1).write.mode("overwrite").json(staged)
     part = [f for f in os.listdir(staged) if f.endswith(".json")][0]
     os.rename(os.path.join(staged, part), late_path)
@@ -277,29 +268,26 @@ def source_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel, no replay needed.
 
     A per-user running-count stream runs to completion (AvailableNow)
-    with its checkpoint retained; the op then (a) lists the stateful
-    operator via the companion `state-metadata` source and asserts
-    exactly one keyed store, and (b) reads the final state and returns
-    (user_id, n) — which must equal the batch GROUP BY, because the
-    post-replay state IS the aggregate. H-tier against that oracle."""
-    import shutil
+    on a checkpoint that lives until interpreter exit; the op then (a)
+    lists the stateful operator via the companion `state-metadata`
+    source and asserts exactly one keyed store, and (b) reads the final
+    state lazily and returns (user_id, n) — which must equal the batch
+    GROUP BY, because the post-replay state IS the aggregate. H-tier
+    against that oracle."""
     import uuid
 
     replay = harness.write_replay_files(spark, sf_dir)
     stream = harness.read_replay_stream(spark, replay)
     agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
-    ckpt = tempfile.mkdtemp(prefix="cts_ckpt_statereader_")
-    name = f"state_reader_{uuid.uuid4().hex[:8]}"
-    with harness.stream_shuffle_scope(spark, replay):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, "source_state_store_reader", 600.0)
+    ckpt = temp_dir("cts_ckpt_statereader_")
+    writer = (
+        agg.writeStream.format("memory")
+        .queryName(f"state_reader_{uuid.uuid4().hex[:8]}")
+        .outputMode("update")
+    )
+    harness.run_to_completion(
+        writer, "source_state_store_reader", "statereader", checkpoint=ckpt, source_dir=replay
+    )
 
     meta = spark.read.format("state-metadata").load(ckpt)
     stateful_ops = meta.select("operatorId", "stateStoreName").collect()
@@ -308,11 +296,7 @@ def source_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"expected one keyed store, got {stateful_ops}",
     )
 
-    state = spark.read.format("statestore").load(ckpt)
-    out = state.select(
+    return spark.read.format("statestore").load(ckpt).select(
         F.col("key.user_id").alias("user_id"),
         F.col("value.count").cast("long").alias("n"),
     )
-    rows = out.collect()  # materialize before the checkpoint is removed
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.createDataFrame(rows, schema="user_id long, n long")

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import zlib
 
 from pyspark import TaskContext
@@ -32,6 +31,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from cloudtrail_streamer_spark.catalog import temp_dir
 from cloudtrail_streamer_spark.registry import query
 from cloudtrail_streamer_spark.streaming import harness
 from cloudtrail_streamer_spark.streaming.sinks import (
@@ -205,7 +205,7 @@ def sink_kinesis_custom_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts equal the source table."""
     register(spark)
     replay = harness.write_replay_files(spark, sf_dir)
-    out_spool = tempfile.mkdtemp(prefix="cts_dswriter_spool_")
+    out_spool = temp_dir("cts_dswriter_spool_")
     writer = (
         keyed_events(harness.read_replay_stream(spark, replay))
         .writeStream.format("kinesis_spool")

@@ -14,14 +14,12 @@ B-48..B-50 bound state with watermarks — the 100 TB requirement
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cloudtrail_streamer_spark.streaming.harness import await_or_raise
-from cloudtrail_streamer_spark.catalog import table
+from cloudtrail_streamer_spark.catalog import table, temp_dir
 from cloudtrail_streamer_spark.functions import dsum
 from cloudtrail_streamer_spark.registry import query
 from cloudtrail_streamer_spark.streaming import harness
@@ -387,7 +385,7 @@ def stream_upsert_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     replay = harness.write_replay_files(spark, sf_dir)
     stream = harness.read_replay_stream(spark, replay)
-    base = tempfile.mkdtemp(prefix="cts_upsert_")
+    base = temp_dir("cts_upsert_")
     current: dict[str, str | None] = {"path": None}
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
@@ -405,16 +403,8 @@ def stream_upsert_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial.write.mode("overwrite").parquet(new_path)
         current["path"] = new_path  # the "commit": atomic pointer swap
 
-    with harness.stream_shuffle_scope(spark, replay):
-        q = (
-            stream.writeStream.foreachBatch(upsert)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="cts_ckpt_upsert_")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_raise(q, "stream_upsert_keyed", 600.0)
+    writer = stream.writeStream.foreachBatch(upsert)
+    harness.run_to_completion(writer, "stream_upsert_keyed", "upsert", source_dir=replay)
     return spark.read.parquet(current["path"]).select(
         "user_id",
         F.col("n").cast("long").alias("n"),

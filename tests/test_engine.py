@@ -324,12 +324,13 @@ def test_bucketed_join_leaves_no_catalog_residue(spark):
     wrong-#3): invoking it twice must not grow the catalog or the bucket
     directory set."""
     import os
-    import tempfile
+
+    from cloudtrail_streamer_spark.catalog import scratch_dir
 
     q = all_queries()["join_bucketed_colocated"]
     q(spark, SF).count()
     tables_after_1 = {t.name for t in spark.catalog.listTables()}
-    base = os.path.join(tempfile.gettempdir(), "cts_bucketed")
+    base = scratch_dir("join_bucketed_colocated", SF)
     dirs_after_1 = set(os.listdir(base))
     q(spark, SF).count()
     assert {t.name for t in spark.catalog.listTables()} == tables_after_1
@@ -1218,3 +1219,31 @@ def test_bench_contract_without_spark():
         "marginal_sf10",
         "detail",
     }
+
+
+def test_one_stream_start_site_and_one_temp_dir_owner():
+    """Only streaming/harness.py starts a streaming query (AvailableNow
+    trigger, checkpoint location), and only catalog.py calls
+    tempfile.mkdtemp: every other module goes through
+    harness.run_to_completion and catalog.temp_dir."""
+    import os
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "cloudtrail_streamer_spark"
+    )
+    patterns = {
+        r"trigger\(\s*availableNow": {"harness.py"},
+        r"checkpointLocation": {"harness.py"},
+        r"tempfile\.mkdtemp": {"catalog.py"},
+    }
+    found = {p: set() for p in patterns}
+    for dirpath, _, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(dirpath, f)) as fh:
+                    src = fh.read()
+                for p in patterns:
+                    if re.search(p, src):
+                        found[p].add(f)
+    assert found == patterns

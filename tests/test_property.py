@@ -507,11 +507,9 @@ def test_power_iteration_converges_toward_numpy_eig(spark):
 import math
 
 
-def _fixture_dir(spark, name: str, tables: dict[str, "pd.DataFrame"], schemas: dict[str, str]) -> str:
+def _fixture_dir(spark, tmp_path, tables: dict[str, "pd.DataFrame"], schemas: dict[str, str]) -> str:
     """Write a tiny parquet catalog dir the registry ops can read."""
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix=f"cts_flaw_{name}_")
+    d = str(tmp_path)
     for t, pdf in tables.items():
         spark.createDataFrame(pdf, schema=schemas[t]).coalesce(1).write.mode(
             "overwrite"
@@ -543,7 +541,7 @@ def _docs_pdf(texts: list[str]) -> pd.DataFrame:
     )
 
 
-def test_perplexity_formula_bites(spark):
+def test_perplexity_formula_bites(spark, tmp_path):
     """text_perplexity_score vs a from-scratch add-one bigram LM.
     The fixture repeats bigram 'a b' so n_pair varies, and its vocab is
     small so the +V smoothing term is a large fraction of the
@@ -551,7 +549,7 @@ def test_perplexity_formula_bites(spark):
     from cloudtrail_streamer_spark.registry import all_queries
 
     texts = ["a b a b c", "a b b c", "c a a b"]
-    d = _fixture_dir(spark, "ppl", {"documents": _docs_pdf(texts)}, {"documents": _DOCS_SCHEMA})
+    d = _fixture_dir(spark, tmp_path, {"documents": _docs_pdf(texts)}, {"documents": _DOCS_SCHEMA})
     got = {
         r["doc_id"]: (r["n_bigrams"], r["ppl_bits"], r["keep_quality"])
         for r in all_queries()["text_perplexity_score"](spark, d).collect()
@@ -581,7 +579,7 @@ def test_perplexity_formula_bites(spark):
     assert abs(unsmoothed - smoothed) > 0.3
 
 
-def test_bm25_formula_bites(spark):
+def test_bm25_formula_bites(spark, tmp_path):
     """text_bm25_topk vs from-scratch Okapi BM25 (k1=1.2, b=0.75).
     Docs differ in length AND term frequency, so both the tf-saturation
     and the dl/avgdl length-normalization terms move scores; a doc with
@@ -595,7 +593,7 @@ def test_bm25_formula_bites(spark):
         "stream one two three four five six seven eight nine ten",  # long tail
         "no query terms here at all",
     ]
-    d = _fixture_dir(spark, "bm25", {"documents": _docs_pdf(texts)}, {"documents": _DOCS_SCHEMA})
+    d = _fixture_dir(spark, tmp_path, {"documents": _docs_pdf(texts)}, {"documents": _DOCS_SCHEMA})
     got = {r["doc_id"]: r["bm25"] for r in all_queries()["text_bm25_topk"](spark, d).collect()}
     toks = [t.lower().split(" ") for t in texts]
     dls = [len(ws) for ws in toks]
@@ -622,7 +620,7 @@ def test_bm25_formula_bites(spark):
     assert abs(no_b - want[1]) / want[1] > 0.05
 
 
-def test_ols_formula_bites(spark):
+def test_ols_formula_bites(spark, tmp_path):
     """agg_regression_ols vs numpy.polyfit on scattered (not collinear)
     points with a non-zero intercept — dropping the intercept term or
     mixing up Σxy/ΣxΣy (mirrored in both engines) would diverge."""
@@ -646,7 +644,7 @@ def test_ols_formula_bites(spark):
             "l_shipdate": pd.to_datetime(["2024-01-01"] * n),
         }
     )
-    d = _fixture_dir(spark, "ols", {"lineitem": pdf}, {"lineitem": _LI_SCHEMA})
+    d = _fixture_dir(spark, tmp_path, {"lineitem": pdf}, {"lineitem": _LI_SCHEMA})
     row = all_queries()["agg_regression_ols"](spark, d).collect()[0]
     y_cents = np.round(np.array(price) * 100.0)
     slope_c, inter_c = np.polyfit(np.array(q, dtype=float), y_cents, 1)
@@ -656,7 +654,7 @@ def test_ols_formula_bites(spark):
     assert abs(inter_c / 100.0) > 0.3  # the intercept term genuinely bites
 
 
-def test_moments_formula_bites(spark):
+def test_moments_formula_bites(spark, tmp_path):
     """agg_moments_exact (raw power sums) vs central-moment numpy on a
     deliberately skewed sample — a mirrored sign/coefficient slip in the
     m3/m4 expansion would diverge from the central formulation."""
@@ -679,7 +677,7 @@ def test_moments_formula_bites(spark):
             "l_shipdate": pd.to_datetime(["2024-01-01"] * n),
         }
     )
-    d = _fixture_dir(spark, "mom", {"lineitem": pdf}, {"lineitem": _LI_SCHEMA})
+    d = _fixture_dir(spark, tmp_path, {"lineitem": pdf}, {"lineitem": _LI_SCHEMA})
     row = all_queries()["agg_moments_exact"](spark, d).collect()[0]
     x = np.array(q, dtype=float)
     mu = x.mean()
@@ -693,7 +691,7 @@ def test_moments_formula_bites(spark):
     assert skew > 1.0 and kurt > 1.0  # higher moments genuinely bite
 
 
-def test_pmi_formula_bites(spark):
+def test_pmi_formula_bites(spark, tmp_path):
     """text_pmi_bigrams vs a from-scratch PMI table. The fixture pushes
     one bigram over the c12>=5 floor with UNBALANCED unigram counts, so
     swapping c(a)*c(b) for c(a)+c(b) or dropping N (mirrored) moves the
@@ -706,7 +704,7 @@ def test_pmi_formula_bites(spark):
         "z w z w z w z w z q",
         "x z x z x z y w y w y w",  # x/y unigrams without (x,y) bigrams
     ]
-    d = _fixture_dir(spark, "pmi", {"documents": _docs_pdf(texts)}, {"documents": _DOCS_SCHEMA})
+    d = _fixture_dir(spark, tmp_path, {"documents": _docs_pdf(texts)}, {"documents": _DOCS_SCHEMA})
     got = {(r["w1"], r["w2"]): (r["c12"], r["pmi"]) for r in all_queries()["text_pmi_bigrams"](spark, d).collect()}
     toks = [t.lower().split(" ") for t in texts]
     uni, pair = {}, {}
@@ -729,7 +727,7 @@ def test_pmi_formula_bites(spark):
     assert by_pmi != by_count
 
 
-def test_ewma_formula_bites(spark):
+def test_ewma_formula_bites(spark, tmp_path):
     """events_ewma_hourly (Horner fold / closed-form denominator) vs the
     textbook normalized-weights EWMA Σ α^k·x_{t-k} / Σ α^k. A spiky
     series makes the decay weights bite: the EWMA must sit strictly
@@ -748,7 +746,7 @@ def test_ewma_formula_bites(spark):
             "props": ["{}"] * len(vals),
         }
     )
-    d = _fixture_dir(spark, "ewma", {"events": pdf}, {"events": _EV_SCHEMA})
+    d = _fixture_dir(spark, tmp_path, {"events": pdf}, {"events": _EV_SCHEMA})
     got = {r["h"]: (r["cents"], r["ewma"]) for r in all_queries()["events_ewma_hourly"](spark, d).collect()}
     cents = [round(v * 100) for v in vals]
     for t in range(len(vals)):
@@ -808,7 +806,7 @@ def _events_pdf(rows: list[tuple]) -> pd.DataFrame:
     )
 
 
-def test_chisq_formula_bites(spark):
+def test_chisq_formula_bites(spark, tmp_path):
     """agg_chisq_independence vs a from-scratch contingency recompute.
     The lang x source fixture is strongly DEPENDENT (en concentrates in
     web, fr in wiki), so expected-under-independence differs from
@@ -827,7 +825,7 @@ def test_chisq_formula_bites(spark):
             sources.append(src)
     pdf = _docs_pdf(texts)
     pdf["lang"], pdf["source"] = langs, sources
-    d = _fixture_dir(spark, "chisq", {"documents": pdf}, {"documents": _DOCS_SCHEMA})
+    d = _fixture_dir(spark, tmp_path, {"documents": pdf}, {"documents": _DOCS_SCHEMA})
     got = {
         (r["lang"], r["source"]): (r["n_obs"], r["expected"], r["chi2_term"])
         for r in all_queries()["agg_chisq_independence"](spark, d).collect()
@@ -847,7 +845,7 @@ def test_chisq_formula_bites(spark):
     assert min(t[2] for t in got.values()) > 0.5
 
 
-def test_rolling_corr_formula_bites(spark):
+def test_rolling_corr_formula_bites(spark, tmp_path):
     """win_rolling_corr vs six-sum Pearson recomputed per trailing-24
     frame. The click/view series co-move for the first day then
     decouple, so the 24-row frame boundary bites: the final hour's
@@ -861,7 +859,7 @@ def test_rolling_corr_formula_bites(spark):
     for t in range(hours):
         ts = pd.Timestamp("2024-01-01") + pd.Timedelta(hours=t)
         rows += [(ts, 0, "click", 1.0)] * x[t] + [(ts, 0, "view", 1.0)] * y[t]
-    d = _fixture_dir(spark, "rcorr", {"events": _events_pdf(rows)}, {"events": _EV_SCHEMA})
+    d = _fixture_dir(spark, tmp_path, {"events": _events_pdf(rows)}, {"events": _EV_SCHEMA})
     got = {
         r["h"]: (r["x"], r["y"], r["corr24"])
         for r in all_queries()["win_rolling_corr"](spark, d).collect()
@@ -889,7 +887,7 @@ def test_rolling_corr_formula_bites(spark):
     assert abs(pearson(x[-24:], y[-24:]) - pearson(x, y)) > 0.05
 
 
-def test_readability_formula_bites(spark):
+def test_readability_formula_bites(spark, tmp_path):
     """text_readability_score vs a from-scratch vowel-group count. The
     'xx' corpus is all vowel-less words, so the floor-at-1 term carries
     its entire syllable count — dropping greatest(..., 1) (mirrored in
@@ -908,7 +906,7 @@ def test_readability_formula_bites(spark):
         langs += [lg] * len(docs)
     pdf = _docs_pdf(texts)
     pdf["lang"] = langs
-    d = _fixture_dir(spark, "read", {"documents": pdf}, {"documents": _DOCS_SCHEMA})
+    d = _fixture_dir(spark, tmp_path, {"documents": pdf}, {"documents": _DOCS_SCHEMA})
     got = {
         r["lang"]: (
             r["n_docs"],
@@ -933,7 +931,7 @@ def test_readability_formula_bites(spark):
     assert got["xx"][2] == got["xx"][1]
 
 
-def test_welch_formula_bites(spark):
+def test_welch_formula_bites(spark, tmp_path):
     """agg_t_test_welch vs scipy-free Welch recompute on samples with
     UNEQUAL variance and n — the regime where Welch differs from the
     pooled t-test and Welch-Satterthwaite df differs from n-2."""
@@ -944,7 +942,7 @@ def test_welch_formula_bites(spark):
     rows = [("2024-01-01", 0, "click", v) for v in clicks] + [
         ("2024-01-01", 1, "purchase", v) for v in purch
     ]
-    d = _fixture_dir(spark, "welch", {"events": _events_pdf(rows)}, {"events": _EV_SCHEMA})
+    d = _fixture_dir(spark, tmp_path, {"events": _events_pdf(rows)}, {"events": _EV_SCHEMA})
     r = all_queries()["agg_t_test_welch"](spark, d).collect()[0]
     ca = [round(v * 100) for v in clicks]
     cb = [round(v * 100) for v in purch]
@@ -970,7 +968,7 @@ def test_welch_formula_bites(spark):
     assert abs(df_want - (na + nb - 2)) > 4
 
 
-def test_psi_formula_bites(spark):
+def test_psi_formula_bites(spark, tmp_path):
     """agg_psi_drift vs a from-scratch smoothed-PSI recompute. Bucket 2
     exists ONLY in the reference period, so without Laplace +1 its term
     would be infinite — the smoothing provably carries that row."""
@@ -985,7 +983,7 @@ def test_psi_formula_bites(spark):
         + [("2024-01-10", 0, "click", 125.0)] * 4   # bucket 2, period a ONLY
         + [("2024-01-20", 0, "click", 990.0)] * 5   # bucket 9 (clamped), b
     )
-    d = _fixture_dir(spark, "psi", {"events": _events_pdf(rows)}, {"events": _EV_SCHEMA})
+    d = _fixture_dir(spark, tmp_path, {"events": _events_pdf(rows)}, {"events": _EV_SCHEMA})
     got = {
         r["bucket"]: (r["n_ref"], r["n_cur"], r["p_ref"], r["p_cur"], r["psi_term"])
         for r in all_queries()["agg_psi_drift"](spark, d).collect()
@@ -1007,7 +1005,7 @@ def test_psi_formula_bites(spark):
     assert got[2][1] == 0 and math.isfinite(got[2][4]) and got[2][4] > 0
 
 
-def test_ab_ztest_formula_bites(spark):
+def test_ab_ztest_formula_bites(spark, tmp_path):
     """agg_ab_test_ztest vs a from-scratch two-proportion z with POOLED
     variance, on variants with very different conversion rates — the
     regime where pooled and unpooled standard errors diverge."""
@@ -1024,7 +1022,7 @@ def test_ab_ztest_formula_bites(spark):
         rows.append(("2024-01-01", u, "view", 1.0))
         if u != 15:
             rows.append(("2024-01-02", u, "purchase", 5.0))
-    d = _fixture_dir(spark, "abz", {"events": _events_pdf(rows)}, {"events": _EV_SCHEMA})
+    d = _fixture_dir(spark, tmp_path, {"events": _events_pdf(rows)}, {"events": _EV_SCHEMA})
     r = all_queries()["agg_ab_test_ztest"](spark, d).collect()[0]
     n0, c0, n1, c1 = 10, 2, 8, 7
     p0, p1 = c0 / n0, c1 / n1
@@ -1039,7 +1037,7 @@ def test_ab_ztest_formula_bites(spark):
     assert abs(z_unpooled - z_want) / abs(z_want) > 0.02
 
 
-def test_gini_formula_bites(spark):
+def test_gini_formula_bites(spark, tmp_path):
     """agg_gini_coefficient vs the rank-weighted formula recomputed from
     scratch on a skewed revenue split (one whale). Ranks are ASCENDING
     by revenue — reversing the rank order (a mirrored slip) yields a
@@ -1050,7 +1048,7 @@ def test_gini_formula_bites(spark):
     orders = [(1, 10.00), (2, 10.00), (3, 25.00), (4, 40.00), (5, 300.00), (5, 115.00)]
     d = _fixture_dir(
         spark,
-        "gini",
+        tmp_path,
         {"orders": _orders_pdf([c for c, _ in orders], [p for _, p in orders])},
         {"orders": _ORDERS_SCHEMA},
     )
@@ -1069,7 +1067,7 @@ def test_gini_formula_bites(spark):
     assert g_want > 0.3  # the whale genuinely concentrates revenue
 
 
-def test_entropy_formula_bites(spark):
+def test_entropy_formula_bites(spark, tmp_path):
     """agg_entropy_peruser vs -sum(p*log2 p) recomputed directly. The
     identity H = log2(n) - (sum n_i log2 n_i)/n must reproduce the
     textbook form exactly; an uneven user's H sits strictly below
@@ -1083,7 +1081,7 @@ def test_entropy_formula_bites(spark):
         for et, c in mix.items()
         for _ in range(c)
     ]
-    d = _fixture_dir(spark, "ent", {"events": _events_pdf(rows)}, {"events": _EV_SCHEMA})
+    d = _fixture_dir(spark, tmp_path, {"events": _events_pdf(rows)}, {"events": _EV_SCHEMA})
     got = {
         r["user_id"]: (r["n"], r["n_types"], r["entropy_bits"])
         for r in all_queries()["agg_entropy_peruser"](spark, d).collect()

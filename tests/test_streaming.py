@@ -175,14 +175,13 @@ def test_kinesis_sink_delivers_all(spark):
     assert n == _events_count(spark), "chunked retry writer must deliver every record"
 
 
-def test_kinesis_chunking_limits():
+def test_kinesis_chunking_limits(tmp_path):
     from cloudtrail_streamer_spark.streaming.sinks import (
         KinesisStubClient,
         put_records_chunked,
     )
-    import tempfile
 
-    client = KinesisStubClient(tempfile.mkdtemp(), fail_every=5)
+    client = KinesisStubClient(str(tmp_path), fail_every=5)
     records = [
         {"Data": f"payload-{i}".encode(), "PartitionKey": str(i % 4)} for i in range(1234)
     ]
@@ -367,22 +366,22 @@ def test_custom_state_final_equals_batch(spark):
     assert out_rows[0]["n_data_batches"] > 1
 
 
-def test_checkpoint_recovery_exactly_once(spark):
+def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     """Restart tolerance (the reference's Lambda-redelivery analog):
     a file-sink stream stopped after a partial feed and resumed from the
     same checkpoint must produce every source row exactly once."""
     import os
     import shutil
-    import tempfile
 
     replay = harness.write_replay_files(spark, SF)
-    held = tempfile.mkdtemp(prefix="cts_held_")
+    held = tmp_path / "held"
+    held.mkdir()
     files = sorted(os.listdir(replay))
     for f in files[len(files) // 2 :]:  # hold back the second half
         shutil.move(os.path.join(replay, f), os.path.join(held, f))
 
-    out = tempfile.mkdtemp(prefix="cts_recov_out_")
-    ckpt = tempfile.mkdtemp(prefix="cts_recov_ckpt_")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
 
     def run_once():
         q = (
@@ -407,18 +406,16 @@ def test_checkpoint_recovery_exactly_once(spark):
     )
 
 
-def test_custom_datasource_stream_writer_roundtrip(spark):
+def test_custom_datasource_stream_writer_roundtrip(spark, tmp_path):
     """writeStream.format('kinesis_spool') must deliver every source row
     executor-side (chunked retrying client, no driver collect); reading
     the delivered spool back through the batch connector recovers the
     exact event_id set."""
-    import tempfile
-
     from cloudtrail_streamer_spark.streaming.spool_source import register
 
     register(spark)
     replay = harness.write_replay_files(spark, SF)
-    out_spool = tempfile.mkdtemp(prefix="cts_dsw_test_")
+    out_spool = str(tmp_path / "spool")
     events = harness.read_replay_stream(spark, replay)
     q = (
         events.select(
@@ -427,7 +424,7 @@ def test_custom_datasource_stream_writer_roundtrip(spark):
         )
         .writeStream.format("kinesis_spool")
         .option("path", out_spool)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="cts_ckpt_dswt_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -641,20 +638,19 @@ def test_session_dynamic_gap_stream_equals_batch(spark):
     assert got == want
 
 
-def test_timeout_raises_not_partial(spark):
+def test_timeout_raises_not_partial(spark, tmp_path):
     """VERDICT r09 "What's wrong" #1: a query that cannot finish within
     the timeout must RAISE (after stopping the query), never fall
     through to reading a partial memory sink. Three one-row files with a
     2 s/row sleeping UDF cannot finish in 1 s."""
     import json
     import os
-    import tempfile
     import time
 
     from pyspark.sql.functions import udf
     from pyspark.sql.types import LongType
 
-    replay = tempfile.mkdtemp(prefix="cts_slow_replay_")
+    replay = str(tmp_path)
     for i in range(3):
         p = os.path.join(replay, f"f_{i:04d}.json")
         with open(p, "w") as fh:
@@ -747,13 +743,12 @@ def test_classifier_prefers_error_condition_over_message():
     assert harness._is_provider_load_error(e3)
 
 
-def _tiny_replay_stream(spark):
+def _tiny_replay_stream(spark, tmp_path):
     """Two one-row files -> a trivially fast file-source stream."""
     import json
     import os
-    import tempfile
 
-    replay = tempfile.mkdtemp(prefix="cts_fi_replay_")
+    replay = str(tmp_path)
     for i in range(2):
         p = os.path.join(replay, f"f_{i:04d}.json")
         with open(p, "w") as fh:
@@ -764,7 +759,7 @@ def _tiny_replay_stream(spark):
     )
 
 
-def test_runtime_commit_error_propagates_not_retried(spark, monkeypatch):
+def test_runtime_commit_error_propagates_not_retried(spark, monkeypatch, tmp_path):
     """Fault injection (VERDICT r10 #3): a runtime
     CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT raised while awaiting the
     query must PROPAGATE out of run_stream_to_memory — exactly one
@@ -794,7 +789,7 @@ def test_runtime_commit_error_propagates_not_retried(spark, monkeypatch):
     monkeypatch.setattr(harness, "await_or_raise", inject)
     name = f"fi_commit_{uuid.uuid4().hex[:8]}"
     with pytest.raises(_ConditionError, match="CANNOT_COMMIT"):
-        harness.run_stream_to_memory(_tiny_replay_stream(spark), name)
+        harness.run_stream_to_memory(_tiny_replay_stream(spark, tmp_path), name)
     assert calls == [name], "runtime state-store failure must not be retried"
     assert (
         spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
@@ -809,7 +804,7 @@ def test_runtime_commit_error_propagates_not_retried(spark, monkeypatch):
     )
 
 
-def test_provider_class_load_error_is_retried(spark, monkeypatch):
+def test_provider_class_load_error_is_retried(spark, monkeypatch, tmp_path):
     """Fault injection (VERDICT r10 #3), the complementary case: a
     ClassNotFoundException-shaped failure on the FIRST await triggers
     exactly one retry on the default provider, which completes and
@@ -842,7 +837,7 @@ def test_provider_class_load_error_is_retried(spark, monkeypatch):
 
     monkeypatch.setattr(harness, "await_or_raise", inject_once)
     name = f"fi_load_{uuid.uuid4().hex[:8]}"
-    out = harness.run_stream_to_memory(_tiny_replay_stream(spark), name)
+    out = harness.run_stream_to_memory(_tiny_replay_stream(spark, tmp_path), name)
     assert len(calls) == 2, "load error must retry exactly once"
     assert sorted(r["v"] for r in out.collect()) == [0, 1]
     assert (
@@ -874,15 +869,63 @@ def test_suggest_stream_partitions_scales_with_input(spark, tmp_path):
 
 
 def test_stream_shuffle_scope_restores_session_conf(spark, tmp_path):
-    """The scoped override must apply inside the block and restore the
-    exact prior session value afterwards (ADVICE r10 #2 conf-leak rule)."""
-    from cloudtrail_streamer_spark.streaming.harness import stream_shuffle_scope
+    """run_to_completion's source_dir override must apply while the
+    query runs and restore the exact prior session value afterwards
+    (ADVICE r10 #2 conf-leak rule)."""
+    import json
 
     src = tmp_path / "replay"
     src.mkdir()
-    (src / "events_0001.json.gz").write_bytes(b"x" * 512)
+    (src / "events_0001.json").write_text(json.dumps({"v": 1}) + "\n")
     conf = "spark.sql.shuffle.partitions"
     prior = spark.conf.get(conf)
-    with stream_shuffle_scope(spark, str(src)):
-        assert int(spark.conf.get(conf)) <= max(4, int(prior))
+    seen = []
+
+    def record(batch_df, batch_id):
+        seen.append(spark.conf.get(conf))
+
+    writer = spark.readStream.schema("v LONG").json(str(src)).writeStream.foreachBatch(record)
+    harness.run_to_completion(writer, "shuffle_scope", "shuf", source_dir=str(src))
+    want = str(harness.suggest_stream_partitions(str(src), spark))
+    assert seen and set(seen) == {want}, seen
     assert spark.conf.get(conf) == prior
+
+
+_CHILD_RUN = """
+import sys
+
+sys.path.insert(0, sys.argv[1])
+from cloudtrail_streamer_spark.registry import all_queries
+from cloudtrail_streamer_spark.session import get_session
+from cloudtrail_streamer_spark.streaming import cloudtrail
+
+spark = get_session("cts-temp-owner")
+queries = all_queries()
+logs = cloudtrail.write_cloudtrail_files(spark, sys.argv[2], files=2)
+results = {
+    name: queries[name](spark, sys.argv[2])
+    for name in ("sink_idempotent_batchid", "source_state_store_reader")
+}
+results["_run_pipeline"] = cloudtrail._run_pipeline(spark, logs)
+for name, df in results.items():
+    if not df.collect():
+        raise SystemExit(f"{name} returned no rows")
+"""
+
+
+def test_streaming_temp_dirs_removed_at_exit(tmp_path):
+    """Every fixture, spool, output and checkpoint a streaming query
+    makes is gone once its process exits: a child process with its temp
+    dir pointed at ``tmp_path`` runs three queries that write all four
+    kinds, collects each result (the lazily read files must still be
+    there), and leaves no ``cts_*`` entry behind."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TMPDIR": str(tmp_path), "SPARK_GRAFT_CPUS": "2"}
+    subprocess.run(
+        [sys.executable, "-c", _CHILD_RUN, root, SF], env=env, check=True, timeout=900
+    )
+    assert not [e for e in os.listdir(tmp_path) if e.startswith("cts_")]
