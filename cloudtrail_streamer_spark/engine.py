@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cloudtrail_streamer_spark.catalog import DEFAULT_SF_DIR, TABLES, table
+from cloudtrail_streamer_spark.catalog import DEFAULT_SF_DIR, register_views, table
 from cloudtrail_streamer_spark.registry import all_queries
 from cloudtrail_streamer_spark.session import configure, get_session
 
@@ -38,8 +38,7 @@ class Engine:
         """ANSI SQL over the catalog tables (§3.2 entry point 2); views
         are registered lazily on first use."""
         if not self._views_registered:
-            for t in TABLES:
-                self.table(t).createOrReplaceTempView(t)
+            register_views(self.spark, self.sf_dir)
             self._views_registered = True
         return self.spark.sql(query)
 

@@ -27,11 +27,16 @@ pruning, which is exhaustive because region is split-constant. The
 pushdown path needs ``spark.sql.python.filterPushdown.enabled`` (a
 session.py RUNTIME_CONF); with it off, Spark keeps the Filter node and
 results are identical, just unpruned.
+
+The module also certifies the stub-Kinesis writers end to end: the
+events table through the ``kinesis_spool`` batch writer, and this
+generator's stream through its epoch-committed stream writer across
+restarts (streaming/spool_source.py owns both writers and the one spool
+format).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,19 +44,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     EqualTo,
     InputPartition,
     SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
 
 from cloudtrail_streamer_spark.catalog import table, temp_dir
 from cloudtrail_streamer_spark.registry import query
 from cloudtrail_streamer_spark.session import configure
 from cloudtrail_streamer_spark.streaming.harness import run_to_completion
-from cloudtrail_streamer_spark.streaming.sinks import put_records_chunked
+from cloudtrail_streamer_spark.streaming.sinks import KinesisStubClient, keyed_events
+from cloudtrail_streamer_spark.streaming.spool_source import read_manifests, register
 
 REGIONS = ["us-east-1", "us-west-2", "eu-west-1", "ap-south-1"]
 EVENT_NAMES = [
@@ -298,121 +301,33 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Batch writer: V2 commit protocol with Kinesis-style delivery caps
+# Writers: the kinesis_spool batch writer and its epoch-committed stream
+# writer (streaming/spool_source.py), certified end to end
 # ---------------------------------------------------------------------------
-
-
-class _ChunkCommit(WriterCommitMessage):
-    """Per-task delivery receipt (must be picklable)."""
-
-    def __init__(self, chunks: list[tuple[int, int]]):
-        self.chunks = chunks  # [(n_records, n_bytes), ...]
-
-
-def _manifest(messages) -> dict:
-    """Fold every task's receipts into one manifest's totals."""
-    chunks = [c for m in messages if m is not None for c in m.chunks]
-    return {
-        "n_chunks": len(chunks),
-        "n_records": sum(c[0] for c in chunks),
-        "max_chunk_records": max((c[0] for c in chunks), default=0),
-        "max_chunk_bytes": max((c[1] for c in chunks), default=0),
-    }
-
-
-def _write_json(path: str, obj: dict) -> None:
-    with open(path, "w") as fh:
-        json.dump(obj, fh)
-
-
-class _KinesisStubWriter(DataSourceWriter):
-    """Executor-side chunked delivery with the upstream forwarder's
-    limits (A-8: ≤500 records and ≤5 MB per PutRecords call). The writer
-    is itself a PutRecords client of ``sinks.put_records_chunked`` — the
-    one chunk loop — whose ``BYTE_CAP`` client parameter is a 256 KiB
-    test-scale cap (same mechanism). Each ``put_records`` call writes
-    one gzipped JSON-lines chunk and records its ``(n_records,
-    n_bytes)`` receipt; ``write`` returns the task's receipts. The
-    driver-side ``commit`` runs once, only if every task succeeded — the
-    transactional half the upstream Lambda lacks. ``abort`` removes this
-    attempt's files, so a retried job cannot double-deliver."""
-
-    RECORD_CAP = 500
-    BYTE_CAP = 256 * 1024
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        self.run_id = options.get("run_id", "r0")
-
-    def write(self, iterator):
-        self.chunks: list[tuple[int, int]] = []
-        lines = ((json.dumps(row.asDict(), default=str) + "\n").encode() for row in iterator)
-        put_records_chunked(self, self.run_id, ({"Data": d, "PartitionKey": ""} for d in lines))
-        return _ChunkCommit(self.chunks)
-
-    def put_records(self, StreamName: str, Records: list[dict]) -> dict:  # noqa: N803
-        import gzip
-        import uuid
-
-        name = os.path.join(self.path, f"chunk_{self.run_id}_{uuid.uuid4().hex}.json.gz")
-        with gzip.open(name, "wb") as fh:
-            fh.writelines(r["Data"] for r in Records)
-        self.chunks.append((len(Records), sum(len(r["Data"]) for r in Records)))
-        return {"FailedRecordCount": 0}
-
-    def commit(self, messages):
-        man = os.path.join(self.path, f"_MANIFEST_{self.run_id}.json")
-        _write_json(man, _manifest(messages))
-
-    def abort(self, messages):
-        import glob
-
-        for f in glob.glob(os.path.join(self.path, f"chunk_{self.run_id}_*.json.gz")):
-            os.remove(f)
-
-
-class KinesisStubSink(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "kinesis_stub"
-
-    def writer(self, schema, overwrite: bool):
-        return _KinesisStubWriter(self.options)
-
-    def streamWriter(self, schema, overwrite: bool):
-        return _KinesisStubStreamWriter(self.options)
 
 
 @query("sink_python_datasource_writer", survey_id="B-6-ext")  # Tier R
 def sink_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deliver the events table through the Python DataSourceWriter and
-    certify the V2 commit protocol end to end: per-task ``write`` chunks
-    rows under the A-8 caps and returns receipts, the driver ``commit``
-    folds every receipt into ONE manifest (written exactly once, after
-    all tasks succeed), and the certificate re-reads BOTH sides —
-    manifest totals vs the delivered gzip files re-parsed through the
-    engine's own json.gz source path. Rows-only driver tier (chunk
-    boundaries depend on physical partitioning); the INVARIANTS the row
-    carries are exact: delivered records == source rows, every chunk
-    within both caps, chunk count consistent with the caps."""
+    """Deliver the events table through the ``kinesis_spool`` Python
+    DataSourceWriter and certify the V2 commit protocol end to end:
+    per-task ``write`` sends rows under the A-8 caps and returns the
+    stub client's receipts, the driver ``commit`` folds every receipt
+    into ONE manifest (written exactly once, after all tasks succeed),
+    and the certificate re-reads BOTH sides — manifest totals vs the
+    delivered spool read back through ``format("kinesis_spool")``.
+    Rows-only driver tier (call boundaries depend on physical
+    partitioning); the INVARIANTS the row carries are exact: delivered
+    records == source rows, every call within both caps."""
     configure(spark)
-    spark.dataSource.register(KinesisStubSink)
+    register(spark)
     out = temp_dir("cts_pydsw_")  # fresh delivery per invocation
 
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "event_type", F.col("value").cast("double").alias("value")
-    )
+    ev = table(spark, sf_dir, "events")
     n_src = ev.count()
-    ev.write.format("kinesis_stub").option("path", out).option(
-        "run_id", str(os.getpid())
-    ).mode("append").save()
+    keyed_events(ev).write.format("kinesis_spool").option("path", out).mode("append").save()
 
-    with open(os.path.join(out, f"_MANIFEST_{os.getpid()}.json")) as fh:
-        man = json.load(fh)
-    redelivered = spark.read.json(
-        os.path.join(out, "*.json.gz"), schema="event_id LONG, event_type STRING, value DOUBLE"
-    )
-    n_redelivered = redelivered.count()
+    (man,) = read_manifests(out, "_MANIFEST_")
+    n_redelivered = spark.read.format("kinesis_spool").option("path", out).load().count()
     return spark.createDataFrame(
         [
             (
@@ -421,8 +336,8 @@ def sink_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame
                 int(man["max_chunk_records"]),
                 int(man["max_chunk_bytes"]),
                 bool(man["n_records"] == n_src == n_redelivered),
-                bool(man["max_chunk_records"] <= _KinesisStubWriter.RECORD_CAP),
-                bool(man["max_chunk_bytes"] <= _KinesisStubWriter.BYTE_CAP),
+                bool(man["max_chunk_records"] <= KinesisStubClient.RECORD_CAP),
+                bool(man["max_chunk_bytes"] <= KinesisStubClient.BYTE_CAP),
             )
         ],
         "n_chunks long, n_records long, max_chunk_records long, "
@@ -431,82 +346,52 @@ def sink_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# ---------------------------------------------------------------------------
-# Streaming writer: per-epoch commit, idempotent on batch replay
-# ---------------------------------------------------------------------------
-
-
-class _KinesisStubStreamWriter(_KinesisStubWriter, DataSourceStreamWriter):
-    """The streaming half of the sink: ``write`` (inherited) chunks each
-    micro-batch partition through the same client and caps; the one
-    manifest fold (``_manifest``) serves both commits. ``commit(messages,
-    batchId)`` writes ONE epoch manifest per batch and — the
-    exactly-once upgrade — refuses to re-commit an epoch whose manifest
-    already exists, so a batch replayed after a crash between sink
-    commit and checkpoint write cannot double-deliver (the manual
-    idempotent-by-batchId logic of streaming/sinks.py, expressed
-    through the engine-level V2 protocol instead of user foreachBatch
-    code)."""
-
-    def commit(self, messages, batchId: int):  # noqa: N803 (Spark API name)
-        man = os.path.join(self.path, f"_EPOCH_{batchId}.json")
-        if os.path.exists(man):
-            return  # replayed epoch: already delivered, drop duplicates
-        _write_json(man, {"batch_id": batchId, **_manifest(messages)})
-
-    def abort(self, messages, batchId: int):  # noqa: N803
-        _KinesisStubWriter.abort(self, messages)
-
-
 @query("sink_python_stream_writer", survey_id="B-6-ext")  # Tier R
 def sink_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python source INTO Python sink, streaming end to end: the
     cloudtrail_gen stream (offset-checkpointed 700-id chunks) written
-    through the kinesis_stub streaming writer across repeated
+    through the ``kinesis_spool`` streaming writer across repeated
     availableNow restarts of ONE checkpoint. Every restart resumes from
     the committed source offset and delivers its batches through the
     per-epoch commit protocol. The certificate re-reads the delivered
-    gzip records and the epoch manifests: zero duplicate event_ids
+    spool and the epoch manifests: zero duplicate event_ids
     (exactly-once across ≥3 restarts), manifest totals == delivered ==
-    generated domain, caps held per chunk, one manifest per epoch.
-    Rows-only driver tier (epoch/chunk boundaries are physical)."""
-    import glob
-
+    generated domain, caps held per call, one manifest per epoch.
+    Rows-only driver tier (epoch/call boundaries are physical)."""
     configure(spark)
     spark.dataSource.register(CloudTrailGenDataSource)
-    spark.dataSource.register(KinesisStubSink)
+    register(spark)
     out = temp_dir("cts_pysw_delivery_")  # fresh stream per invocation
     ckpt = temp_dir("cts_ckpt_pysw_")
 
     n_total, max_cycles, cycles = 2000, 8, 0
     for _ in range(max_cycles):
-        writer = (
+        gen = (
             spark.readStream.format("cloudtrail_gen")
             .option("n_events", n_total)
             .option("chunk", 700)
             .load()
-            .writeStream.format("kinesis_stub")
+        )
+        writer = (
+            gen.select(
+                F.col("event_id").cast("string").alias("pk"),
+                F.to_json(F.struct(*gen.columns)).alias("data"),
+            )
+            .writeStream.format("kinesis_spool")
             .option("path", out)
         )
         run_to_completion(
             writer, "datasource_py_cycles", "pysw", checkpoint=ckpt, timeout_sec=120.0
         )
         cycles += 1
-        mans = [
-            json.load(open(f))
-            for f in glob.glob(os.path.join(out, "_EPOCH_*.json"))
-        ]
+        mans = read_manifests(out, "_EPOCH_")
         if sum(m["n_records"] for m in mans) >= n_total:
             break
 
-    delivered = spark.read.json(
-        os.path.join(out, "*.json.gz"),
-        schema="event_id LONG, event_name STRING, aws_region STRING, "
-        "epoch_s LONG, error_code INT",
-    )
+    delivered = spark.read.format("kinesis_spool").option("path", out).load()
     agg = delivered.agg(
         F.count(F.lit(1)).alias("n_delivered"),
-        F.count_distinct("event_id").alias("n_distinct"),
+        F.count_distinct(F.get_json_object("data", "$.event_id")).alias("n_distinct"),
     ).collect()[0]
     return spark.createDataFrame(
         [
@@ -519,7 +404,7 @@ def sink_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bool(agg["n_delivered"] == agg["n_distinct"] == n_total),
                 bool(
                     max((m["max_chunk_records"] for m in mans), default=0)
-                    <= _KinesisStubWriter.RECORD_CAP
+                    <= KinesisStubClient.RECORD_CAP
                 ),
             )
         ],

@@ -2,30 +2,32 @@
 
 Every stub-Kinesis query delivers through ONE core, all in this module:
 
+- ``KinesisStubClient`` — the one PutRecords client: caps of 500
+  records / 5 MB per call, one ``call_*.jsonl`` spool file per call, and
+  a per-call receipt.
 - ``put_records_chunked`` — the only code that cuts records into
   PutRecords calls: ≤ the client's record cap and byte cap per call,
   partial-failure retry (failed entries are re-enqueued until
   delivered — at-least-once, upstream ``main.go:~80-100`` approx), and
   a record too big for an empty call raises instead of being dropped.
-- ``send_rows`` — the executor send: one ``KinesisStubClient`` per
-  task, ``(pk, data)`` rows mapped to ``{"Data", "PartitionKey"}``
+- ``send_rows`` — the executor send over one ``KinesisStubClient`` per
+  task: ``(pk, data)`` rows mapped to ``{"Data", "PartitionKey"}``
   (per-record partition key, ``main.go:~65-75`` approx), then the loop.
   ``deliver_partitions`` (foreachBatch) and the ``kinesis_spool``
-  streaming writer (spool_source.py) both call it.
+  batch and streaming writers (spool_source.py) all call it.
 - ``deliver_stream`` — a keyed stream run through
   ``foreachBatch(deliver_partitions)`` to completion; returns the spool.
 - ``delivered_counts`` plus ``DELIVERED_COUNTS_ORACLE`` — the per-type
   readback every delivery certificate compares with the source.
 
-Where each cap lives: the loop reads ``RECORD_CAP`` and ``BYTE_CAP``
-from the client, falling back to the A-8 limits below (500 records,
-5 MB per call — AWS limits, BASELINE.md §1), which are also the
-``KinesisStubClient`` defaults; ``MAX_RECORD_BYTES`` (1 MB per record)
-is checked here. The V2 ``kinesis_stub`` writer
-(operators/datasource_py.py) is such a client with a 256 KiB byte cap.
-The spool format lives in ``KinesisStubClient.put_records``: one
-``call_{prefix}{n:06d}.jsonl`` file per call, one ``{"pk", "data"}``
-JSON line per delivered record.
+Caps: the A-8 limits (500 records, 5 MB per call — AWS limits,
+BASELINE.md §1) are the ``KinesisStubClient`` caps, which the loop
+reads from the client; ``MAX_RECORD_BYTES`` (1 MB per record) is
+checked in the loop. The spool format lives in
+``KinesisStubClient.put_records``: one ``call_{prefix}{n:06d}.jsonl``
+file per call, one ``{"pk", "data"}`` JSON line per delivered record.
+The client keeps each call's ``(records, bytes, delivered)`` receipt
+and the file it wrote, which the ``kinesis_spool`` writers commit.
 
 ``KinesisStubClient`` is boto3-shaped (``put_records(StreamName=...,
 Records=[{"Data": bytes, "PartitionKey": str}, ...])`` returning
@@ -64,7 +66,9 @@ class KinesisStubClient:
 
     ``prefix`` namespaces the spool files — executor-side delivery opens
     one client per (micro-batch, partition), so spool names must not
-    collide across concurrent partition tasks."""
+    collide across concurrent partition tasks. ``receipts`` holds one
+    ``(records, bytes, delivered)`` tuple per call and ``files`` the
+    spool file each call wrote."""
 
     RECORD_CAP = MAX_BATCH_RECORDS
     BYTE_CAP = MAX_BATCH_BYTES
@@ -75,17 +79,19 @@ class KinesisStubClient:
         self.prefix = prefix
         self._seen: set[bytes] = set()
         self._call = 0
+        self.receipts: list[tuple[int, int, int]] = []
+        self.files: list[str] = []
         os.makedirs(spool_dir, exist_ok=True)
 
     def put_records(self, StreamName: str, Records: list[dict]) -> dict:
         if len(Records) > self.RECORD_CAP:
             raise ValueError(f"PutRecords batch exceeds {self.RECORD_CAP} records")
-        if sum(len(r["Data"]) for r in Records) > self.BYTE_CAP:
+        nbytes = sum(len(r["Data"]) + len(r["PartitionKey"]) for r in Records)
+        if nbytes > self.BYTE_CAP:
             raise ValueError(f"PutRecords batch exceeds {self.BYTE_CAP} bytes")
         self._call += 1
-        spool = open(
-            os.path.join(self.spool_dir, f"call_{self.prefix}{self._call:06d}.jsonl"), "w"
-        )
+        name = f"call_{self.prefix}{self._call:06d}.jsonl"
+        spool = open(os.path.join(self.spool_dir, name), "w")
         out, failed = [], 0
         for i, rec in enumerate(Records):
             first_attempt = rec["Data"] not in self._seen
@@ -103,12 +109,14 @@ class KinesisStubClient:
             )
             out.append({"SequenceNumber": str(len(self._seen)), "ShardId": "shard-0"})
         spool.close()
+        self.files.append(name)
+        self.receipts.append((len(Records), nbytes, len(Records) - failed))
         return {"FailedRecordCount": failed, "Records": out}
 
 
 def put_records_chunked(client, stream_name: str, records) -> int:
     """The reference's batch loop (A-8/A-9): chunk to the client's
-    ``RECORD_CAP``/``BYTE_CAP`` (default 500 records / 5 MB), send,
+    ``RECORD_CAP``/``BYTE_CAP`` (500 records / 5 MB), send,
     re-enqueue failed entries until none remain. Returns delivered count.
 
     ``records`` may be any iterable (a list, or a partition iterator on
@@ -145,12 +153,12 @@ def put_records_chunked(client, stream_name: str, records) -> int:
         delivered += len(batch) - resp["FailedRecordCount"]
 
 
-def send_rows(rows, spool_dir: str, stream_name: str, prefix: str) -> int:
-    """The executor send: one stub client spooling as ``call_{prefix}*``,
-    each ``(pk, data)`` row mapped to a PutRecords entry (a null key goes
-    out as "0"), delivered through :func:`put_records_chunked`. Returns
-    the delivered count."""
-    client = KinesisStubClient(spool_dir, prefix=prefix)
+def send_rows(rows, client: KinesisStubClient, stream_name: str) -> int:
+    """The executor send: each ``(pk, data)`` row mapped to a PutRecords
+    entry (a null key goes out as "0"), delivered through
+    :func:`put_records_chunked` on ``client`` — one client per task, so
+    its ``receipts`` and ``files`` describe that task's delivery.
+    Returns the delivered count."""
     return put_records_chunked(
         client,
         stream_name,
@@ -181,7 +189,8 @@ def deliver_partitions(keyed: DataFrame, spool_dir: str, stream_name: str, batch
     def _send(rows) -> None:
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        send_rows(rows, spool_dir, stream_name, f"b{batch_id:05d}_p{pid:05d}_")
+        client = KinesisStubClient(spool_dir, prefix=f"b{batch_id:05d}_p{pid:05d}_")
+        send_rows(rows, client, stream_name)
 
     keyed.foreachPartition(_send)
 
@@ -293,14 +302,14 @@ def sink_idempotent_batchid(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer = stream.writeStream.foreachBatch(deliver)
     harness.run_to_completion(writer, "sink_idempotent_batchid", "idem")
 
-    glob = os.path.join(base, "batch=*")
-    before = spark.read.schema(harness.EVENTS_SCHEMA).json(glob).count()
+    # the base dir itself: listing skips the hidden ``_COMMIT_*`` markers
+    before = spark.read.schema(harness.EVENTS_SCHEMA).json(base).count()
     # Simulate checkpoint-recovery double delivery of batch 0.
     b0 = spark.read.schema(harness.EVENTS_SCHEMA).json(
         os.path.join(base, "batch=00000")
     )
     deliver(b0, 0)
-    after = spark.read.schema(harness.EVENTS_SCHEMA).json(glob).count()
+    after = spark.read.schema(harness.EVENTS_SCHEMA).json(base).count()
 
     src = table(spark, sf_dir, "events").agg(
         F.count(F.lit(1)).cast("long").alias("n_source")

@@ -1,10 +1,10 @@
 """Custom PySpark Data Source (the Spark 4 Python Data Source API):
-the Kinesis spool exposed as a first-class
-``spark.read.format("kinesis_spool")`` connector.
+the Kinesis spool exposed as a first-class ``format("kinesis_spool")``
+connector — the only stub-Kinesis connector, reading and writing the
+one spool format (``call_*.jsonl`` files of ``{"pk", "data"}`` lines).
 
-This is the "real connector" rung above the stub consumers: a
-``DataSource`` subclass with explicit partition planning — one input
-partition per Kinesis shard, each executor task reading ONLY its
+Reads: a ``DataSource`` subclass with explicit partition planning — one
+input partition per Kinesis shard, each executor task reading ONLY its
 shard's records (shard = crc32(partition key) % shards, identical
 routing to ``sources.read_kinesis_stream``, which Spark's ``crc32``
 matches because both hash the UTF-8 bytes). Swapping the file-backed
@@ -12,12 +12,24 @@ spool for real ``boto3`` GetRecords calls changes only ``read()``; the
 partition planning, schema, and everything downstream stay put. At
 scale, partitions == shards gives the same parallelism contract as the
 Kinesis consumer library.
+
+Writes: ``df.write`` and ``writeStream`` over a ``pk``/``data``
+projection. Each task sends its rows through ``sinks.send_rows`` — the
+``KinesisStubClient`` caps (500 records / 5 MB per call) and retry path
+of every other delivery — and returns the client's per-call receipts
+and the files it wrote. The driver folds the receipts into one
+manifest: ``_MANIFEST_*`` for a batch write, ``_EPOCH_{batchId}`` per
+micro-batch. ``abort`` deletes exactly the files its messages name, a
+task whose ``write`` raises deletes its own, and a replayed epoch whose
+manifest already exists deletes the replay's files, so each epoch is
+delivered once.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import uuid
 import zlib
 
 from pyspark import TaskContext
@@ -27,6 +39,7 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamReader,
     DataSourceStreamWriter,
+    DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
@@ -37,6 +50,7 @@ from cloudtrail_streamer_spark.streaming import harness
 from cloudtrail_streamer_spark.streaming.sinks import (
     DELIVERED_COUNTS_ORACLE,
     STREAM_NAME,
+    KinesisStubClient,
     delivered_counts,
     deliver_events_to_spool,
     keyed_events,
@@ -111,34 +125,104 @@ class KinesisSpoolStreamReader(_SpoolShards, DataSourceStreamReader):
 
 
 class _SpoolCommit(WriterCommitMessage):
-    def __init__(self, n_delivered: int):
-        self.n_delivered = n_delivered
+    """One task's delivery: the stub client's per-call ``(records,
+    bytes, delivered)`` receipts and the spool files it wrote."""
+
+    def __init__(self, receipts: list, files: list):
+        self.receipts = receipts
+        self.files = files
 
 
-class KinesisSpoolStreamWriter(DataSourceStreamWriter):
-    """Custom streaming SINK: ``writeStream.format("kinesis_spool")``.
+def _manifest(messages) -> dict:
+    """Fold every task's receipts into one manifest's totals."""
+    calls = [r for m in messages if m is not None for r in m.receipts]
+    return {
+        "n_chunks": len(calls),
+        "n_records": sum(r[2] for r in calls),
+        "max_chunk_records": max((r[0] for r in calls), default=0),
+        "max_chunk_bytes": max((r[1] for r in calls), default=0),
+    }
+
+
+def _named_files(messages) -> list:
+    """The spool files the tasks' messages name."""
+    return [f for m in messages if m is not None for f in m.files]
+
+
+def _write_json(path: str, obj: dict) -> None:
+    with open(path, "w") as fh:
+        json.dump(obj, fh)
+
+
+def read_manifests(path: str, prefix: str) -> list:
+    """The ``{prefix}*.json`` manifests the writers committed to ``path``."""
+    out = []
+    for f in sorted(os.listdir(path)):
+        if f.startswith(prefix):
+            with open(os.path.join(path, f)) as fh:
+                out.append(json.load(fh))
+    return out
+
+
+class KinesisSpoolWriter(DataSourceWriter):
+    """Batch SINK: ``df.write.format("kinesis_spool")``.
 
     ``write`` runs per partition ON THE EXECUTOR and pushes its
-    partition iterator through ``sinks.send_rows`` — the same executor
-    send as the foreachBatch path (spool files namespaced by the
-    globally-unique task attempt id); per-task delivered counts travel
-    back as commit messages, and ``commit`` is where a boto3
-    implementation would record batch delivery for idempotence."""
+    partition iterator through ``sinks.send_rows``; spool files are
+    namespaced by the task attempt id plus a random tag, so no two
+    ``write`` calls share a name. ``commit`` runs once on the driver,
+    only if every task succeeded, and writes ONE ``_MANIFEST_*``
+    manifest — the transactional half the upstream Lambda lacks. A
+    ``write`` that raises deletes the calls it already sent, since Spark
+    hands ``abort`` no message for a failed task."""
 
     def __init__(self, options: dict):
         self.path = options["path"]
-        self.stream_name = options.get("stream", STREAM_NAME)
+        self.run_id = uuid.uuid4().hex[:12]
 
-    def write(self, iterator) -> "_SpoolCommit":
+    def write(self, iterator) -> _SpoolCommit:
         ctx = TaskContext.get()
         attempt = ctx.taskAttemptId() if ctx is not None else 0
-        return _SpoolCommit(send_rows(iterator, self.path, self.stream_name, f"w{attempt:010d}_"))
+        client = KinesisStubClient(self.path, prefix=f"w{attempt:010d}_{uuid.uuid4().hex[:8]}_")
+        try:
+            send_rows(iterator, client, STREAM_NAME)
+        except BaseException:
+            self._remove(client.files)
+            raise
+        return _SpoolCommit(client.receipts, client.files)
 
-    def commit(self, messages, batchId) -> None:
-        pass  # spool is append-only; boto3 impl would record batch here
+    def commit(self, messages) -> None:
+        _write_json(os.path.join(self.path, f"_MANIFEST_{self.run_id}.json"), _manifest(messages))
 
-    def abort(self, messages, batchId) -> None:
-        pass
+    def abort(self, messages) -> None:
+        self._remove(_named_files(messages))
+
+    def _remove(self, files: list) -> None:
+        for f in files:
+            os.remove(os.path.join(self.path, f))
+
+
+class KinesisSpoolStreamWriter(KinesisSpoolWriter, DataSourceStreamWriter):
+    """Streaming SINK: ``writeStream.format("kinesis_spool")``.
+
+    ``write`` (inherited) sends each micro-batch partition through the
+    same client and caps. ``commit(messages, batchId)`` writes ONE
+    ``_EPOCH_{batchId}`` manifest per batch and — the exactly-once
+    upgrade — refuses to re-commit an epoch whose manifest already
+    exists: a batch replayed after a crash between sink commit and
+    checkpoint write has its files deleted, so it cannot double-deliver
+    (the idempotent-by-batchId logic of ``sinks.sink_idempotent_batchid``
+    expressed through the V2 protocol instead of ``foreachBatch`` code)."""
+
+    def commit(self, messages, batchId: int) -> None:  # noqa: N803 (Spark API name)
+        man = os.path.join(self.path, f"_EPOCH_{batchId}.json")
+        if os.path.exists(man):
+            self._remove(_named_files(messages))  # replayed epoch: already delivered
+            return
+        _write_json(man, {"batch_id": batchId, **_manifest(messages)})
+
+    def abort(self, messages, batchId: int) -> None:  # noqa: N803
+        self._remove(_named_files(messages))
 
 
 class KinesisSpoolDataSource(DataSource):
@@ -154,6 +238,9 @@ class KinesisSpoolDataSource(DataSource):
 
     def streamReader(self, schema) -> KinesisSpoolStreamReader:
         return KinesisSpoolStreamReader(self.options)
+
+    def writer(self, schema, overwrite: bool) -> KinesisSpoolWriter:
+        return KinesisSpoolWriter(self.options)
 
     def streamWriter(self, schema, overwrite: bool) -> KinesisSpoolStreamWriter:
         return KinesisSpoolStreamWriter(self.options)

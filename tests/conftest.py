@@ -145,10 +145,10 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
             )
 
 
-def run_pair(spark, con, name: str, sf_dir: str = SF_DIR):
-    """Run one registry query + its oracle; assert exact match, and that
-    the query left the session conf exactly as it found it."""
-    from cloudtrail_streamer_spark.registry import all_oracles, all_queries
+def run_conf_checked(spark, name: str, sf_dir: str):
+    """Run one registry query to pandas; fail naming every key whose
+    ``spark.conf.getAll`` value the query changed."""
+    from cloudtrail_streamer_spark.registry import all_queries
 
     q = all_queries()[name]
     before = spark.conf.getAll
@@ -158,6 +158,15 @@ def run_pair(spark, con, name: str, sf_dir: str = SF_DIR):
     assert not leaked, f"{name}: session conf changed: " + ", ".join(
         f"{k}: {before.get(k)!r} -> {after.get(k)!r}" for k in leaked
     )
+    return sdf
+
+
+def run_pair(spark, con, name: str, sf_dir: str = SF_DIR):
+    """Run one registry query + its oracle; assert exact match, and that
+    the query left the session conf exactly as it found it."""
+    from cloudtrail_streamer_spark.registry import all_oracles
+
+    sdf = run_conf_checked(spark, name, sf_dir)
     # op-local persisted subtrees are per-execution scratch; across a
     # ~300-query session they otherwise accumulate GBs of storage
     # (ADVICE r07 cache-hygiene theme — drive_entry.py does the same)

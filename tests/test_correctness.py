@@ -11,7 +11,7 @@ import duckdb
 import pytest
 
 from cloudtrail_streamer_spark.registry import all_specs
-from tests.conftest import run_pair
+from tests.conftest import SF_SMALL, run_conf_checked, run_pair
 
 # slow: the full sweep is the ~30-min bulk of the suite; the fast path
 # (-m "not slow", pyproject) relies on the per-round driver window plus
@@ -31,6 +31,15 @@ def con():
 @pytest.mark.parametrize("name", _H_NAMES)
 def test_oracle_match(spark, con, name):
     run_pair(spark, con, name)
+
+
+@pytest.mark.parametrize(
+    "name", ["sink_python_datasource_writer", "sink_python_stream_writer", "stream_stream_join_cert"]
+)
+def test_rtier_conf_unchanged(spark, name):
+    """The R-tier queries have no oracle, so run_pair never runs them:
+    the same conf-leak check runs them here at sf0.001."""
+    assert len(run_conf_checked(spark, name, SF_SMALL)) >= 1
 
 
 def test_entry_smoke(spark):

@@ -765,73 +765,79 @@ def test_python_stream_reader_offset_resume():
 
 
 def test_python_datasource_writer_chunking_and_abort(tmp_path):
-    """The V2 writer's delivery invariants, pinned off-cluster: record
-    cap flushes at exactly 500, byte cap flushes before overflow, the
-    receipts account for every row, and abort removes exactly this
+    """The kinesis_spool writer's delivery invariants, pinned
+    off-cluster: the record cap fills the first full call with exactly
+    500 records, the byte cap flushes ~900 KiB payloads before overflow,
+    the receipts account for every row, and abort removes exactly this
     attempt's files (retry safety)."""
-    import gzip
     import json
     import os
 
     from pyspark.sql import Row
 
-    from cloudtrail_streamer_spark.operators.datasource_py import (
-        _KinesisStubWriter,
+    from cloudtrail_streamer_spark.streaming.sinks import KinesisStubClient
+    from cloudtrail_streamer_spark.streaming.spool_source import (
+        KinesisSpoolWriter,
+        read_manifests,
     )
 
     out = str(tmp_path)
-    w = _KinesisStubWriter({"path": out, "run_id": "t1"})
-    msg = w.write(iter([Row(event_id=i, event_type="click") for i in range(1200)]))
-    assert [c[0] for c in msg.chunks] == [500, 500, 200]
+    w = KinesisSpoolWriter({"path": out})
+    msg = w.write(iter([Row(pk=str(i % 4), data=f"e{i}") for i in range(1200)]))
+    assert msg.receipts[0][0] == 500
+    assert max(r[0] for r in msg.receipts) == 500
+    assert sum(r[2] for r in msg.receipts) == 1200, "every row delivered once"
     w.commit([msg])
-    man = json.load(open(os.path.join(out, "_MANIFEST_t1.json")))
-    assert man["n_records"] == 1200 and man["n_chunks"] == 3
+    (man,) = read_manifests(out, "_MANIFEST_")
+    assert man["n_records"] == 1200 and man["n_chunks"] == len(msg.receipts)
     assert man["max_chunk_records"] == 500
-    # the delivered bytes re-parse to the same rows
-    files = [f for f in os.listdir(out) if f.startswith("chunk_t1_")]
-    n = sum(
-        sum(1 for _ in gzip.open(os.path.join(out, f), "rt")) for f in files
-    )
-    assert n == 1200
-    # byte cap: 64 KiB payloads must flush every ~4 rows, never overflow
-    w2 = _KinesisStubWriter({"path": out, "run_id": "t2"})
-    big = "x" * 65536
-    msg2 = w2.write(iter([Row(event_id=i, payload=big) for i in range(10)]))
-    assert all(b <= w2.BYTE_CAP for _, b in msg2.chunks)
-    assert sum(c[0] for c in msg2.chunks) == 10
+    # the delivered spool lines re-parse to the same rows
+    data = []
+    for f in msg.files:
+        with open(os.path.join(out, f)) as fh:
+            data += [json.loads(line)["data"] for line in fh]
+    assert sorted(data) == sorted(f"e{i}" for i in range(1200))
+    # byte cap: ~900 KiB payloads must flush every 5 rows, never overflow
+    w2 = KinesisSpoolWriter({"path": out})
+    big = "x" * (900 * 1024)
+    msg2 = w2.write(iter([Row(pk="0", data=f"{big}{i}") for i in range(12)]))
+    assert [r[0] for r in msg2.receipts] == [5, 5, 2]
+    assert all(b <= KinesisStubClient.BYTE_CAP for _, b, _ in msg2.receipts)
+    assert sum(r[2] for r in msg2.receipts) == 12
     # abort removes ONLY this attempt's files
     w2.abort([msg2])
-    left = [f for f in os.listdir(out) if f.startswith("chunk_t2_")]
-    assert left == []
-    assert [f for f in os.listdir(out) if f.startswith("chunk_t1_")], (
+    assert not any(os.path.exists(os.path.join(out, f)) for f in msg2.files)
+    assert all(os.path.exists(os.path.join(out, f)) for f in msg.files), (
         "abort must not touch other runs' deliveries"
     )
 
 
 def test_oversized_record_raises_not_dropped(tmp_path):
-    """A record too big for an empty PutRecords call — 300 KiB against a
-    256 KiB byte cap — must raise, not vanish from the delivery: through
-    the V2 writer (whose cap it is) and through the stub client with the
-    same cap."""
+    """A record too big for an empty PutRecords call — over the 1 MB
+    per-record limit — must raise, not vanish from the delivery: through
+    the kinesis_spool writer, whose failed write also deletes the call it
+    had already sent (abort never sees a failed task), and through the
+    stub client directly."""
+    import os
+
     import pytest
     from pyspark.sql import Row
 
-    from cloudtrail_streamer_spark.operators.datasource_py import (
-        _KinesisStubWriter,
-    )
     from cloudtrail_streamer_spark.streaming.sinks import (
         KinesisStubClient,
         put_records_chunked,
     )
+    from cloudtrail_streamer_spark.streaming.spool_source import KinesisSpoolWriter
 
-    big = "x" * (300 * 1024)
-    w = _KinesisStubWriter({"path": str(tmp_path), "run_id": "big"})
-    rows = [Row(event_id=0, payload="a"), Row(event_id=1, payload=big)]
+    big = "x" * (1024 * 1024 + 1024)
+    out = tmp_path / "writer"
+    w = KinesisSpoolWriter({"path": str(out)})
+    rows = [Row(pk="0", data=f"a{i}") for i in range(600)] + [Row(pk="1", data=big)]
     with pytest.raises(ValueError, match="exceeds"):
         w.write(iter(rows))
+    assert os.listdir(out) == [], "a failed write must leave no partial delivery"
 
     client = KinesisStubClient(str(tmp_path / "spool"), fail_every=0)
-    client.BYTE_CAP = 256 * 1024
     records = [
         {"Data": b"a", "PartitionKey": "0"},
         {"Data": big.encode(), "PartitionKey": "0"},
@@ -877,24 +883,99 @@ def test_python_stream_writer_epoch_idempotent(tmp_path):
 
     from pyspark.sql import Row
 
-    from cloudtrail_streamer_spark.operators.datasource_py import (
-        _KinesisStubStreamWriter,
-    )
+    from cloudtrail_streamer_spark.streaming.spool_source import KinesisSpoolStreamWriter
 
     out = str(tmp_path)
-    w = _KinesisStubStreamWriter({"path": out, "run_id": "e1"})
-    msg = w.write(iter([Row(event_id=i) for i in range(100)]))
+    w = KinesisSpoolStreamWriter({"path": out})
+    rows = [Row(pk=str(i), data=str(i)) for i in range(100)]
+    msg = w.write(iter(rows))
     w.commit([msg], batchId=7)
     man_path = os.path.join(out, "_EPOCH_7.json")
     first = json.load(open(man_path))
     assert first["n_records"] == 100 and first["batch_id"] == 7
     # replay the same epoch with different (duplicate) content
-    msg2 = w.write(iter([Row(event_id=i) for i in range(100)]))
+    msg2 = w.write(iter(rows))
     w.commit([msg2], batchId=7)
     assert json.load(open(man_path)) == first, "replayed epoch must not re-commit"
     # a NEW epoch commits normally
-    w.commit([msg2], batchId=8)
+    w.commit([w.write(iter(rows))], batchId=8)
     assert os.path.exists(os.path.join(out, "_EPOCH_8.json"))
+
+
+def _spool_rows(lo: int, hi: int):
+    from pyspark.sql import Row
+
+    return iter([Row(pk=str(i), data=str(i)) for i in range(lo, hi)])
+
+
+def _spool_data(spark, path: str) -> list:
+    from cloudtrail_streamer_spark.streaming.spool_source import register
+
+    register(spark)
+    back = spark.read.format("kinesis_spool").option("path", path).load()
+    return sorted(int(r["data"]) for r in back.select("data").collect())
+
+
+def test_stream_writer_abort_spares_committed_epochs(spark, tmp_path):
+    """Aborting epoch N deletes only the files its messages name: the
+    records of every committed epoch stay readable, and none of the
+    aborted epoch's are."""
+    from cloudtrail_streamer_spark.streaming.spool_source import KinesisSpoolStreamWriter
+
+    out = str(tmp_path)
+    w = KinesisSpoolStreamWriter({"path": out})
+    w.commit([w.write(_spool_rows(0, 300))], batchId=0)
+    w.commit([w.write(_spool_rows(300, 600))], batchId=1)
+    w.abort([w.write(_spool_rows(600, 900))], batchId=2)
+    assert _spool_data(spark, out) == list(range(600))
+
+
+def test_stream_writer_replayed_epoch_delivers_once(spark, tmp_path):
+    """A replayed epoch whose manifest exists is refused AND its files
+    are deleted: the delivered records and the manifest are both
+    exactly as the first commit left them."""
+    import os
+
+    from cloudtrail_streamer_spark.streaming.spool_source import KinesisSpoolStreamWriter
+
+    out = str(tmp_path)
+    w = KinesisSpoolStreamWriter({"path": out})
+    w.commit([w.write(_spool_rows(0, 300))], batchId=0)
+    man = os.path.join(out, "_EPOCH_0.json")
+    first = open(man).read()
+    w.commit([w.write(_spool_rows(0, 300))], batchId=0)  # the replay
+    assert _spool_data(spark, out) == list(range(300)), "replay must not re-deliver"
+    assert open(man).read() == first
+
+
+def test_one_stub_kinesis_client_and_writer_module():
+    """``KinesisStubClient`` is the only class in the package with a
+    ``put_records``, and spool_source.py the only module that subclasses
+    the Python DataSource writers: one client, one connector, one spool
+    format."""
+    import ast
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "cloudtrail_streamer_spark"
+    )
+    clients, writer_modules = set(), set()
+    for dirpath, _, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            with open(os.path.join(dirpath, f)) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.ClassDef):
+                    continue
+                if any(isinstance(b, ast.FunctionDef) and b.name == "put_records" for b in node.body):
+                    clients.add(node.name)
+                bases = {getattr(b, "id", getattr(b, "attr", None)) for b in node.bases}
+                if bases & {"DataSourceWriter", "DataSourceStreamWriter"}:
+                    writer_modules.add(f)
+    assert clients == {"KinesisStubClient"}
+    assert writer_modules == {"spool_source.py"}
 
 
 def test_tfidf_strategies_agree(spark):

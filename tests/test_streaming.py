@@ -680,30 +680,6 @@ def test_timeout_raises_not_partial(spark, tmp_path):
     assert not any(q.name == name for q in spark.streams.active)
 
 
-def test_provider_load_error_classifier():
-    """Only provider-LOAD failures may trigger the default-backend
-    retry; RUNTIME state-store failures (the r9 RocksDB commit storm)
-    must propagate."""
-    load_errs = [
-        Exception("java.lang.ClassNotFoundException: org.apache...RocksDBStateStoreProvider"),
-        Exception("java.lang.NoClassDefFoundError: rocksdbjni"),
-        Exception("Error instantiating StateStoreProvider org.apache..."),
-    ]
-    runtime_errs = [
-        Exception(
-            "[CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT] Error writing state "
-            "store files for provider RocksDBStateStoreProvider"
-        ),
-        Exception("RocksDB: IO error while createSnapshot"),
-        Exception("some unrelated failure"),
-        TimeoutError("streaming query 'x' did not terminate within 1.0s"),
-    ]
-    for e in load_errs:
-        assert harness._is_provider_load_error(e), e
-    for e in runtime_errs:
-        assert not harness._is_provider_load_error(e), e
-
-
 class _ConditionError(Exception):
     """Synthetic PySpark-4-shaped exception: carries an error condition
     via getCondition(), like pyspark.errors.StreamingQueryException."""
@@ -714,33 +690,6 @@ class _ConditionError(Exception):
 
     def getCondition(self) -> str:  # noqa: N802 (PySpark API name)
         return self._condition
-
-
-def test_classifier_prefers_error_condition_over_message():
-    """A named STATE_STORE condition vetoes the fallback even when the
-    message text happens to contain the load-error shapes — the
-    condition is authoritative (VERDICT r10 "What's wrong" #1)."""
-    e = _ConditionError(
-        # worst-case message: contains every substring the message-shape
-        # matcher would otherwise accept as a load error
-        "[CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT] Cannot perform commit; "
-        "caused by java.lang.ClassNotFoundException while instantiat-ing "
-        "StateStoreProvider (could not be created)",
-        condition="CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT",
-    )
-    assert not harness._is_provider_load_error(e)
-    e2 = _ConditionError(
-        "[CANNOT_LOAD_STATE_STORE.UNCATEGORIZED] error reading state",
-        condition="CANNOT_LOAD_STATE_STORE.UNCATEGORIZED",
-    )
-    assert not harness._is_provider_load_error(e2)
-    # a non-state-store condition falls through to the message check
-    e3 = _ConditionError(
-        "[STREAM_FAILED] ... caused by java.lang.ClassNotFoundException: "
-        "org.apache.spark...RocksDBStateStoreProvider",
-        condition="STREAM_FAILED",
-    )
-    assert harness._is_provider_load_error(e3)
 
 
 def _tiny_replay_stream(spark, tmp_path):
@@ -801,48 +750,6 @@ def test_runtime_commit_error_propagates_not_retried(spark, monkeypatch, tmp_pat
             None,
         )
         == prior_changelog
-    )
-
-
-def test_provider_class_load_error_is_retried(spark, monkeypatch, tmp_path):
-    """Fault injection (VERDICT r10 #3), the complementary case: a
-    ClassNotFoundException-shaped failure on the FIRST await triggers
-    exactly one retry on the default provider, which completes and
-    returns the full (non-partial) sink; confs restore afterwards."""
-    import uuid
-
-    prior_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    real_await = harness.await_or_raise
-    calls = []
-
-    def inject_once(q, name, timeout_sec):
-        calls.append(name)
-        if len(calls) == 1:
-            try:
-                q.stop()
-            except Exception:
-                pass
-            raise Exception(
-                "java.lang.ClassNotFoundException: "
-                "org.apache.spark...RocksDBStateStoreProvider"
-            )
-        # the retry must run on the RESTORED (non-RocksDB) provider
-        assert (
-            spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-            == prior_provider
-        )
-        real_await(q, name, timeout_sec)
-
-    monkeypatch.setattr(harness, "await_or_raise", inject_once)
-    name = f"fi_load_{uuid.uuid4().hex[:8]}"
-    out = harness.run_stream_to_memory(_tiny_replay_stream(spark, tmp_path), name)
-    assert len(calls) == 2, "load error must retry exactly once"
-    assert sorted(r["v"] for r in out.collect()) == [0, 1]
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        == prior_provider
     )
 
 
