@@ -452,7 +452,7 @@ def main() -> None:
     sf = _sf_of(sf_dir)
 
     from cloudtrail_streamer_spark.registry import all_oracles, all_queries
-    from cloudtrail_streamer_spark.session import get_session
+    from cloudtrail_streamer_spark.session import CONF_ERRORS, get_session
 
     spark = get_session("cts-bench")
     queries, oracles = all_queries(), all_oracles()
@@ -631,6 +631,8 @@ def main() -> None:
         "layout_effect_sf01": layout_effect,
         "llm_headline": llm_block,
         "sf10": sf10_block,
+        # every engine conf configure() could not set on this build
+        "conf_errors": dict(CONF_ERRORS),
     }
     detail_path = os.path.join(ROOT, "BENCH_DETAIL.json")
     try:

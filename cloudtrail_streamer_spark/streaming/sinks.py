@@ -25,7 +25,8 @@ BASELINE.md §1) are the ``KinesisStubClient`` caps, which the loop
 reads from the client; ``MAX_RECORD_BYTES`` (1 MB per record) is
 checked in the loop. The spool format lives in
 ``KinesisStubClient.put_records``: one ``call_{prefix}{n:06d}.jsonl``
-file per call, one ``{"pk", "data"}`` JSON line per delivered record.
+file per call, one ``{"pk", "data"}`` JSON line per delivered record,
+``pk`` first (the ``kinesis_spool`` reader routes a line on that key).
 The client keeps each call's ``(records, bytes, delivered)`` receipt
 and the file it wrote, which the ``kinesis_spool`` writers commit.
 

@@ -31,6 +31,7 @@ import json
 import os
 import uuid
 import zlib
+from json.decoder import scanstring
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +69,11 @@ class _ShardPartition(InputPartition):
         self.files = files
 
 
+# How every line ``KinesisStubClient`` writes starts: ``json.dumps``
+# keeps the dict's key order, so the partition key is the first value.
+_PK_PREFIX = '{"pk": "'
+
+
 def _spool_files(path: str) -> list:
     return sorted(f for f in os.listdir(path) if f.endswith(".jsonl"))
 
@@ -85,16 +91,23 @@ class _SpoolShards:
 
     def read(self, partition: _ShardPartition):
         """Runs ON THE EXECUTOR for one shard: scan the partition's spool
-        files, keep only records routed to this shard. A boto3-backed
-        implementation would issue GetRecords for its shard iterator
-        here instead."""
+        files, keep only records routed to this shard. Only the leading
+        partition key of each line is decoded to route it, so a record
+        is parsed in full once per read, by the shard that owns it. A
+        boto3-backed implementation would issue GetRecords for its shard
+        iterator here instead."""
         for fname in partition.files:
             with open(os.path.join(partition.path, fname)) as f:
                 for line in f:
-                    rec = json.loads(line)
-                    shard = zlib.crc32(rec["pk"].encode("utf-8")) % partition.n_shards
+                    rec = None
+                    if line.startswith(_PK_PREFIX):
+                        pk = scanstring(line, len(_PK_PREFIX))[0]
+                    else:  # not the client's key order: parse to route
+                        rec = json.loads(line)
+                        pk = rec["pk"]
+                    shard = zlib.crc32(pk.encode("utf-8")) % partition.n_shards
                     if shard == partition.shard_id:
-                        yield (rec["pk"], rec["data"], shard)
+                        yield (pk, (rec or json.loads(line))["data"], shard)
 
 
 class KinesisSpoolReader(_SpoolShards, DataSourceReader):

@@ -874,6 +874,49 @@ def test_spool_source_registers_twice(spark, tmp_path):
     assert all(r["shard_id"] == zlib.crc32(r["pk"].encode()) % 3 for r in rows)
 
 
+def test_spool_read_parses_each_record_once(tmp_path, monkeypatch):
+    """A 4-shard read of a client-written spool parses each record in
+    full once (``json.loads`` calls == records), and every shard still
+    yields exactly the records with ``crc32(pk) % 4`` equal to its id,
+    keys with quotes, backslashes and non-ASCII text included. Lines in
+    another key order are parsed to be routed, and routed the same."""
+    import json
+    import os
+    import zlib
+    from collections import Counter
+
+    from cloudtrail_streamer_spark.streaming import spool_source
+    from cloudtrail_streamer_spark.streaming.sinks import KinesisStubClient, put_records_chunked
+
+    spool = str(tmp_path / "spool")
+    pks = [str(i % 37) for i in range(423)] + ['a"b', "c\\d", "é", "日本", "\u2028", ""]
+    records = [
+        {"Data": f"d{i}".encode(), "PartitionKey": pk} for i, pk in enumerate(pks)
+    ]
+    assert put_records_chunked(KinesisStubClient(spool), "s", records) == len(records)
+    foreign = [{"Data": f"x{i}".encode(), "PartitionKey": f"k{i}"} for i in range(3)]
+    with open(os.path.join(spool, "call_zz_000001.jsonl"), "w") as fh:
+        for r in foreign:
+            fh.write(json.dumps({"data": r["Data"].decode(), "pk": r["PartitionKey"]}) + "\n")
+    loads = Counter()
+    real_loads = json.loads
+
+    def counting(s, *a, **k):
+        loads["n"] += 1
+        return real_loads(s, *a, **k)
+
+    monkeypatch.setattr(spool_source.json, "loads", counting)
+    reader = spool_source.KinesisSpoolReader({"path": spool, "shards": "4"})
+    got = {p.shard_id: sorted(reader.read(p)) for p in reader.partitions()}
+    assert len(records) == 429
+    assert loads["n"] == len(records) + 4 * len(foreign)
+    want = {s: [] for s in range(4)}
+    for r in records + foreign:
+        shard = zlib.crc32(r["PartitionKey"].encode("utf-8")) % 4
+        want[shard].append((r["PartitionKey"], r["Data"].decode(), shard))
+    assert got == {s: sorted(rows) for s, rows in want.items()}
+
+
 def test_python_stream_writer_epoch_idempotent(tmp_path):
     """A replayed epoch (same batchId committed twice, as after a crash
     between sink commit and checkpoint write) must be a no-op: one

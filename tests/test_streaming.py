@@ -384,15 +384,12 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def run_once():
-        q = (
+        writer = (
             harness.read_replay_stream(spark, replay)
             .writeStream.format("parquet")
             .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        harness.await_or_raise(q, "resume_run_once", 600.0)
+        harness.run_to_completion(writer, "resume_run_once", "resume", checkpoint=ckpt)
 
     run_once()
     for f in os.listdir(held):  # deliver the rest, then resume
@@ -404,6 +401,42 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     assert sunk.select("event_id").distinct().count() == _events_count(spark), (
         "resume from checkpoint must not duplicate rows"
     )
+
+
+def test_replayed_batch_after_crash_is_same_batch(spark, tmp_path):
+    """A crash between ``walCommit`` and ``commitOffsets`` (the offset
+    log holds batch N, the commit log does not) replays batch N on
+    restart: the same batch id over the same file, and no other batch,
+    on the checkpoint manager every package query runs on."""
+    import os
+
+    replay = tmp_path / "replay"
+    replay.mkdir()
+    stream = _tiny_replay_stream(spark, replay, files=3).select(
+        F.input_file_name().alias("f")
+    )
+    ckpt = str(tmp_path / "ckpt")
+    seen = []
+
+    def record(batch_df, batch_id):
+        files = {os.path.basename(r["f"]) for r in batch_df.select("f").distinct().collect()}
+        seen.append((batch_id, sorted(files)))
+
+    def run():
+        writer = stream.writeStream.foreachBatch(record)
+        harness.run_to_completion(writer, "crash_replay", "crash", checkpoint=ckpt)
+
+    run()
+    assert seen == [(i, [f"f_{i:04d}.json"]) for i in range(3)], seen
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert last == 2
+    for f in (str(last), f".{last}.crc"):  # the commit the crash never wrote
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    seen.clear()
+    run()
+    assert seen == [(2, ["f_0002.json"])], seen
 
 
 def test_custom_datasource_stream_writer_roundtrip(spark, tmp_path):
@@ -692,13 +725,13 @@ class _ConditionError(Exception):
         return self._condition
 
 
-def _tiny_replay_stream(spark, tmp_path):
-    """Two one-row files -> a trivially fast file-source stream."""
+def _tiny_replay_stream(spark, tmp_path, files=2):
+    """One-row files, one per batch -> a trivially fast file-source stream."""
     import json
     import os
 
     replay = str(tmp_path)
-    for i in range(2):
+    for i in range(files):
         p = os.path.join(replay, f"f_{i:04d}.json")
         with open(p, "w") as fh:
             fh.write(json.dumps({"v": i}) + "\n")
@@ -776,8 +809,10 @@ def test_suggest_stream_partitions_scales_with_input(spark, tmp_path):
 
 
 def test_stream_shuffle_scope_restores_session_conf(spark, tmp_path):
-    """run_to_completion's source_dir override must apply while the
-    query runs and restore the exact prior session value afterwards
+    """run_to_completion's source_dir override and its FileSystem
+    checkpoint manager must apply while the query runs, seen by the
+    session and by each micro-batch's session, and the exact prior
+    session values (the manager's: unset) must come back afterwards
     (ADVICE r10 #2 conf-leak rule)."""
     import json
 
@@ -785,17 +820,27 @@ def test_stream_shuffle_scope_restores_session_conf(spark, tmp_path):
     src.mkdir()
     (src / "events_0001.json").write_text(json.dumps({"v": 1}) + "\n")
     conf = "spark.sql.shuffle.partitions"
+    manager = "spark.sql.streaming.checkpointFileManagerClass"
     prior = spark.conf.get(conf)
+    assert spark.conf.get(manager, None) is None
     seen = []
 
     def record(batch_df, batch_id):
-        seen.append(spark.conf.get(conf))
+        seen.append(
+            (
+                spark.conf.get(conf),
+                spark.conf.get(manager, None),
+                batch_df.sparkSession.conf.get(manager, None),
+            )
+        )
 
     writer = spark.readStream.schema("v LONG").json(str(src)).writeStream.foreachBatch(record)
     harness.run_to_completion(writer, "shuffle_scope", "shuf", source_dir=str(src))
     want = str(harness.suggest_stream_partitions(str(src), spark))
-    assert seen and set(seen) == {want}, seen
+    fs = "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    assert seen and set(seen) == {(want, fs, fs)}, seen
     assert spark.conf.get(conf) == prior
+    assert spark.conf.get(manager, None) is None
 
 
 _CHILD_RUN = """
