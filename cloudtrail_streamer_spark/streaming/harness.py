@@ -20,8 +20,11 @@ package that starts a streaming query (AvailableNow, awaited through
 :func:`await_or_raise`); :func:`run_stream_to_memory` and every operator
 call it. Checkpoint rule: a query started without a checkpoint gets a
 fresh one that is removed when the query ends; a checkpoint passed in
-belongs to the caller. Fixtures, spools and outputs come from
-``catalog.temp_dir`` and are removed at interpreter exit.
+belongs to the caller. Partition rule: the runner alone sets a stream's
+shuffle/state-partition count, from the source directories in the
+writer's plan (see :func:`run_to_completion`). Fixtures, spools and
+outputs come from ``catalog.temp_dir`` and are removed at interpreter
+exit.
 """
 
 from __future__ import annotations
@@ -173,35 +176,60 @@ def await_or_raise(q, name: str, timeout_sec: float) -> None:
         )
 
 
-def suggest_stream_partitions(source_dir: str, spark: SparkSession) -> int:
-    """Scale-adaptive state-partition count for a file-replay stream
-    (r11, guide §2: partitioning must adapt to input size, not inherit
-    a constant tuned for either local mode or the cluster).
+def suggest_stream_partitions(dirs: list[str], spark: SparkSession) -> int:
+    """Scale-adaptive state-partition count for a stream reading ``dirs``
+    (guide §2: partitioning must adapt to input size, not inherit a
+    constant tuned for either local mode or the cluster).
 
     A stateful streaming query's shuffle-partition count is locked in at
     the first checkpoint, and EVERY micro-batch pays one state-store
     load+commit per partition per stateful operator — with RocksDB that
-    is a native store open, changelog write and sync each time. With
-    ``maxFilesPerTrigger=1`` a batch processes one source file, so the
-    right partition count follows per-BATCH volume: one partition per
-    ~32 MB of the largest source file, floored at 4 (local parallelism),
+    is a native store open, changelog write and sync each time. A replay
+    batch reads one source file (or a few spool files), so the right
+    count follows per-BATCH volume: one partition per ~32 MB of the
+    largest file over all ``dirs``, floored at 4 (local parallelism),
     capped at the session's configured value (never raise above the
     cluster sizing). Local replay fixtures (~100 KB/day gz) derive 4,
     cutting the per-batch commit constant 8x (measured:
     stream_stream_join sf0.01 gate 105 s -> see OPTIMIZATION_r11.md);
     a production 1 GB-per-delivery feed derives 32+, and a real cluster
-    keeps its configured ceiling."""
+    keeps its configured ceiling. An empty ``dirs`` or an unlistable
+    directory gives the session value."""
     session_val = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    if not dirs:
+        return session_val
     try:
         sizes = [
-            os.path.getsize(os.path.join(source_dir, f))
-            for f in os.listdir(source_dir)
-            if os.path.isfile(os.path.join(source_dir, f))
+            os.path.getsize(path)
+            for d in dirs
+            for path in (os.path.join(d, f) for f in os.listdir(d))
+            if os.path.isfile(path)
         ]
-        biggest = max(sizes) if sizes else 0
     except OSError:
         return session_val
-    return max(4, min(-(-biggest // (32 * 1024 * 1024)), session_val))
+    return max(4, min(-(-max(sizes, default=0) // (32 * 1024 * 1024)), session_val))
+
+
+def _stream_dirs(writer) -> list[str]:
+    """The directories a stream reads: the ``path`` option of each
+    streaming leaf of the writer's analyzed plan — a file source keeps
+    it in ``dataSource().options()``, a Python DataSource stream in
+    ``extraOptions()``. A self-join lists its one directory once."""
+    leaves = writer._df._jdf.queryExecution().analyzed().collectLeaves()
+    dirs = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.nodeName()
+        if kind == "StreamingRelation":
+            path = leaf.dataSource().options().get("path")
+            path = path.get() if path.isDefined() else None
+        elif kind == "StreamingRelationV2":
+            path = leaf.extraOptions().get("path")
+        else:
+            continue
+        if path is not None:
+            dirs.add(path)
+    return sorted(dirs)
 
 
 def _unload_state_stores(spark: SparkSession) -> None:
@@ -225,7 +253,6 @@ def run_to_completion(
     tag: str,
     *,
     checkpoint: str | None = None,
-    source_dir: str | None = None,
     timeout_sec: float = 600.0,
 ):
     """Start ``writer`` (a configured ``DataStreamWriter``) as an
@@ -236,10 +263,16 @@ def run_to_completion(
     that is removed however the query ends, after the JVM's state stores
     are released. A checkpoint passed in belongs to the caller and is
     kept (restart loops, state readers, lakehouse tables).
-    ``source_dir``: the replay-file directory feeding the stream; the
-    query then runs with :func:`suggest_stream_partitions` shuffle
-    partitions inside a ``conf_scope``, so the session value comes back
-    afterwards. None leaves the session's setting untouched.
+
+    Partition rule: this is the one place that decides a stream's
+    shuffle/state-partition count. The source directories come from the
+    writer's plan (:func:`_stream_dirs`), and the query runs on
+    :func:`suggest_stream_partitions` of them; a stream without one (a
+    generator or ``rate``) keeps the session value. Results are
+    partition-count independent: every declared output is an aggregate,
+    a watermark or a batch count. A restart of a caller's checkpoint
+    keeps the count its first run recorded (Spark restores it from the
+    offset log).
 
     Every query runs on Spark's ``FileSystemBasedCheckpointFileManager``
     (set in the same ``conf_scope``). Each micro-batch makes three small
@@ -252,12 +285,15 @@ def run_to_completion(
     the overwrite in one rename; with one writer per checkpoint both are
     equally safe, and Spark allows one active run per checkpoint in a
     process. Every checkpoint here is fresh from ``catalog.temp_dir`` or
-    owned by its one caller."""
+    owned by its one caller. Both confs are set in one ``conf_scope``,
+    so the prior session values come back after the query ends."""
     spark = writer._spark
-    confs = {_CHECKPOINT_MANAGER_CONF: _FILESYSTEM_CHECKPOINT_MANAGER}
-    if source_dir is not None:
-        partitions = suggest_stream_partitions(source_dir, spark)
-        confs["spark.sql.shuffle.partitions"] = str(partitions)
+    confs = {
+        _CHECKPOINT_MANAGER_CONF: _FILESYSTEM_CHECKPOINT_MANAGER,
+        "spark.sql.shuffle.partitions": str(
+            suggest_stream_partitions(_stream_dirs(writer), spark)
+        ),
+    }
     ckpt = temp_dir(f"cts_ckpt_{tag}_") if checkpoint is None else checkpoint
     try:
         with conf_scope(spark, confs):
@@ -285,10 +321,10 @@ def run_stream_to_memory(
     output_mode: str = "append",
     return_progress: bool = False,
     timeout_sec: float = 600.0,
-    source_dir: str | None = None,
 ) -> DataFrame | tuple[DataFrame, dict]:
     """Run a streaming DataFrame to completion (AvailableNow) into a
-    memory sink; return the sink contents as a batch DataFrame.
+    memory sink through :func:`run_to_completion`, which also sets its
+    partition count; return the sink contents as a batch DataFrame.
 
     With ``return_progress=True`` also returns a bounded-state
     certificate summarized from the query's progress events (the same
@@ -297,14 +333,6 @@ def run_stream_to_memory(
     watermark, and the batch count. Stateful R-tier ops attach these as
     constant columns so the driver's rows-only record PROVES state
     stayed bounded, instead of only asserting values were right.
-
-    ``source_dir``: the replay-file directory feeding the stream, when
-    the caller has one — enables the scale-adaptive state-partition
-    derivation (:func:`suggest_stream_partitions`). None leaves the
-    session's shuffle-partition setting untouched. Every conf is set
-    through ``conf_scope``, so the prior session values come back after
-    the query terminates; results are partition-count independent (all
-    declared outputs are aggregates, watermarks or batch counts).
 
     State backend: RocksDB keeps streaming state on local disk instead
     of executor heap — at 100 TB a session-window or stream-stream-join
@@ -322,7 +350,7 @@ def run_stream_to_memory(
     spark = stream_df.sparkSession
     writer = stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     with conf_scope(spark, {_PROVIDER_CONF: _ROCKSDB, _CHANGELOG_CONF: "true"}):
-        q = run_to_completion(writer, name, name, source_dir=source_dir, timeout_sec=timeout_sec)
+        q = run_to_completion(writer, name, name, timeout_sec=timeout_sec)
     out = spark.table(name)
     return (out, _summarize_progress(q)) if return_progress else out
 

@@ -42,15 +42,12 @@ def source_stream_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the oracle's batch GROUP BY — a dropped file, a re-read, or
     a watermark bug is a driver hash mismatch (also asserted in
     tests/test_streaming.py)."""
-    replay = harness.write_replay_files(spark, sf_dir)
-    stream = harness.read_replay_stream(spark, replay)
+    stream = harness.read_replay_stream(spark, harness.write_replay_files(spark, sf_dir))
     import uuid
 
     name = f"src_files_{uuid.uuid4().hex[:8]}"
     counts = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    return harness.run_stream_to_memory(
-        counts, name, output_mode="complete", source_dir=replay
-    )
+    return harness.run_stream_to_memory(counts, name, output_mode="complete")
 
 
 # Kinesis consumer record shape: the spool rows carry (pk, data); the
@@ -96,9 +93,7 @@ def source_kinesis_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     spool = deliver_events_to_spool(spark, sf_dir)
     counts = delivered_counts(read_kinesis_stream(spark, spool))
     name = f"src_kinesis_{uuid.uuid4().hex[:8]}"
-    return harness.run_stream_to_memory(
-        counts, name, output_mode="complete", source_dir=spool
-    )
+    return harness.run_stream_to_memory(counts, name, output_mode="complete")
 
 
 _JSON_GZ_ORACLE = """
@@ -276,8 +271,7 @@ def source_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     against that oracle."""
     import uuid
 
-    replay = harness.write_replay_files(spark, sf_dir)
-    stream = harness.read_replay_stream(spark, replay)
+    stream = harness.read_replay_stream(spark, harness.write_replay_files(spark, sf_dir))
     agg = stream.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     ckpt = temp_dir("cts_ckpt_statereader_")
     writer = (
@@ -285,9 +279,7 @@ def source_state_store_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         .queryName(f"state_reader_{uuid.uuid4().hex[:8]}")
         .outputMode("update")
     )
-    harness.run_to_completion(
-        writer, "source_state_store_reader", "statereader", checkpoint=ckpt, source_dir=replay
-    )
+    harness.run_to_completion(writer, "source_state_store_reader", "statereader", checkpoint=ckpt)
 
     meta = spark.read.format("state-metadata").load(ckpt)
     stateful_ops = meta.select("operatorId", "stateStoreName").collect()

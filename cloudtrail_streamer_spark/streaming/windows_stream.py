@@ -206,9 +206,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("w.start").alias("window_start"), "n")
     )
     name = f"wm_late_{uuid.uuid4().hex[:8]}"
-    accepted = harness.run_stream_to_memory(
-        agg, name, output_mode="append", source_dir=replay
-    )
+    accepted = harness.run_stream_to_memory(agg, name, output_mode="append")
     emitted = accepted.groupBy("window_start").agg(
         F.sum("n").cast("long").alias("n_emitted")
     )
@@ -279,9 +277,7 @@ def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["event_id"]
     )
     name = f"dedup_{uuid.uuid4().hex[:8]}"
-    out = harness.run_stream_to_memory(
-        deduped, name, output_mode="append", source_dir=replay
-    )
+    out = harness.run_stream_to_memory(deduped, name, output_mode="append")
     day = F.datediff(F.col("ts"), F.lit("2024-01-01").cast("timestamp")).cast("long")
     delivered = out.groupBy(
         "event_type", day.alias("day")
@@ -328,13 +324,12 @@ def stream_agg_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch equalities, so the full output hash-matches a DuckDB oracle
     computed straight from the events table.
     """
-    replay = harness.write_replay_files(spark, sf_dir)
-    stream = harness.read_replay_stream(spark, replay)
+    stream = harness.read_replay_stream(spark, harness.write_replay_files(spark, sf_dir))
     agg = stream.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n"), dsum("value", "total_value")
     )
     name = f"upd_{uuid.uuid4().hex[:8]}"
-    harness.run_stream_to_memory(agg, name, output_mode="update", source_dir=replay)
+    harness.run_stream_to_memory(agg, name, output_mode="update")
     updates = stream.sparkSession.table(name)
     # Memory sink in update mode appends each update; final state per
     # user = the row with the max n (counts grow monotonically).
@@ -383,8 +378,7 @@ def stream_upsert_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from cloudtrail_streamer_spark.functions import cents
 
-    replay = harness.write_replay_files(spark, sf_dir)
-    stream = harness.read_replay_stream(spark, replay)
+    stream = harness.read_replay_stream(spark, harness.write_replay_files(spark, sf_dir))
     base = temp_dir("cts_upsert_")
     current: dict[str, str | None] = {"path": None}
 
@@ -404,7 +398,7 @@ def stream_upsert_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
         current["path"] = new_path  # the "commit": atomic pointer swap
 
     writer = stream.writeStream.foreachBatch(upsert)
-    harness.run_to_completion(writer, "stream_upsert_keyed", "upsert", source_dir=replay)
+    harness.run_to_completion(writer, "stream_upsert_keyed", "upsert")
     return spark.read.parquet(current["path"]).select(
         "user_id",
         F.col("n").cast("long").alias("n"),
@@ -462,8 +456,7 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     backend fails the driver row rather than weakening the hash."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    replay = harness.write_replay_files(spark, sf_dir)
-    stream = harness.read_replay_stream(spark, replay)
+    stream = harness.read_replay_stream(spark, harness.write_replay_files(spark, sf_dir))
     updates = (
         stream.select("user_id", "value")
         .groupBy("user_id")
@@ -477,7 +470,7 @@ def stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"custom_state_{uuid.uuid4().hex[:8]}"
     out, prog = harness.run_stream_to_memory(
-        updates, name, output_mode="update", return_progress=True, source_dir=replay
+        updates, name, output_mode="update", return_progress=True
     )
     if prog["state_bytes_peak"] <= 0:
         raise AssertionError(
@@ -547,8 +540,6 @@ def _ss_join_run(spark: SparkSession, sf_dir: str):
     watermark lag vs source max ts)."""
     from cloudtrail_streamer_spark.streaming import harness
 
-    replay = harness.write_replay_files(spark, sf_dir)
-
     def sides(df):
         clicks = (
             df.where(F.col("event_type") == "click")
@@ -577,14 +568,11 @@ def _ss_join_run(spark: SparkSession, sf_dir: str):
             "p_user", "purchase_id", "click_id"
         )
 
-    stream = harness.read_replay_stream(spark, replay)
+    stream = harness.read_replay_stream(spark, harness.write_replay_files(spark, sf_dir))
     import uuid
 
     joined, prog = harness.run_stream_to_memory(
-        sides(stream),
-        f"ss_join_{uuid.uuid4().hex[:8]}",
-        return_progress=True,
-        source_dir=replay,
+        sides(stream), f"ss_join_{uuid.uuid4().hex[:8]}", return_progress=True
     )
     # watermark lag vs the source's max event time: a healthy run ends
     # with lag ≈ the 2 h watermark delay; a stuck watermark (unbounded
@@ -793,8 +781,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     — so the query stays green everywhere while the TWS plumbing
     (processor class, typed state cell, API wiring) remains real and
     construction-tested (tests/test_streaming.py)."""
-    replay = harness.write_replay_files(spark, sf_dir)
-    stream = harness.read_replay_stream(spark, replay)
+    stream = harness.read_replay_stream(spark, harness.write_replay_files(spark, sf_dir))
     keyed = stream.select("user_id", "value").groupBy("user_id")
     try:
         from google.protobuf import descriptor  # noqa: F401
@@ -825,9 +812,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     name = f"tws_state_{uuid.uuid4().hex[:8]}"
-    out = harness.run_stream_to_memory(
-        updates, name, output_mode="update", source_dir=replay
-    )
+    out = harness.run_stream_to_memory(updates, name, output_mode="update")
     w_latest = F.row_number().over(
         Window.partitionBy("user_id").orderBy(F.col("n").desc())
     )

@@ -44,14 +44,30 @@ def test_stream_files_equals_batch(spark):
 
 
 def test_stream_tumbling_batch_equivalence(spark):
-    """The SAME transformation fn over batch vs stream inputs agrees."""
-    replay = harness.write_replay_files(spark, SF)
-    stream_in = harness.read_replay_stream(spark, replay)
-    streamed = harness.run_stream_to_memory(
-        tumbling_counts(stream_in), "tumb_eq", output_mode="complete"
-    )
+    """The SAME transformation fn over batch vs stream inputs agrees,
+    and (A-11 analog) a listener attached to that one replay sees every
+    micro-batch with its row count and a throughput figure."""
+    import time
+
+    listener = harness.BatchMetricsListener()
+    spark.streams.addListener(listener)
+    try:
+        replay = harness.write_replay_files(spark, SF)
+        stream_in = harness.read_replay_stream(spark, replay)
+        streamed = harness.run_stream_to_memory(
+            tumbling_counts(stream_in), "tumb_eq", output_mode="complete"
+        )
+        deadline = time.time() + 30
+        while time.time() < deadline and sum(
+            b["num_input_rows"] for b in listener.batches
+        ) < _events_count(spark):
+            time.sleep(0.5)  # listener events arrive on a background thread
+    finally:
+        spark.streams.removeListener(listener)
     batch = tumbling_counts(table(spark, SF, "events"))
     assert sorted(streamed.collect()) == sorted(batch.collect())
+    assert sum(b["num_input_rows"] for b in listener.batches) == _events_count(spark)
+    assert any(b["processed_rows_per_sec"] > 0 for b in listener.batches)
 
 
 def test_watermark_drops_late(spark):
@@ -280,30 +296,6 @@ def test_sns_dispatch_delivers_all(spark):
     assert got == _events_by_type(spark)
 
 
-def test_listener_captures_batch_metrics(spark):
-    """A-11 analog: the listener sees every micro-batch with its row
-    count and a throughput figure."""
-    import time
-
-    listener = harness.BatchMetricsListener()
-    spark.streams.addListener(listener)
-    try:
-        replay = harness.write_replay_files(spark, SF)
-        stream_in = harness.read_replay_stream(spark, replay)
-        harness.run_stream_to_memory(
-            tumbling_counts(stream_in), "tumb_metrics", output_mode="complete"
-        )
-        deadline = time.time() + 30
-        while time.time() < deadline and sum(
-            b["num_input_rows"] for b in listener.batches
-        ) < _events_count(spark):
-            time.sleep(0.5)  # listener events arrive on a background thread
-    finally:
-        spark.streams.removeListener(listener)
-    assert sum(b["num_input_rows"] for b in listener.batches) == _events_count(spark)
-    assert any(b["processed_rows_per_sec"] > 0 for b in listener.batches)
-
-
 def test_stream_stream_join_equals_batch(spark):
     """Dual-watermarked stream-stream inner join over AvailableNow
     replay must equal the batch range join exactly."""
@@ -450,18 +442,15 @@ def test_custom_datasource_stream_writer_roundtrip(spark, tmp_path):
     replay = harness.write_replay_files(spark, SF)
     out_spool = str(tmp_path / "spool")
     events = harness.read_replay_stream(spark, replay)
-    q = (
+    writer = (
         events.select(
             F.col("user_id").cast("string").alias("pk"),
             F.to_json(F.struct(*events.columns)).alias("data"),
         )
         .writeStream.format("kinesis_spool")
         .option("path", out_spool)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
     )
-    harness.await_or_raise(q, "dswt_spool", 600.0)
+    harness.run_to_completion(writer, "dswt_spool", "dswt")
     back = (
         spark.read.format("kinesis_spool").option("path", out_spool).load()
     ).select(F.get_json_object("data", "$.event_id").cast("long").alias("event_id"))
@@ -562,17 +551,8 @@ def test_cascade_foreachbatch_equivalence(spark):
         for r in batch_df.collect():
             state[(r["user_id"], r["w"]["start"])] = r["n"]
 
-    q = (
-        daily_user_counts(stream_in)
-        .writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
-    )
-    # await_or_raise, not a bare awaitTermination: under full-suite
-    # load the 120 s wait returned False and the test read PARTIAL
-    # upsert state (observed r10) - the exact harness hazard class
-    harness.await_or_raise(q, "cascade_upsert", 600.0)
+    writer = daily_user_counts(stream_in).writeStream.outputMode("update").foreachBatch(upsert)
+    harness.run_to_completion(writer, "cascade_upsert", "cascade")
     lvl1 = spark.createDataFrame(
         [(n,) for n in state.values()], "n long"
     )
@@ -789,7 +769,9 @@ def test_runtime_commit_error_propagates_not_retried(spark, monkeypatch, tmp_pat
 def test_suggest_stream_partitions_scales_with_input(spark, tmp_path):
     """r11 scale-adaptive state partitioning: the derivation must follow
     per-batch input volume — floor 4 for tiny replay files, ~1 per 32 MB
-    for big ones, never above the session's configured value."""
+    for big ones, never above the session's configured value; over
+    several directories the largest file decides, and no directory
+    keeps the session value."""
     from cloudtrail_streamer_spark.streaming.harness import (
         suggest_stream_partitions,
     )
@@ -799,26 +781,57 @@ def test_suggest_stream_partitions_scales_with_input(spark, tmp_path):
     tiny = tmp_path / "tiny"
     tiny.mkdir()
     (tiny / "events_0001.json.gz").write_bytes(b"x" * 1024)
-    assert suggest_stream_partitions(str(tiny), spark) == min(4, session_val)
+    assert suggest_stream_partitions([str(tiny)], spark) == min(4, session_val)
 
     big = tmp_path / "big"
     big.mkdir()
     with open(big / "events_0001.json", "wb") as f:
         f.truncate(200 * 1024 * 1024)  # sparse 200 MB -> ceil(200/32) = 7
-    assert suggest_stream_partitions(str(big), spark) == min(7, session_val)
+    assert suggest_stream_partitions([str(big)], spark) == min(7, session_val)
+    assert suggest_stream_partitions([str(tiny), str(big)], spark) == min(7, session_val)
+    assert suggest_stream_partitions([], spark) == session_val
 
 
-def test_stream_shuffle_scope_restores_session_conf(spark, tmp_path):
-    """run_to_completion's source_dir override and its FileSystem
-    checkpoint manager must apply while the query runs, seen by the
-    session and by each micro-batch's session, and the exact prior
-    session values (the manager's: unset) must come back afterwards
-    (ADVICE r10 #2 conf-leak rule)."""
+def _json_stream(spark, src):
     import json
 
-    src = tmp_path / "replay"
-    src.mkdir()
     (src / "events_0001.json").write_text(json.dumps({"v": 1}) + "\n")
+    return spark.readStream.schema("v LONG").json(str(src))
+
+
+def _spool_stream(spark, src):
+    import json
+
+    from cloudtrail_streamer_spark.streaming.spool_source import register
+
+    (src / "call_00000.jsonl").write_text(json.dumps({"pk": "1", "data": "x"}) + "\n")
+    register(spark)
+    return spark.readStream.format("kinesis_spool").option("path", str(src)).load()
+
+
+def _generator_stream(spark, src):
+    from cloudtrail_streamer_spark.operators.datasource_py import CloudTrailGenDataSource
+
+    spark.dataSource.register(CloudTrailGenDataSource)
+    return spark.readStream.format("cloudtrail_gen").option("n_events", 10).load()
+
+
+@pytest.mark.parametrize(
+    "make_stream, reads_dir",
+    [(_json_stream, True), (_spool_stream, True), (_generator_stream, False)],
+    ids=["json_files", "kinesis_spool", "cloudtrail_gen"],
+)
+def test_stream_shuffle_scope_restores_session_conf(spark, tmp_path, make_stream, reads_dir):
+    """run_to_completion's partition rule and its FileSystem checkpoint
+    manager must apply while the query runs, seen by the session and by
+    each micro-batch's session, and the exact prior session values (the
+    manager's: unset) must come back afterwards (ADVICE r10 #2
+    conf-leak rule). The count comes from the stream's own source
+    directory, found in its plan; a generator stream has none and
+    keeps the session value."""
+    src = tmp_path / "source"
+    src.mkdir()
+    stream = make_stream(spark, src)
     conf = "spark.sql.shuffle.partitions"
     manager = "spark.sql.streaming.checkpointFileManagerClass"
     prior = spark.conf.get(conf)
@@ -829,16 +842,16 @@ def test_stream_shuffle_scope_restores_session_conf(spark, tmp_path):
         seen.append(
             (
                 spark.conf.get(conf),
+                batch_df.sparkSession.conf.get(conf),
                 spark.conf.get(manager, None),
                 batch_df.sparkSession.conf.get(manager, None),
             )
         )
 
-    writer = spark.readStream.schema("v LONG").json(str(src)).writeStream.foreachBatch(record)
-    harness.run_to_completion(writer, "shuffle_scope", "shuf", source_dir=str(src))
-    want = str(harness.suggest_stream_partitions(str(src), spark))
+    harness.run_to_completion(stream.writeStream.foreachBatch(record), "shuffle_scope", "shuf")
+    want = str(harness.suggest_stream_partitions([str(src)], spark)) if reads_dir else prior
     fs = "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
-    assert seen and set(seen) == {(want, fs, fs)}, seen
+    assert seen and set(seen) == {(want, want, fs, fs)}, seen
     assert spark.conf.get(conf) == prior
     assert spark.conf.get(manager, None) is None
 
