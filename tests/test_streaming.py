@@ -43,10 +43,11 @@ def test_stream_files_equals_batch(spark):
     assert sorted(out.collect()) == sorted(batch.collect())
 
 
-def test_stream_tumbling_batch_equivalence(spark):
-    """The SAME transformation fn over batch vs stream inputs agrees,
-    and (A-11 analog) a listener attached to that one replay sees every
-    micro-batch with its row count and a throughput figure."""
+@pytest.fixture(scope="module")
+def tumbling_replay(spark):
+    """One tumbling replay, with a BatchMetricsListener attached, shared by
+    the batch-equivalence test and the listener test: (streamed rows,
+    listener batches)."""
     import time
 
     listener = harness.BatchMetricsListener()
@@ -64,10 +65,22 @@ def test_stream_tumbling_batch_equivalence(spark):
             time.sleep(0.5)  # listener events arrive on a background thread
     finally:
         spark.streams.removeListener(listener)
+    return streamed.collect(), list(listener.batches)
+
+
+def test_stream_tumbling_batch_equivalence(spark, tumbling_replay):
+    """The SAME transformation fn over batch vs stream inputs agrees."""
+    streamed, _ = tumbling_replay
     batch = tumbling_counts(table(spark, SF, "events"))
-    assert sorted(streamed.collect()) == sorted(batch.collect())
-    assert sum(b["num_input_rows"] for b in listener.batches) == _events_count(spark)
-    assert any(b["processed_rows_per_sec"] > 0 for b in listener.batches)
+    assert sorted(streamed) == sorted(batch.collect())
+
+
+def test_listener_captures_batch_metrics(spark, tumbling_replay):
+    """A-11 analog: the listener sees every micro-batch of that same
+    replay with its row count and a throughput figure."""
+    _, batches = tumbling_replay
+    assert sum(b["num_input_rows"] for b in batches) == _events_count(spark)
+    assert any(b["processed_rows_per_sec"] > 0 for b in batches)
 
 
 def test_watermark_drops_late(spark):
