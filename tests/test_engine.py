@@ -464,29 +464,167 @@ def test_lsh_recall_certificate(spark):
     assert row["recall"] >= 0.9, f"banded hyperplane LSH recall too low: {row}"
 
 
-def test_certification_window_is_changed_then_oldest():
-    """The driver certifies the first 50 registry entries. Every query in
-    the changed-implementation list must be registered and inside that
-    window; the rest of the window must be the least recently certified
-    queries per the committed CORRECTNESS_r*.json records."""
+def _fresh(R, name: str) -> bool:
+    """Whether ``name``'s CERTIFIED.json stamp matches its fingerprint."""
+    stamp = R._stamps().get(name, {})
+    return stamp.get("fingerprint") == R._fingerprint(R._REGISTRY[name].fn.__module__)
+
+
+def test_certification_window_is_stale_then_oldest():
+    """The driver certifies the first 50 registry entries. Every query
+    whose code changed since its CERTIFIED.json stamp (or that has none)
+    must come ahead of every stamped, unchanged query; the rest of the
+    window must be the least recently certified; every stamped name must
+    be registered."""
     import cloudtrail_streamer_spark.registry as R
 
     names = list(R.all_queries())
-    window = names[:50]
-    unknown = [n for n in R._CHANGED if n not in R._REGISTRY]
-    assert not unknown, f"changed names not registered: {unknown}"
-    assert len(set(R._CHANGED)) == len(R._CHANGED), "duplicate changed entries"
-    assert not set(R._CHANGED) - set(window), "changed queries outside the window"
-    last = R._last_certified()
-    assert last, "no CORRECTNESS_r*.json records found next to the package"
-    rest = [n for n in window if n not in R._CHANGED]
-    outside = [n for n in names[50:] if n not in R._CHANGED]
-    newest_in = max(last.get(n, 0) for n in rest)
-    oldest_out = min(last.get(n, 0) for n in outside)
-    assert newest_in <= oldest_out, (
-        f"window holds a round-{newest_in} certificate while a "
-        f"round-{oldest_out} one waits outside"
+    stamps = R._stamps()
+    assert stamps, "no CERTIFIED.json next to the package"
+    unknown = sorted(set(stamps) - set(R._REGISTRY))
+    assert not unknown, f"stamped names not registered: {unknown}"
+    fresh = [_fresh(R, n) for n in names]
+    assert fresh == sorted(fresh), "a changed query sits behind an unchanged one"
+    rest = [n for n in names[:50] if _fresh(R, n)]
+    outside = [n for n in names[50:] if _fresh(R, n)]
+    if rest and outside:
+        newest_in = max(stamps[n]["round"] for n in rest)
+        oldest_out = min(stamps[n]["round"] for n in outside)
+        assert newest_in <= oldest_out, (
+            f"window holds a round-{newest_in} certificate while a "
+            f"round-{oldest_out} one waits outside"
+        )
+
+
+def test_helper_edit_flips_exactly_its_dependents(tmp_path):
+    """An edit to functions/skew.py must change the fingerprint of exactly
+    the joins.py queries, which reach it through an import inside a
+    function, and of no other query."""
+    import ast
+    import glob
+    import os
+    import shutil
+
+    import cloudtrail_streamer_spark.registry as R
+
+    pkg = os.path.join(R._ROOT, R._PKG)
+    shutil.copytree(pkg, tmp_path / R._PKG, ignore=shutil.ignore_patterns("__pycache__"))
+    with open(tmp_path / R._PKG / "functions" / "skew.py", "a") as fh:
+        fh.write("\n# edited\n")
+    specs = R.all_specs()
+    mods = {n: s.fn.__module__ for n, s in specs.items()}
+    flipped = {n for n, m in mods.items() if R._fingerprint(m) != R._fingerprint(m, str(tmp_path))}
+    joins = {n for n, m in mods.items() if m == f"{R._PKG}.operators.joins"}
+    assert len(joins) == 17 and flipped == joins, sorted(flipped ^ joins)
+    # the walk reads absolute imports only, so the package must use no other kind
+    relative = [
+        path
+        for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+        for node in ast.walk(ast.parse(open(path).read()))
+        if isinstance(node, ast.ImportFrom) and node.level
+    ]
+    assert not relative, f"relative imports escape every fingerprint: {relative}"
+
+
+def _unstamped_records(root: str) -> list[str]:
+    """CORRECTNESS_r<N>.json records under ``root`` newer than the newest
+    round stamped in its CERTIFIED.json."""
+    import glob
+    import os
+    import re
+
+    import cloudtrail_streamer_spark.registry as R
+
+    newest = max((s["round"] for s in R._stamps(root).values()), default=0)
+    records = glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
+    return sorted(
+        os.path.basename(p) for p in records if int(re.search(r"_r(\d+)", p).group(1)) > newest
     )
+
+
+def test_every_driver_round_is_stamped(tmp_path):
+    """A driver round's record must be followed by its stamp
+    (tools/stamp_certified.py); an unstamped round would leave the window
+    ordered by certificates that are out of date."""
+    import json
+
+    import cloudtrail_streamer_spark.registry as R
+
+    assert _unstamped_records(R._ROOT) == []
+    (tmp_path / "CERTIFIED.json").write_text(json.dumps({"q": {"round": 12, "fingerprint": None}}))
+    for rnd in (11, 12, 13):
+        (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text("{}")
+    assert _unstamped_records(str(tmp_path)) == ["CORRECTNESS_r13.json"]
+
+
+def test_stamp_tool_stamps_certified_rows_at_the_record_commit(tmp_path):
+    """The stamp tool gives each certified row of a committed driver record
+    its round and the fingerprint of the tree at that commit, leaves
+    failed rows alone, and refuses a record that is not committed or whose
+    commit also edits the package."""
+    import json
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    import cloudtrail_streamer_spark.registry as R
+
+    ign = shutil.ignore_patterns("__pycache__")
+    shutil.copytree(os.path.join(R._ROOT, R._PKG), tmp_path / R._PKG, ignore=ign)
+    (tmp_path / "tools").mkdir()
+    shutil.copy(os.path.join(R._ROOT, "tools", "stamp_certified.py"), tmp_path / "tools")
+    shutil.copy(os.path.join(R._ROOT, "CERTIFIED.json"), tmp_path)
+    record = {
+        "agg_group_q1": {"err": None, "hash_match": True},
+        "scan_pruned": {"err": None, "hash_match": False},
+        "udtf_arrow": {"err": "no_oracle"},
+    }
+    tool = [sys.executable, "tools/stamp_certified.py", "CORRECTNESS_r99.json"]
+    git = ["git", "-c", "user.name=t", "-c", "user.email=t@t", "-C", str(tmp_path)]
+    subprocess.run(git + ["init", "-q"], check=True)
+    subprocess.run(git + ["add", "-A"], check=True)
+    subprocess.run(git + ["commit", "-qm", "tree"], check=True)
+    (tmp_path / "CORRECTNESS_r99.json").write_text(json.dumps(record))
+    refused = subprocess.run(tool, cwd=tmp_path, capture_output=True, text=True)
+    assert refused.returncode != 0 and "first, on its own" in refused.stderr
+    subprocess.run(git + ["add", "-A"], check=True)
+    subprocess.run(git + ["commit", "-qm", "round 99"], check=True)
+    # a record committed with a package edit is refused; that edit, made
+    # after round 99's commit, must not leak into round 99's stamps
+    with open(tmp_path / R._PKG / "operators" / "udfs.py", "a") as fh:
+        fh.write("\n# edited after the round\n")
+    (tmp_path / "CORRECTNESS_r100.json").write_text(json.dumps(record))
+    subprocess.run(git + ["add", "-A"], check=True)
+    subprocess.run(git + ["commit", "-qm", "round 100 with an edit"], check=True)
+    tool_100 = tool[:-1] + ["CORRECTNESS_r100.json"]
+    refused = subprocess.run(tool_100, cwd=tmp_path, capture_output=True, text=True)
+    assert refused.returncode != 0 and f"no {R._PKG}/ edits" in refused.stderr
+    assert json.loads((tmp_path / "CERTIFIED.json").read_text()) == R._stamps()
+    subprocess.run(tool, cwd=tmp_path, check=True, capture_output=True)
+    before, after = R._stamps(), json.loads((tmp_path / "CERTIFIED.json").read_text())
+    specs = R.all_specs()
+    for name in ("agg_group_q1", "udtf_arrow"):
+        fp = R._fingerprint(specs[name].fn.__module__)
+        assert after[name] == {"round": 99, "fingerprint": fp}, name
+    assert after["scan_pruned"] == before["scan_pruned"]
+    assert len(after) == len(before)
+
+
+def test_drive_entry_flags_parse_in_any_order():
+    """drive_entry's --skip/--first/--shard parse the same in any order;
+    a bad shard is a usage error before any session starts."""
+    import pytest
+
+    from tools.drive_entry import parse_args
+
+    a = parse_args(["--shard", "1/4", "--first", "50"])
+    assert vars(a) == vars(parse_args(["--first", "50", "--shard", "1/4"]))
+    assert (a.first, a.shard, a.names) == (50, (1, 4), [])
+    b = parse_args(["--skip", "x,y", "/sf", "q1", "q2"])
+    assert (b.skip, b.sf_dir, b.names) == ("x,y", "/sf", ["q1", "q2"])
+    with pytest.raises(SystemExit):
+        parse_args(["--shard", "5/4"])
 
 
 def test_nation_key_memo_tracks_region_file(tmp_path):

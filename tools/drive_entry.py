@@ -2,11 +2,14 @@
 
 Fresh process, driver-owned plain SparkSession (no engine confs), every
 queries()[name] at sf0.01 compared against oracle_sql()[name] in DuckDB.
-Usage: python tools/drive_entry.py [sf_dir]
+Usage: python tools/drive_entry.py [--skip a,b] [--first N] [--shard K/N]
+                                   [sf_dir] [query_name ...]
+(flags in any order).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -19,48 +22,41 @@ from pyspark.sql import SparkSession
 from tests.conftest import assert_frames_match, register_duckdb_views
 
 
-def main() -> int:
-    """Usage: drive_entry.py [--shard K/N] [sf_dir] [query_name ...]
+def _shard(text: str) -> tuple[int, int]:
+    k, _, n = text.partition("/")
+    if not (k.isdigit() and n.isdigit() and 1 <= int(k) <= int(n)):
+        raise argparse.ArgumentTypeError(f"need K/N with 1 <= K <= N, got {text!r}")
+    return int(k), int(n)
 
-    With query names, checks only those (fast iteration on a changed
-    op); the no-args form is the full registry gate (277 queries at r5). ``--shard K/N``
+
+def parse_args(argv: list[str]) -> argparse.Namespace:
+    """The flags, in any order, then ``[sf_dir] [query_name ...]``."""
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--skip", default="", help="comma-separated query names to leave out")
+    # Simulate the external driver's exact protocol: the FIRST N registry
+    # entries (the certification window), run in registry order in ONE
+    # process — the strictest local replica of the per-round capture,
+    # including any cross-query session-state interactions (conf
+    # windows, scratch reuse) in driver order.
+    ap.add_argument("--first", type=int, default=0, metavar="N", help="first N registry entries")
+    ap.add_argument("--shard", type=_shard, default=(1, 1), metavar="K/N")
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("names", nargs="*", help="check only these queries")
+    return ap.parse_args(argv)
+
+
+def main() -> int:
+    """With query names, checks only those (fast iteration on a changed
+    op); the no-args form is the full registry gate. ``--shard K/N``
     (K in 1..N) keeps only every N-th query of the sorted name order
     starting at K-1, so N processes can split the full gate and run it
-    in ~1/N wall-clock (judge note, VERDICT r04 #4):
+    in ~1/N wall-clock:
         for k in 1 2 3 4; do python tools/drive_entry.py --shard $k/4 & done
     """
-    argv = list(sys.argv[1:])
-    skip: set[str] = set()
-    if argv and argv[0] == "--skip":
-        if len(argv) < 2:
-            print("--skip needs a comma-separated name list")
-            return 2
-        skip = set(argv[1].split(","))
-        argv = argv[2:]
-    first_n = 0
-    if argv and argv[0] == "--first":
-        # Simulate the external driver's exact protocol: the FIRST N
-        # registry entries (the certification window), run in registry
-        # order in ONE process — the strictest local replica of the
-        # per-round capture, including any cross-query session-state
-        # interactions (conf windows, scratch reuse) in driver order.
-        if len(argv) < 2 or not argv[1].isdigit():
-            print("--first needs a count, e.g. --first 50")
-            return 2
-        first_n = int(argv[1])
-        argv = argv[2:]
-    shard_k, shard_n = 1, 1
-    if argv and argv[0] == "--shard":
-        if len(argv) < 2 or "/" not in argv[1]:
-            print("--shard needs K/N, e.g. --shard 2/4")
-            return 2
-        shard_k, shard_n = (int(x) for x in argv[1].split("/", 1))
-        if not (shard_n >= 1 and 1 <= shard_k <= shard_n):
-            print(f"bad shard {shard_k}/{shard_n}: need 1 <= K <= N")
-            return 2
-        argv = argv[2:]
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    subset = set(argv[1:])
+    args = parse_args(sys.argv[1:])
+    skip = set(filter(None, args.skip.split(",")))
+    shard_k, shard_n = args.shard
+    first_n, sf_dir, subset = args.first, args.sf_dir, set(args.names)
     # Driver-protocol default: a PLAIN session (1 g heap, no engine
     # confs). CTS_DRIVER_MEM exists for cross-scale STRESS drives only
     # (sf1 = 100x the gate scale on the same heap is an under-provision
