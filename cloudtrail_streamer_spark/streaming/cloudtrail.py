@@ -40,12 +40,14 @@ from cloudtrail_streamer_spark.streaming.sinks import (
     DELIVERED_COUNTS_ORACLE,
     delivered_counts,
     deliver_stream,
+    read_spool,
 )
 
 ENVELOPE_SCHEMA = "STRUCT<Records: ARRAY<STRING>>"
-# SNS notification envelope (A-3): the S3/CloudTrail body rides inside
-# the JSON-string ``Message`` field.
-SNS_SCHEMA = "STRUCT<Type: STRING, Message: STRING>"
+# Either body a log line can hold: an SNS notification envelope (A-3),
+# whose S3/CloudTrail body rides inside the JSON-string ``Message``
+# field, or that body itself (``Records``).
+DISPATCH_SCHEMA = "STRUCT<Type: STRING, Message: STRING, Records: ARRAY<STRING>>"
 
 
 def _envelope_bodies(spark: SparkSession, sf_dir: str, files: int) -> DataFrame:
@@ -108,44 +110,41 @@ def write_cloudtrail_files(
     return out
 
 
-def unwrap_records(raw: DataFrame) -> DataFrame:
-    """A-7: envelope parse + Records[] unwrap. Records emerge as opaque
-    JSON strings (fidelity mode) with a parsed struct alongside
-    (analytics mode)."""
-    rec = F.explode(
-        F.from_json(F.col("value"), ENVELOPE_SCHEMA).getField("Records")
-    ).alias("record")
+def dispatch_unwrap(raw: DataFrame) -> DataFrame:
+    """A-2 + A-3 + A-7: per-body envelope sniff, SNS unwrap and Records[]
+    unwrap. Records emerge as opaque JSON strings (fidelity mode) with a
+    parsed struct alongside (analytics mode).
+
+    Each body is parsed once, against ``DISPATCH_SCHEMA``. One with
+    ``Type == "Notification"`` is an SNS fan-out delivery: the real
+    payload is the JSON string in ``Message``, parsed once more for its
+    ``Records`` (upstream SNSHandler, ``main.go:~230-260`` approx).
+    Anything else is an S3-direct body whose own ``Records`` are used
+    (``main.go:~265-300`` approx). A body or ``Message`` that is not JSON
+    yields no records. The parse has its own projection, so the
+    optimizer cannot split it into one parse per field it reads.
+    Dispatch is column-level ``from_json``/``when`` and costs no
+    shuffle."""
+    env = raw.select(F.from_json(F.col("value"), DISPATCH_SCHEMA).alias("env"))
+    records = F.when(
+        F.col("env.Type") == F.lit("Notification"),
+        F.from_json(F.col("env.Message"), ENVELOPE_SCHEMA).getField("Records"),
+    ).otherwise(F.col("env.Records"))
     parsed = F.from_json(
         F.col("record"),
         "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, "
         "value DOUBLE, props STRING",
     ).alias("parsed")
-    return raw.select(rec).select("record", parsed)
-
-
-def dispatch_unwrap(raw: DataFrame) -> DataFrame:
-    """A-2 + A-3: per-record envelope sniff and SNS unwrap, then the
-    common A-7 Records[] unwrap.
-
-    A body whose parse against SNS_SCHEMA yields ``Type ==
-    "Notification"`` is an SNS fan-out delivery — the real payload is
-    the JSON string in ``Message`` (upstream SNSHandler,
-    ``main.go:~230-260`` approx). Anything else is an S3-direct body and
-    passes through unchanged (``main.go:~265-300`` approx). Pure
-    column-level ``from_json``/``when`` — dispatch costs no shuffle and
-    stays in whole-stage codegen."""
-    sns = F.from_json(F.col("value"), SNS_SCHEMA)
-    body = F.when(
-        sns.getField("Type") == F.lit("Notification"), sns.getField("Message")
-    ).otherwise(F.col("value"))
-    return unwrap_records(raw.select(body.alias("value")))
+    return env.select(F.explode(records).alias("record")).select("record", parsed)
 
 
 def _run_pipeline(spark: SparkSession, logs_dir: str) -> DataFrame:
     """Shared A-4..A-10 tail: stream the log files, dispatch/unwrap,
     deliver through the executor-side chunked retrying Kinesis writer
-    (``sinks.deliver_stream``), read the spool back and count per
-    event_type.
+    (``sinks.deliver_stream``), and return the per-event_type counts of
+    the spool, read back lazily with its declared schema
+    (``sinks.read_spool``). Building that frame runs no Spark job once
+    the stream has ended; the caller's collect runs the readback.
 
     The dispatch/unwrap/key plan is built once, on the streaming
     DataFrame, so each micro-batch arrives already keyed and only runs
@@ -162,7 +161,7 @@ def _run_pipeline(spark: SparkSession, logs_dir: str) -> DataFrame:
         F.col("record").alias("data"),
     )
     spool = deliver_stream(keyed, "ct", "cloudtrail_pipeline_e2e")
-    return delivered_counts(spark.read.json(spool))
+    return delivered_counts(read_spool(spark, spool))
 
 
 @query("cloudtrail_pipeline_e2e", oracle=DELIVERED_COUNTS_ORACLE, survey_id="A-2..A-10")

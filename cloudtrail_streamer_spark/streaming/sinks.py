@@ -17,6 +17,8 @@ Every stub-Kinesis query delivers through ONE core, all in this module:
   batch and streaming writers (spool_source.py) all call it.
 - ``deliver_stream`` — a keyed stream run through
   ``foreachBatch(deliver_partitions)`` to completion; returns the spool.
+- ``read_spool`` — the one batch reader of a spool, with the declared
+  ``SPOOL_RECORD_SCHEMA``, so no readback pays a schema-inference pass.
 - ``delivered_counts`` plus ``DELIVERED_COUNTS_ORACLE`` — the per-type
   readback every delivery certificate compares with the source.
 
@@ -58,6 +60,9 @@ MAX_BATCH_RECORDS = 500
 MAX_BATCH_BYTES = 5 * 1024 * 1024
 MAX_RECORD_BYTES = 1024 * 1024
 STREAM_NAME = "cloudtrail-stream"
+# The spool line format ``KinesisStubClient.put_records`` writes, as a
+# schema: every reader of a spool, batch or streaming, declares it.
+SPOOL_RECORD_SCHEMA = "pk string, data string"
 
 
 class KinesisStubClient:
@@ -167,6 +172,14 @@ def send_rows(rows, client: KinesisStubClient, stream_name: str) -> int:
     )
 
 
+def read_spool(spark: SparkSession, path: str) -> DataFrame:
+    """The spool at ``path`` as ``(pk, data)`` rows, one per delivered
+    record. The schema is declared, so the read starts no job of its own
+    (inference would scan every spool file once more), and a spool with
+    no call files reads as zero rows."""
+    return spark.read.schema(SPOOL_RECORD_SCHEMA).json(path)
+
+
 def deliver_partitions(keyed: DataFrame, spool_dir: str, stream_name: str, batch_id: int) -> None:
     """Executor-side Kinesis delivery (A-8..A-10 at cluster scale).
 
@@ -263,7 +276,7 @@ def sink_foreachbatch_kinesis(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type counts hash-compare against the source counts the oracle
     owns, so a dropped chunk, double delivery, or retry bug is a driver
     hash mismatch — the delivered-count certificate pattern."""
-    return delivered_counts(spark.read.json(deliver_events_to_spool(spark, sf_dir)))
+    return delivered_counts(read_spool(spark, deliver_events_to_spool(spark, sf_dir)))
 
 
 _IDEMPOTENT_ORACLE = """
@@ -353,7 +366,7 @@ def sink_fanout_dual(spark: SparkSession, sf_dir: str) -> DataFrame:
     harness.run_to_completion(stream.writeStream.foreachBatch(fanout), "sink_fanout_dual", "fan")
 
     n_parquet = spark.read.parquet(lake).count()
-    n_spool = spark.read.json(spool).count()
+    n_spool = read_spool(spark, spool).count()
     src = table(spark, sf_dir, "events").agg(
         F.count(F.lit(1)).cast("long").alias("n_source")
     )

@@ -19,6 +19,7 @@ from cloudtrail_streamer_spark.registry import query
 from cloudtrail_streamer_spark.streaming import harness
 from cloudtrail_streamer_spark.streaming.sinks import (
     DELIVERED_COUNTS_ORACLE,
+    SPOOL_RECORD_SCHEMA,
     delivered_counts,
     deliver_events_to_spool,
 )
@@ -50,10 +51,6 @@ def source_stream_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     return harness.run_stream_to_memory(counts, name, output_mode="complete")
 
 
-# Kinesis consumer record shape: the spool rows carry (pk, data); the
-# consumer adds shard routing. A real connector swap changes only the
-# readStream format string, not this schema or anything downstream.
-KINESIS_RECORD_SCHEMA = "pk string, data string"
 N_SHARDS = 4
 
 
@@ -69,9 +66,12 @@ def read_kinesis_stream(
     all records of one partition key land in one shard, in spool order —
     Kinesis' per-key ordering guarantee. Incremental consumption (the
     GetRecords loop analog) comes from the file source's listing
-    checkpoint + maxFilesPerTrigger."""
+    checkpoint + maxFilesPerTrigger. The records carry the spool's
+    ``(pk, data)`` schema and the consumer adds shard routing; a real
+    connector swap changes only the readStream format string, not this
+    schema or anything downstream."""
     raw = (
-        spark.readStream.schema(KINESIS_RECORD_SCHEMA)
+        spark.readStream.schema(SPOOL_RECORD_SCHEMA)
         .option("maxFilesPerTrigger", 8)
         .json(spool_dir)
     )

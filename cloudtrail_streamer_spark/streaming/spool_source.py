@@ -50,6 +50,7 @@ from cloudtrail_streamer_spark.registry import query
 from cloudtrail_streamer_spark.streaming import harness
 from cloudtrail_streamer_spark.streaming.sinks import (
     DELIVERED_COUNTS_ORACLE,
+    SPOOL_RECORD_SCHEMA,
     STREAM_NAME,
     KinesisStubClient,
     delivered_counts,
@@ -58,7 +59,7 @@ from cloudtrail_streamer_spark.streaming.sinks import (
     send_rows,
 )
 
-SPOOL_SCHEMA = "pk string, data string, shard_id int"
+SPOOL_SCHEMA = SPOOL_RECORD_SCHEMA + ", shard_id int"
 
 
 class _ShardPartition(InputPartition):

@@ -627,6 +627,42 @@ def test_drive_entry_flags_parse_in_any_order():
         parse_args(["--shard", "5/4"])
 
 
+def test_drive_entry_first_takes_registry_order_within_a_shard():
+    """--shard cuts its members from the sorted names, so shards stay
+    stable; --first then takes the first N of them in registry order."""
+    from tools.drive_entry import select
+
+    registry = ["q09", "q05", "q01", "q12", "q08", "q04"]
+    registry += ["q11", "q03", "q07", "q02", "q10", "q06"]
+    # shard 1/4 of the sorted names: q01, q05, q09
+    assert select(registry, set(), set(), (1, 4), 3) == ["q09", "q05", "q01"]
+    assert select(registry, set(), set(), (1, 4), 0) == ["q01", "q05", "q09"]
+    assert select(registry, set(), set(), (1, 1), 2) == ["q09", "q05"]
+    # the shard is cut after --skip: without q05 it is q01, q06, q10
+    assert select(registry, set(), {"q05"}, (1, 4), 2) == ["q01", "q10"]
+    assert select(registry, {"q12", "q03", "q07"}, set(), (1, 1), 2) == ["q12", "q03"]
+
+
+def test_every_json_read_declares_its_schema():
+    """No package module reads JSON with ``.read.json(``: Spark would run
+    a schema-inference job over every file before the read itself. A
+    spool goes through ``sinks.read_spool``; other reads pass
+    ``.schema(...)`` first."""
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(root, "cloudtrail_streamer_spark")
+    found = []
+    for dirpath, _, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(dirpath, f)) as fh:
+                    if re.search(r"\.read\s*\.\s*json\(", fh.read()):
+                        found.append(f)
+    assert found == []
+
+
 def test_nation_key_memo_tracks_region_file(tmp_path):
     """The region-to-nationkeys memo also derives from region.parquet, so
     rewriting only that file must change the answer, not serve the

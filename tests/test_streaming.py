@@ -5,6 +5,8 @@ stateful dedup, update-mode final state, sink delivery parity.
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -271,6 +273,99 @@ def test_run_pipeline_removes_its_checkpoint(spark, monkeypatch):
     ckpts = [p for p in made if os.path.basename(p).startswith("cts_ckpt_ct_")]
     assert len(ckpts) == 1, made
     assert not os.path.exists(ckpts[0]), "the finished checkpoint must be removed"
+    got = {r["event_type"]: r["n"] for r in out.collect()}
+    assert got == _events_by_type(spark)
+
+
+# One body of each shape dispatch_unwrap sees: S3-direct, SNS-wrapped,
+# a line that is not JSON, and an SNS envelope whose Message is not JSON.
+_MIXED_FEED = [
+    json.dumps(
+        {
+            "Records": [
+                {"event_id": 1, "ts": "2024-01-01T00:00:00", "user_id": 7, "event_type": "click"},
+                {"event_id": 2, "user_id": 8, "value": 1.5, "props": "a"},
+            ]
+        }
+    ),
+    json.dumps(
+        {
+            "Type": "Notification",
+            "Message": json.dumps({"Records": [{"event_id": 3, "event_type": "view"}]}),
+        }
+    ),
+    "not json",
+    json.dumps({"Type": "Notification", "Message": '{"Records": ['}),
+]
+
+
+def test_dispatch_unwrap_parses_each_body_once(spark):
+    """The optimized dispatch plan parses the raw body once: the SNS
+    sniff is not split into one parse per field it reads."""
+    import re
+
+    from cloudtrail_streamer_spark.streaming.cloudtrail import dispatch_unwrap
+
+    raw = spark.createDataFrame([(v,) for v in _MIXED_FEED], "value string")
+    plan = dispatch_unwrap(raw)._jdf.queryExecution().optimizedPlan().toString()
+    # a from_json prints as from_json(<fields>, <child>, <time zone>, ...)
+    assert len(re.findall(r"\bvalue#\d+, Some\(", plan)) == 1, plan
+
+
+def test_dispatch_unwrap_equals_two_pass_formula(spark):
+    """One parse per body gives the same rows as sniffing the SNS
+    envelope and then parsing the chosen body again, on every shape."""
+    from cloudtrail_streamer_spark.streaming.cloudtrail import ENVELOPE_SCHEMA, dispatch_unwrap
+
+    raw = spark.createDataFrame([(v,) for v in _MIXED_FEED], "value string")
+    sns = F.from_json("value", "STRUCT<Type: STRING, Message: STRING>")
+    body = F.when(sns.getField("Type") == "Notification", sns.getField("Message")).otherwise(
+        F.col("value")
+    )
+    record = F.explode(F.from_json(body, ENVELOPE_SCHEMA).getField("Records")).alias("record")
+    out = dispatch_unwrap(raw)
+    parsed_type = out.schema["parsed"].dataType.simpleString()
+    want = raw.select(record).select("record", F.from_json("record", parsed_type).alias("parsed"))
+    got = out.collect()
+    assert sorted(got) == sorted(want.collect())
+    assert sorted(r["parsed"]["event_id"] for r in got) == [1, 2, 3]
+
+
+def test_read_spool_of_empty_spool(spark, tmp_path):
+    """A spool with no call files reads as zero rows of the declared
+    schema (inference would raise)."""
+    from cloudtrail_streamer_spark.streaming.sinks import SPOOL_RECORD_SCHEMA, read_spool
+
+    empty = read_spool(spark, str(tmp_path))
+    assert empty.schema == spark.createDataFrame([], SPOOL_RECORD_SCHEMA).schema
+    assert empty.count() == 0
+
+
+def test_run_pipeline_result_builds_without_a_job(spark, monkeypatch):
+    """Once the delivery stream has ended, building _run_pipeline's result
+    runs no Spark job: the spool is read with its declared schema, so the
+    only readback job is the caller's collect."""
+    from cloudtrail_streamer_spark.streaming import cloudtrail
+
+    sc = spark.sparkContext
+    group = "readback-after-stream"
+    real = cloudtrail.deliver_stream
+
+    def then_tag(*args):
+        spool = real(*args)
+        sc.setJobGroup(group, "jobs after the stream ended")
+        return spool
+
+    monkeypatch.setattr(cloudtrail, "deliver_stream", then_tag)
+    logs = cloudtrail.write_cloudtrail_files(spark, SF, files=2)
+    try:
+        out = cloudtrail._run_pipeline(spark, logs)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == []
     got = {r["event_type"]: r["n"] for r in out.collect()}
     assert got == _events_by_type(spark)
 

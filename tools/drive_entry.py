@@ -45,6 +45,25 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     return ap.parse_args(argv)
 
 
+def select(
+    names: list[str], subset: set[str], skip: set[str], shard: tuple[int, int], first: int
+) -> list[str]:
+    """The queries to run, in run order, from ``names`` in registry order.
+
+    ``subset`` (when given) and ``skip`` filter first. ``shard`` K/N then
+    keeps every N-th of the remaining names in sorted order, starting at
+    K-1, so a shard holds the same queries whatever the registry order.
+    The kept names stay in registry order, and ``first`` takes the first
+    N of them, to be run in that order (the driver's). Without ``first``
+    the run is sorted by name."""
+    kept = [n for n in names if (not subset or n in subset) and n not in skip]
+    k, n = shard
+    if n > 1:
+        member = set(sorted(kept)[k - 1 :: n])
+        kept = [q for q in kept if q in member]
+    return kept[:first] if first else sorted(kept)
+
+
 def main() -> int:
     """With query names, checks only those (fast iteration on a changed
     op); the no-args form is the full registry gate. ``--shard K/N``
@@ -86,32 +105,25 @@ def main() -> int:
         return 2
 
     qs, oracles = e.queries(), e.oracle_sql()
-    if subset:
-        unknown = subset - set(qs)
-        if unknown:
-            print(f"unknown query names: {sorted(unknown)}")
-            return 2
-        qs = {n: qs[n] for n in subset}
+    unknown = subset - set(qs)
+    if unknown:
+        print(f"unknown query names: {sorted(unknown)}")
+        return 2
     if skip:
-        qs = {n: f for n, f in qs.items() if n not in skip}
-        print(f"skipping {sorted(skip & set(oracles) | skip)}")
+        print(f"skipping {sorted(skip)}")
+    names = select(list(qs), subset, skip, args.shard, first_n)
     if shard_n > 1:
-        names = sorted(qs)
-        qs = {n: qs[n] for i, n in enumerate(names) if i % shard_n == shard_k - 1}
-        print(f"shard {shard_k}/{shard_n}: {len(qs)}/{len(names)} queries")
+        print(f"shard {shard_k}/{shard_n}: {len(names)} queries")
     if first_n:
-        qs = {n: qs[n] for n in list(qs)[:first_n]}
-        print(f"first {len(qs)} registry entries, driver order")
+        print(f"first {len(names)} registry entries, driver order")
     con = duckdb.connect()
     register_duckdb_views(con, sf_dir)
     failed = []
-    # --first preserves registry order (the driver's); otherwise sorted
-    items = list(qs.items()) if first_n else sorted(qs.items())
-    for name, fn in items:
+    for name in names:
         import time
 
         t0 = time.perf_counter()
-        sdf = fn(spark, sf_dir).toPandas()
+        sdf = qs[name](spark, sf_dir).toPandas()
         t_spark = time.perf_counter() - t0
         # op-local persists otherwise accumulate across ~250 queries in
         # this long-lived session (ADVICE r03: memory pressure + LRU churn)
@@ -136,7 +148,7 @@ def main() -> int:
         except AssertionError as exc:
             failed.append(name)
             print(f"{name:32s} FAIL: {exc}", flush=True)
-    print(f"\n{len(qs) - len(failed)}/{len(qs)} queries OK")
+    print(f"\n{len(names) - len(failed)}/{len(names)} queries OK")
     return 1 if failed else 0
 
 
