@@ -27,6 +27,7 @@ import os
 import statistics
 import sys
 import time
+from functools import partial
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
@@ -102,6 +103,17 @@ LLM_SF10 = {
     "embed_covariance_matrix": "covariance_sf10",
 }
 
+# The registered ops `--scaling` times: the Q1 hash aggregate,
+# tokenize + count, the brute-force cosine scan, the cross-document
+# shingle windows and the covariance Gram kernel.
+SCALING_QUERIES = [
+    "agg_group_q1",
+    "text_tokenize_wordcount",
+    "sim_search_topk",
+    "text_crossdoc_substring",
+    "embed_covariance_matrix",
+]
+
 # The scaling decades as data, keyed by the SPARK_GRAFT_<key>=0 switch
 # that skips them. Each row is one timed cell, (label, dir, queries,
 # runs), run in table order on both engines; dir names a sibling of the
@@ -133,19 +145,34 @@ def _on(switch: str) -> bool:
     return os.environ.get(f"SPARK_GRAFT_{switch}", "1") != "0"
 
 
+def best_of(action, runs: int, reset=None) -> float:
+    """Min wall-clock seconds over ``runs`` timed calls of ``action``;
+    ``reset``, when given, runs untimed before each call. Min, not mean:
+    the host runs a periodic external harness whose CPU spikes can
+    inflate any single run 10-30x. Warm-up is the caller's: run
+    ``action`` once untimed first."""
+    best = float("inf")
+    for _ in range(runs):
+        if reset is not None:
+            reset()
+        t0 = time.perf_counter()
+        action()
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
+def noop(df) -> None:
+    """Materialize ``df`` fully through the noop sink (no driver collect)."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 def probe_floor(spark, runs: int = 2) -> float:
     """Min wall-clock of a 1-row noop action — the per-run scheduling
     floor. Re-probed BETWEEN headline queries (r11 VERDICT #1: the host
     runs a periodic external harness whose load bursts inflated 7 tail
     cells 3-4x in the r11 driver run; a floor probe taken next to each
     measurement makes a contaminated cell machine-readable)."""
-    df = spark.range(1)
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return best
+    return best_of(partial(noop, spark.range(1)), runs)
 
 
 def time_spark(
@@ -153,25 +180,17 @@ def time_spark(
 ) -> dict[str, float]:
     """Min-of-N hot wall-clock per headline query, full materialization
     via the noop sink (no driver collect). Each query runs once untimed
-    first so plan analysis + whole-stage-codegen compile are amortized —
-    min, not mean, because the host runs a periodic external harness
-    whose CPU spikes can inflate any single run 10-30×."""
+    first so plan analysis + whole-stage-codegen compile are amortized."""
     out: dict[str, float] = {}
     for name in names or HEADLINE:
         df = queries[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()  # warm: plan + codegen
-        best = float("inf")
-        for _ in range(runs):
-            # Drop op-local persisted subtrees so every timed run pays the
-            # true single-execution cost (materialize + reuse), not a
-            # cached re-read — DuckDB recomputes fully each run, so this
-            # keeps the comparison honest (ADVICE r03). Also stops cache
-            # accumulation across the 14 headline queries.
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 3)
+        noop(df)  # warm: plan + codegen
+        # Drop op-local persisted subtrees before every timed run so each
+        # pays the true single-execution cost (materialize + reuse), not
+        # a cached re-read — DuckDB recomputes fully each run, so this
+        # keeps the comparison honest (ADVICE r03). Also stops cache
+        # accumulation across the 14 headline queries.
+        out[name] = round(best_of(partial(noop, df), runs, spark.catalog.clearCache), 3)
     return out
 
 
@@ -189,50 +208,25 @@ def time_spark_batched(spark, queries, sf_dir: str) -> float:
 
     dfs = [queries[name](spark, sf_dir) for name in HEADLINE]
     for df in dfs:  # warm: plan + codegen, same protocol as time_spark
-        df.write.format("noop").mode("overwrite").save()
-
-    def run_one(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    best = float("inf")
+        noop(df)
     with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-        for _ in range(N_RUNS):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            list(pool.map(run_one, dfs))
-            best = min(best, time.perf_counter() - t0)
+        best = best_of(lambda: list(pool.map(noop, dfs)), N_RUNS, spark.catalog.clearCache)
     return round(best, 3)
 
 
-def _duckdb_views(sf_dir: str):
-    """A DuckDB connection with one view per table file in ``sf_dir``
-    (partial bench dirs: sf10 builds only what it times); None when
-    DuckDB is not installed."""
-    try:
-        import duckdb
-    except ImportError:
-        return None
-    from cloudtrail_streamer_spark.catalog import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        if os.path.isfile(os.path.join(sf_dir, f"{t}.parquet")):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-            )
-    return con
-
-
-def time_duckdb_batched(oracles, sf_dir: str) -> float | None:
+def time_duckdb_batched(oracles, sf_dir: str) -> float:
     """The identical multi-query protocol for DuckDB: one connection per
     headline oracle query (DuckDB parallelizes within AND across
     connections), all submitted at once, wall-clock to last finish."""
     from concurrent.futures import ThreadPoolExecutor
 
-    names = [n for n in HEADLINE if n in oracles]
-    pairs = [(_duckdb_views(sf_dir), name) for name in names]
-    if not pairs or pairs[0][0] is None:
-        return None
+    import duckdb
+
+    from tests.conftest import register_duckdb_views
+
+    pairs = [(duckdb.connect(), name) for name in HEADLINE if name in oracles]
+    for con, _ in pairs:
+        register_duckdb_views(con, sf_dir)
 
     def run_one(args) -> None:
         con, name = args
@@ -240,12 +234,8 @@ def time_duckdb_batched(oracles, sf_dir: str) -> float | None:
 
     for p in pairs:  # warm
         run_one(p)
-    best = float("inf")
     with ThreadPoolExecutor(max_workers=len(pairs)) as pool:
-        for _ in range(N_RUNS):
-            t0 = time.perf_counter()
-            list(pool.map(run_one, pairs))
-            best = min(best, time.perf_counter() - t0)
+        best = best_of(lambda: list(pool.map(run_one, pairs)), N_RUNS)
     for con, _ in pairs:
         con.close()
     return round(best, 3)
@@ -255,20 +245,19 @@ def time_duckdb(
     oracles, sf_dir: str, names: list[str] | None = None, runs: int = N_RUNS
 ) -> dict[str, float]:
     """Same warm + min-of-N protocol for the DuckDB oracle SQL."""
+    import duckdb
+
+    from tests.conftest import register_duckdb_views
+
     out: dict[str, float] = {}
-    con = _duckdb_views(sf_dir)
-    if con is None:
-        return out
+    con = duckdb.connect()
+    register_duckdb_views(con, sf_dir)
     for name in names or HEADLINE:
         if name not in oracles:
             continue
-        con.execute(oracles[name]).fetchall()  # warm (same protocol)
-        best = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            con.execute(oracles[name]).fetchall()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 3)
+        sql = oracles[name]
+        con.execute(sql).fetchall()  # warm (same protocol)
+        out[name] = round(best_of(lambda: con.execute(sql).fetchall(), runs), 3)
     con.close()
     return out
 
@@ -334,19 +323,15 @@ def floor_mode() -> None:
     t_hi: dict[str, float] = {}
     for name in HEADLINE:
         dfs = {}
-        for sf_dir, out in ((lo_dir, t_lo), (hi_dir, t_hi)):
-            df = queries[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()  # warm
-            dfs[sf_dir] = df
-        t_lo[name] = t_hi[name] = float("inf")
+        for sf_dir in (lo_dir, hi_dir):
+            dfs[sf_dir] = queries[name](spark, sf_dir)
+            noop(dfs[sf_dir])  # warm
+        runs: dict[str, list[float]] = {lo_dir: [], hi_dir: []}
         for _ in range(N_RUNS):
-            for sf_dir, out in ((lo_dir, t_lo), (hi_dir, t_hi)):
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                dfs[sf_dir].write.format("noop").mode("overwrite").save()
-                out[name] = min(out[name], time.perf_counter() - t0)
-        t_lo[name] = round(t_lo[name], 3)
-        t_hi[name] = round(t_hi[name], 3)
+            for sf_dir, df in dfs.items():
+                runs[sf_dir].append(best_of(partial(noop, df), 1, spark.catalog.clearCache))
+        t_lo[name] = round(min(runs[lo_dir]), 3)
+        t_hi[name] = round(min(runs[hi_dir]), 3)
     rows = {}
     for n in HEADLINE:
         # linear fit through (0.01, t_lo) and (0.1, t_hi):
@@ -517,11 +502,7 @@ def main() -> None:
     # (measured: 14 concurrent connections are 3-6x SLOWER than the
     # sequential sum at any per-connection thread cap), so its
     # multi-query number is min(concurrent wall, sequential sum).
-    duck_concurrent = time_duckdb_batched(oracles, sf_dir)
-    duck_seq_total = round(sum(duck_times.values()), 3)
-    duck_batched = (
-        duck_seq_total if duck_concurrent is None else min(duck_concurrent, duck_seq_total)
-    )
+    duck_batched = min(time_duckdb_batched(oracles, sf_dir), round(sum(duck_times.values()), 3))
     ratio = {n: round(spark_times[n] / t, 2) for n, t in duck_times.items() if t > 0}
 
     # The scaling decades: the same protocol at every sibling sf (the
@@ -645,124 +626,51 @@ def main() -> None:
     print(line)
 
 
+def scaling_cell() -> None:
+    """One ``--scaling`` cell, run in its own process: the
+    SCALING_QUERIES at sf1 on a fresh ``get_session`` of
+    $SPARK_GRAFT_CPUS cores, warm + min-of-3 through ``time_spark``,
+    printed as one JSON line."""
+    from cloudtrail_streamer_spark.registry import all_queries
+    from cloudtrail_streamer_spark.session import get_session
+    from tools.make_sf1 import ensure_sf1
+
+    spark = get_session("cts-bench-scaling")
+    print(json.dumps(time_spark(spark, all_queries(), ensure_sf1(), SCALING_QUERIES, runs=3)))
+
+
 def scaling_mode() -> None:
-    """``bench.py --scaling``: strong-scaling curve on local[1]/[8]/[32].
+    """``bench.py --scaling``: strong-scaling curve of the registered
+    SCALING_QUERIES on 1, 8 and all host cores.
 
     The headline queries at sf0.1 are ~90% per-action scheduling floor
-    (see --floor), so they cannot show parallel speedup — instead this
-    times the same OPERATOR SHAPES on replicated input big enough to be
-    compute-bound (lineitem ×16 ≈ 10M rows for the Q1 hash-agg shape;
-    documents ×8 for the tokenize+count shape; a 100-probe brute-force
-    cosine scan for the similarity shape). One fresh JVM per core
-    count, warm + min-of-3 inside each. Prints one JSON line with the
-    1→32-core speedup per shape — the local-mode audit that the plans
-    are data-parallel, which is what transfers to executors at 100 TB.
-    """
+    (see --floor), so they cannot show parallel speedup; this times the
+    compute-heavy registered ops at sf1 (tools/make_sf1.py), one fresh
+    JVM per core count. Prints one JSON line with each query's seconds
+    per core count and its speedup from 1 core to the largest count —
+    the local-mode audit that the plans are data-parallel, which is what
+    transfers to executors at 100 TB. sf1's 10 row groups per file cap
+    a scan stage at 10 tasks."""
     import subprocess
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    counts = sorted({1, 8, os.cpu_count() or 1})
     results: dict[str, dict[str, float]] = {}
-    for cores in (1, 8, 32):
-        code = f"""
-import json, sys, time, functools
-sys.path.insert(0, {ROOT!r})
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import Window as W
-spark = (SparkSession.builder.master("local[{cores}]")
-         .config("spark.sql.shuffle.partitions", "{max(cores, 4)}")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.ui.enabled", "false")
-         .config("spark.ui.showConsoleProgress", "false")
-         .getOrCreate())
-sf = {sf_dir!r}
-li = spark.read.parquet(sf + "/lineitem.parquet")
-li16 = functools.reduce(lambda a, b: a.unionAll(b), [li] * 16)
-docs = spark.read.parquet(sf + "/documents.parquet")
-docs8 = functools.reduce(lambda a, b: a.unionAll(b), [docs] * 8)
-em = spark.read.parquet(sf + "/embeddings.parquet")
-cents = lambda c: (F.col(c) * 100 + 0.5).cast("long")
-import numpy as _np, pyarrow as _pa
-from cloudtrail_streamer_spark.operators.stats_tests import exact_int_gram as _eig
-_iu = _np.triu_indices(64)
-_schema = _pa.schema([(c, _pa.int64()) for c in ("i", "j", "n", "s_i", "s_j", "s_ij")])
-def _gram_map(batches):
-    for rb in batches:
-        if rb.num_rows == 0:
-            continue
-        x = rb.column(0).flatten().to_numpy(zero_copy_only=False).reshape(rb.num_rows, 64)
-        g = _eig(x)
-        s = x.sum(axis=0)
-        yield _pa.RecordBatch.from_arrays(
-            [_pa.array(_iu[0].astype(_np.int64)), _pa.array(_iu[1].astype(_np.int64)),
-             _pa.array(_np.full(len(_iu[0]), rb.num_rows, dtype=_np.int64)),
-             _pa.array(s[_iu[0]]), _pa.array(s[_iu[1]]), _pa.array(g[_iu])],
-            schema=_schema)
-# 32 replicas -> 32 scan splits: parallelism follows the input (the real
-# op's shape — no forced repartition; a 256 MB exchange of the scaled
-# arrays measured ~2x slower than scan-aligned kernels at 32 cores)
-em32q = functools.reduce(lambda a, b: a.unionAll(b), [em] * 32).select(
-    F.transform("embedding",
-        lambda x: F.round(x.cast("double") * 1000000.0, 0).cast("long")).alias("qe"))
-shapes = {{
-  "q1_hash_agg_10m": lambda: li16.groupBy("l_returnflag", "l_linestatus").agg(
-      F.sum(cents("l_extendedprice")).alias("s"),
-      F.sum(F.col("l_quantity").cast("long")).alias("q"),
-      F.count(F.lit(1)).alias("n")),
-  "tokenize_count_4m": lambda: docs8.select(
-      F.explode(F.split(F.lower("text"), " ")).alias("t"))
-      .groupBy("t").agg(F.count(F.lit(1)).alias("n")),
-  "cosine_scan_200k_pairs": lambda: em.repartition({max(cores, 4)}).alias("a").crossJoin(
-      F.broadcast(em.where(F.col("vec_id") < 100)).alias("b")).select(
-      F.aggregate(F.zip_with(F.col("a.embedding"), F.col("b.embedding"),
-                             lambda x, y: x.cast("double") * y.cast("double")),
-                  F.lit(0.0), lambda acc, v: acc + v).alias("dot"))
-      .agg(F.sum("dot").alias("s")),
-  "crossdoc_windows_2m": lambda: docs8.repartition({max(cores, 4)})
-      .withColumn("arr", F.split(F.lower("text"), " "))
-      .withColumn("ha", F.transform("arr", lambda t: F.xxhash64(t)))
-      .select("doc_id", F.explode(F.transform(
-          F.sequence(F.lit(0), F.greatest(F.size("ha") - 8, F.lit(0))),
-          lambda i: F.xxhash64(*[F.get("ha", i + j) for j in range(8)]))).alias("w"))
-      .select("doc_id", (F.min("doc_id").over(W.partitionBy("w"))
-                         != F.max("doc_id").over(W.partitionBy("w"))).cast("long").alias("sh"))
-      .groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"), F.sum("sh").alias("s"))
-      .agg(F.sum("n").alias("tn"), F.sum("s").alias("ts")),
-  "covariance_gram_1m6": lambda: em32q.mapInArrow(
-      _gram_map, "i long, j long, n long, s_i long, s_j long, s_ij long")
-      .groupBy("i", "j").agg(F.sum("s_ij").alias("g")),
-}}
-out = {{}}
-for name, mk in shapes.items():
-    df = mk()
-    df.write.format("noop").mode("overwrite").save()
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    out[name] = round(best, 3)
-print("SCALING_JSON:" + json.dumps(out))
-"""
+    for cores in counts:
         proc = subprocess.run(
-            [sys.executable, "-c", code], capture_output=True, text=True, timeout=900
+            [sys.executable, "-c", "import bench; bench.scaling_cell()"],
+            cwd=ROOT,
+            env={**os.environ, "SPARK_GRAFT_CPUS": str(cores)},
+            stdout=subprocess.PIPE,
+            text=True,
+            timeout=1800,
+            check=True,
         )
-        for ln in proc.stdout.splitlines():
-            if ln.startswith("SCALING_JSON:"):
-                results[str(cores)] = json.loads(ln[len("SCALING_JSON:"):])
-    speedup = {
-        q: round(results["1"][q] / results["32"][q], 2)
-        for q in results.get("1", {})
-        if results.get("32", {}).get(q)
-    }
+        results[str(cores)] = json.loads(proc.stdout.splitlines()[-1])
+    lo, hi = results[str(counts[0])], results[str(counts[-1])]
+    speedup = {q: round(lo[q] / hi[q], 2) for q in SCALING_QUERIES if hi[q] > 0}
     print(
         json.dumps(
-            {
-                "metric": "strong_scaling",
-                "sf": float(_sf_of(sf_dir)),
-                "cores": results,
-                "speedup_1_to_32": speedup,
-            }
+            {"metric": "strong_scaling", "sf": 1.0, "cores": results, "speedup_1_to_max": speedup}
         )
     )
 

@@ -236,6 +236,22 @@ class _CTGenStreamReader(SimpleDataSourceStreamReader):
         return iter(rows), {"pos": end}
 
 
+# ids the generator stream yields: 700-id chunks, so >= 3 availableNow runs
+N_STREAM_EVENTS = 2000
+
+
+def restart_until(run, done, max_runs: int = 8) -> int:
+    """Call ``run`` (one availableNow run on a shared checkpoint) until
+    ``done()`` holds, and return the number of runs. Falling short after
+    ``max_runs`` raises: a stream that stopped early must not return a
+    partial certificate."""
+    for n in range(1, max_runs + 1):
+        run()
+        if done():
+            return n
+    raise RuntimeError(f"stream incomplete after {max_runs} availableNow runs")
+
+
 _SDS_ORACLE = """
 WITH ev AS (
   SELECT r.range AS event_id,
@@ -271,28 +287,27 @@ def stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.dataSource.register(CloudTrailGenDataSource)
     ckpt = temp_dir("cts_ckpt_sds_")  # fresh stream per invocation
     sink = f"sds_out_{os.getpid()}"
-    n_total, max_cycles = 2000, 8
-    for _ in range(max_cycles):
-        writer = (
-            spark.readStream.format("cloudtrail_gen")
-            .option("n_events", n_total)
-            .option("chunk", 700)
-            .load()
-            .groupBy("event_name")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum("error_code").cast("long").alias("n_errors"),
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
+    writer = (
+        spark.readStream.format("cloudtrail_gen")
+        .option("n_events", N_STREAM_EVENTS)
+        .option("chunk", 700)
+        .load()
+        .groupBy("event_name")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("error_code").cast("long").alias("n_errors"),
         )
-        run_to_completion(
+        .writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("complete")
+    )
+    restart_until(
+        lambda: run_to_completion(
             writer, "datasource_py_stream", "sds", checkpoint=ckpt, timeout_sec=120.0
-        )
-        got = spark.sql(f"SELECT SUM(n_events) FROM {sink}").collect()[0][0] or 0
-        if got >= n_total:
-            break
+        ),
+        lambda: (spark.sql(f"SELECT SUM(n_events) FROM {sink}").first()[0] or 0)
+        >= N_STREAM_EVENTS,
+    )
     return (
         spark.table(sink)
         .select("event_name", "n_events", F.col("n_errors").cast("long").alias("n_errors"))
@@ -364,29 +379,27 @@ def sink_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = temp_dir("cts_pysw_delivery_")  # fresh stream per invocation
     ckpt = temp_dir("cts_ckpt_pysw_")
 
-    n_total, max_cycles, cycles = 2000, 8, 0
-    for _ in range(max_cycles):
-        gen = (
-            spark.readStream.format("cloudtrail_gen")
-            .option("n_events", n_total)
-            .option("chunk", 700)
-            .load()
+    gen = (
+        spark.readStream.format("cloudtrail_gen")
+        .option("n_events", N_STREAM_EVENTS)
+        .option("chunk", 700)
+        .load()
+    )
+    writer = (
+        gen.select(
+            F.col("event_id").cast("string").alias("pk"),
+            F.to_json(F.struct(*gen.columns)).alias("data"),
         )
-        writer = (
-            gen.select(
-                F.col("event_id").cast("string").alias("pk"),
-                F.to_json(F.struct(*gen.columns)).alias("data"),
-            )
-            .writeStream.format("kinesis_spool")
-            .option("path", out)
-        )
-        run_to_completion(
+        .writeStream.format("kinesis_spool")
+        .option("path", out)
+    )
+    cycles = restart_until(
+        lambda: run_to_completion(
             writer, "datasource_py_cycles", "pysw", checkpoint=ckpt, timeout_sec=120.0
-        )
-        cycles += 1
-        mans = read_manifests(out, "_EPOCH_")
-        if sum(m["n_records"] for m in mans) >= n_total:
-            break
+        ),
+        lambda: sum(m["n_records"] for m in read_manifests(out, "_EPOCH_")) >= N_STREAM_EVENTS,
+    )
+    mans = read_manifests(out, "_EPOCH_")
 
     delivered = spark.read.format("kinesis_spool").option("path", out).load()
     agg = delivered.agg(
@@ -401,7 +414,7 @@ def sink_python_stream_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
                 int(sum(m["n_records"] for m in mans)),
                 int(agg["n_delivered"]),
                 int(agg["n_distinct"]),
-                bool(agg["n_delivered"] == agg["n_distinct"] == n_total),
+                bool(agg["n_delivered"] == agg["n_distinct"] == N_STREAM_EVENTS),
                 bool(
                     max((m["max_chunk_records"] for m in mans), default=0)
                     <= KinesisStubClient.RECORD_CAP

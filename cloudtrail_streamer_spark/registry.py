@@ -54,12 +54,12 @@ class QuerySpec:
 
 
 def query(
-    name: str, *, oracle: str | None = None, survey_id: str = "", tier: str | None = None
+    name: str, *, oracle: str | None = None, survey_id: str = ""
 ) -> Callable[[QueryFn], QueryFn]:
-    """Register a query. Tier defaults to H when oracle SQL is given."""
+    """Register a query: Tier H when oracle SQL is given, else Tier R."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        t = tier or ("H" if oracle is not None else "R")
+        t = "H" if oracle is not None else "R"
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
 

@@ -84,10 +84,13 @@ def register_duckdb_views(con: duckdb.DuckDBPyConnection, sf_dir: str) -> None:
         con.execute("SET max_temp_directory_size='16GB'")
     except duckdb.Error:
         pass  # older DuckDB without the setting
+    # A bench dir may hold only the tables it times (sf10), and DuckDB
+    # refuses a view over a missing file, so absent tables get no view.
     for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+        if os.path.isfile(f"{sf_dir}/{t}.parquet"):
+            con.execute(
+                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+            )
 
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:

@@ -1549,3 +1549,98 @@ def test_one_stream_start_site_and_one_temp_dir_owner():
                         if re.search(p, src):
                             found[p].add(f)
     assert found == patterns
+
+
+def test_measurement_code_uses_the_engine_session_and_one_timing_loop():
+    """bench.py and tools/ time through the engine's own pieces: only
+    session.py (and the driver-sim, which reproduces the driver's plain
+    session) builds a SparkSession, bench.py holds no operator code, and
+    one timing helper (``bench.best_of``) holds the min-of-N loop."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    measure = [os.path.join(root, "bench.py"), *glob.glob(os.path.join(root, "tools", "*.py"))]
+    package = glob.glob(
+        os.path.join(root, "cloudtrail_streamer_spark", "**", "*.py"), recursive=True
+    )
+    builders, infs = set(), []
+    for path in measure + package:
+        with open(path) as fh:
+            src = fh.read()
+        if "SparkSession.builder" in src:
+            builders.add(os.path.relpath(path, root))
+        if path in measure:
+            infs += [os.path.relpath(path, root)] * src.count('float("inf")')
+    assert builders == {"cloudtrail_streamer_spark/session.py", "tools/drive_entry.py"}
+    assert infs == ["bench.py"]
+
+    with open(os.path.join(root, "bench.py")) as fh:
+        tree = ast.parse(fh.read())
+    imported = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            imported.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            imported.update(f"{node.module}.{a.name}" for a in node.names)
+    assert not imported & {"pyspark.sql.functions", "pyspark.sql.SparkSession"}
+
+
+def test_scaling_queries_are_registered():
+    import bench
+
+    assert len(bench.SCALING_QUERIES) == 5
+    assert set(bench.SCALING_QUERIES) <= set(all_queries())
+
+
+def test_register_duckdb_views_skips_absent_tables(tmp_path):
+    """A dir holding some of the tables gets a view for each of those and
+    no other (DuckDB refuses a view over a missing file)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tests.conftest import register_duckdb_views
+
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), tmp_path / "region.parquet")
+    pq.write_table(pa.table({"n_nationkey": [0, 1, 2]}), tmp_path / "nation.parquet")
+    con = duckdb.connect()
+    try:
+        register_duckdb_views(con, str(tmp_path))
+        views = con.execute("SELECT view_name FROM duckdb_views() WHERE NOT internal")
+        assert {r[0] for r in views.fetchall()} == {"region", "nation"}
+        assert con.execute("SELECT COUNT(*) FROM nation").fetchone()[0] == 3
+    finally:
+        con.close()
+
+
+def test_loc_counts_a_directory(tmp_path, capsys):
+    """``tools/loc.py <dir>`` counts every ``*.py`` under it, in sorted
+    order, and its total is the sum of the per-file counts."""
+    from tools import loc
+
+    (tmp_path / "sub").mkdir()
+    (tmp_path / "b.py").write_text('"""doc."""\n\nx = 1\n# note\ny = 2\n')
+    (tmp_path / "sub" / "a.py").write_text("def f():\n    return 1\n")
+    (tmp_path / "notes.txt").write_text("not python\n")
+    files = [str(tmp_path / "b.py"), str(tmp_path / "sub" / "a.py")]
+    assert loc.main([str(tmp_path)]) == 0
+    rows = capsys.readouterr().out.splitlines()
+    assert [r.split()[1] for r in rows[:-1]] == files
+    assert rows[-1].split()[0] == str(sum(loc.code_lines(f) for f in files)) == "4"
+
+
+def test_restart_until_raises_at_its_cap():
+    """The availableNow restart loop returns how many runs it took, and
+    raises, never returns a partial result, when the cap falls short."""
+    import pytest
+
+    from cloudtrail_streamer_spark.operators.datasource_py import restart_until
+
+    runs = []
+    assert restart_until(lambda: runs.append(1), lambda: len(runs) == 3) == 3
+    runs.clear()
+    with pytest.raises(RuntimeError, match="after 4 availableNow runs"):
+        restart_until(lambda: runs.append(1), lambda: False, max_runs=4)
+    assert len(runs) == 4

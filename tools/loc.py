@@ -4,16 +4,19 @@ A code line is a non-blank line that is not comment-only and lies
 outside every docstring (module, class and function) and every
 assignment to a name ending in ``_ORACLE`` (the DuckDB oracle SQL that
 travels with a query). Prints one ``<lines>  <path>`` row per file and
-a total.
+a total; a directory counts every ``*.py`` file under it.
 
 Usage::
 
     python tools/loc.py cloudtrail_streamer_spark/streaming/sinks.py ...
+    python tools/loc.py cloudtrail_streamer_spark
 """
 
 from __future__ import annotations
 
 import ast
+import glob
+import os
 import sys
 
 
@@ -48,12 +51,24 @@ def code_lines(path: str) -> int:
     )
 
 
+def _files(paths: list[str]) -> list[str]:
+    """``paths`` with each directory expanded to its ``*.py`` files,
+    recursively, in sorted order."""
+    out = []
+    for p in paths:
+        if os.path.isdir(p):
+            out += sorted(glob.glob(os.path.join(p, "**", "*.py"), recursive=True))
+        else:
+            out.append(p)
+    return out
+
+
 def main(paths: list[str]) -> int:
     if not paths:
         print(__doc__.strip(), file=sys.stderr)
         return 2
     total = 0
-    for p in paths:
+    for p in _files(paths):
         n = code_lines(p)
         total += n
         print(f"{n:6d}  {p}")

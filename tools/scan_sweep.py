@@ -28,20 +28,13 @@ import sys
 # the checkout this script lives in, so a second checkout drives its own code
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
 from cloudtrail_streamer_spark.registry import all_specs
+from cloudtrail_streamer_spark.session import get_session
 
 
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("scan-sweep")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "8")
-        .getOrCreate()
-    )
+    spark = get_session("scan-sweep")
     n_flagged = 0
     for name, spec in all_specs().items():
         try:

@@ -36,7 +36,7 @@ import json
 import os
 import re
 import sys
-import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -78,6 +78,7 @@ def build_skew_join(spark, sf_dir: str):
 
 
 def run(spark, sf_dir: str, skew_on: bool) -> tuple[float, str]:
+    from bench import best_of, noop
     from cloudtrail_streamer_spark.session import conf_scope
 
     confs = {
@@ -98,12 +99,8 @@ def run(spark, sf_dir: str, skew_on: bool) -> tuple[float, str]:
     }
     with conf_scope(spark, confs):
         df = build_skew_join(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()  # warm: plan + codegen
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
+        noop(df)  # warm: plan + codegen
+        best = best_of(partial(noop, df), 3)
         # the noop write runs its OWN QueryExecution; to read the FINAL
         # adaptive plan (isFinalPlan=true with skew markers) execute the
         # Dataset's own execution via collect — the output is <=97

@@ -19,11 +19,13 @@ import json
 import os
 import sys
 import time
+from functools import partial
 
 # the checkout this script lives in, so a second checkout times its own code
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from bench import best_of, noop
+from cloudtrail_streamer_spark.session import get_session
 
 SKIP_MODULES = (
     "streaming",  # harness replay ops: measured/optimized via the gate logs
@@ -45,15 +47,7 @@ def main() -> int:
     from cloudtrail_streamer_spark.registry import all_queries
 
     queries = all_queries()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("time_sweep")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.shuffle.partitions", "32")
-        .getOrCreate()
-    )
+    spark = get_session("time_sweep")
     spark.sparkContext.setLogLevel("ERROR")
     only = os.environ.get("SWEEP_ONLY")
     names = sorted(queries)
@@ -76,18 +70,10 @@ def main() -> int:
                     t0 = time.perf_counter()
                     df = fn(spark, sf_dir)
                     t_build = time.perf_counter() - t0
-                    t0 = time.perf_counter()
-                    df.write.format("noop").mode("overwrite").save()  # warm
-                    t_warm = time.perf_counter() - t0
-                    runs = []
-                    for _ in range(N_RUNS):
-                        t0 = time.perf_counter()
-                        df.write.format("noop").mode("overwrite").save()
-                        runs.append(time.perf_counter() - t0)
                     rec[key] = {
                         "build": round(t_build, 3),
-                        "warm": round(t_warm, 3),
-                        "exec": round(min(runs), 3),
+                        "warm": round(best_of(partial(noop, df), 1), 3),  # plan + codegen
+                        "exec": round(best_of(partial(noop, df), N_RUNS), 3),
                     }
                 except Exception as exc:  # noqa: BLE001 - probe must survive
                     rec[key] = {"err": f"{type(exc).__name__}: {exc}"[:300]}
